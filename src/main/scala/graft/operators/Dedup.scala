@@ -761,25 +761,15 @@ object Dedup {
     * relation (least of node ids), so the self-join lookup is total.
     * Returns (labels, rounds, converged) — [[ConnectedComponentsSpec]]
     * asserts the logarithmic round count on a planted 1,000-node chain.
+    * Rounds run through [[GraphLoop.until]]; the change probe is the
+    * witness.
     */
   private[operators] def propagateMinLabels(edges: DataFrame,
       maxIterations: Int,
-      checkpointDir: Option[String] = None): (DataFrame, Int, Boolean) = {
-    // materialize every round: iterative self-referencing plans double
-    // in depth per iteration otherwise (analysis-time blowup, then OOM);
-    // checkpointDir = reliable-storage backend for real clusters.
-    // WITNESS FUSION (the PageRank.iterateUntil discipline): frames
-    // materialize LAZILY and the change probe is the job that computes
-    // and persists them — one job per round instead of two.
-    val mat = Materialize.policyLazy(edges.sparkSession, checkpointDir)
-    var labels = mat(edges.select(col("s").as("id")).distinct()
-      .select(col("id"), col("id").as("cluster")))
-    // NOTE: the Scc-style decimal sum witness does NOT fit here — this
-    // loop is the type-GENERIC path (string ids included), so the change
-    // probe stays a join; it is still the round's materializing job
-    var iterating = true
-    var rounds = 0
-    while (iterating && rounds < maxIterations) {
+      checkpointDir: Option[String] = None): (DataFrame, Int, Boolean) =
+    GraphLoop.until(edges.select(col("s").as("id")).distinct()
+        .select(col("id"), col("id").as("cluster")), maxIterations,
+      Materialize.policyLazy(edges.sparkSession, checkpointDir)) { labels =>
       val viaNeighbors = edges
         .join(labels.withColumnRenamed("id", "t").withColumnRenamed("cluster", "nc"), "t")
         .groupBy(col("s").as("id"))
@@ -789,24 +779,19 @@ object Dedup {
       val viaLabel = labels.as("a")
         .join(labels.as("b"), col("a.cluster") === col("b.id"))
         .select(col("a.id").as("id"), col("b.cluster").as("lc"))
-      val next = labels.join(viaNeighbors, Seq("id"), "left")
+      labels.join(viaNeighbors, Seq("id"), "left")
         .join(viaLabel, Seq("id"), "left")
         .select(col("id"),
           least(col("cluster"), coalesce(col("nc"), col("cluster")),
             coalesce(col("lc"), col("cluster"))).as("cluster"))
-      val nextM = mat(next)
-      // the probe both answers "did anything change" and computes/persists
-      // nextM (any partition its limit short-circuits past is filled in by
-      // Spark's checkpoint completion at job end)
-      val changed = nextM.join(labels.withColumnRenamed("cluster", "old"), "id")
-        .filter(col("cluster") =!= col("old")).limit(1).count()
-      Materialize.free(labels) // dead once the change probe has read it
-      labels = nextM
-      iterating = changed > 0
-      rounds += 1
+    } { (prev, next) =>
+      // the Scc-style decimal sum witness does NOT fit here — this loop is
+      // the type-GENERIC path (string ids included), so the change probe
+      // stays a join (any partition its limit short-circuits past is
+      // filled in by Spark's checkpoint completion at job end)
+      next.join(prev.withColumnRenamed("cluster", "old"), "id")
+        .filter(col("cluster") =!= col("old")).limit(1).count() == 0
     }
-    (labels, rounds, !iterating)
-  }
 
   /** Benchmark decontamination: per-document n-gram containment against an
     * evaluation set — |shingles(doc) ∩ shingles(bench)| / |shingles(doc)|.

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.util.Using
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -27,11 +29,11 @@ import org.apache.spark.sql.functions._
   * for extreme depth, renormalize by splitting into two calls.
   *
   * Spark shape (same discipline as PageRank):
-  *  - `edges`/`nodes` computed once and cached; each half-step is one
-  *    hash join + one partial-aggregated shuffle carrying (id, score)
-  *    pairs only — never edge payloads;
-  *  - both frames materialize per round ([[Materialize]]) — the 2^T
-  *    lineage guard PageRank.scala measures;
+  *  - edges and nodes prepared once ([[GraphLoop.prepare]]); each
+  *    half-step is one hash join + one partial-aggregated shuffle carrying
+  *    (id, score) pairs only — never edge payloads;
+  *  - rounds run through [[GraphLoop.iterate]] (stride and freeing rules
+  *    there) — the 2^T lineage guard PageRank.scala measures;
   *  - scores are (id, double) pairs — 16 bytes/node/side; nodes absent
   *    from an intermediate frame are exact zeros and rejoin at the final
   *    zero-filled projection.
@@ -51,64 +53,45 @@ object Hits {
       srcCol: String = "src", dstCol: String = "dst",
       checkpointDir: Option[String] = None): DataFrame = {
     require(iters >= 1, s"hits: iters must be >= 1, got $iters")
-    val spark = edges.sparkSession
-    val mat = Materialize.policy(spark, checkpointDir)
-
-    // LAZY checkpoints: the n count below computes and persists e AND
-    // nodes in ONE job (witness fusion) instead of two eager jobs + count
-    val e = Materialize.sizedByKey(
-        edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-          .filter(col("src") =!= col("dst")).distinct(), "src")
-      .localCheckpoint(false)
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id")))
-      .distinct().localCheckpoint(false)
-    val n = nodes.count()
-    require(n > 0, "hits: empty graph")
-
-    // h_0 = all-ones; a_0 never used. Intermediate frames carry only
-    // nonzero nodes (absent row == exact 0, and 0 contributes nothing).
-    var hub = mat(nodes.select(col("id"), lit(1.0).as("score")))
-    var auth: DataFrame = null
-
-    // one half-step: raw propagation of `scores` across `e` — LAZY; the
-    // auth frame is referenced once per round (by the hub half-step), so
-    // only the full round materializes: one checkpoint job per round
-    // (measured 8.4 s → 4.6 s over the per-half-step form at sf0.01),
-    // except the final auth which feeds the output twice.
-    def halfStep(scores: DataFrame, fromCol: String, toCol: String): DataFrame =
-      scores.join(e, col("id") === col(fromCol))
-        .groupBy(col(toCol).as("id"))
-        .agg(sum(col("score")).as("score"))
-
-    for (t <- 1 to iters) {
-      val a = halfStep(hub, "src", "dst")
-      auth = if (t == iters) mat(a) else a
-      val prevHub = hub
-      hub = mat(halfStep(auth, "dst", "src"))
-      // the previous hub frame is dead once the new one is materialized
-      // (the lazy auth half-step that read it is baked into that plan)
-      Materialize.free(prevHub)
+    Using.resource(GraphLoop.prepare(edges, srcCol, dstCol, dropLoops = true,
+        checkpointDir = checkpointDir, rounds = iters)) { g =>
+      val n = g.nodes.count()
+      require(n > 0, "hits: empty graph")
+      // one half-step: raw propagation of `scores` across the edges.
+      // Intermediate frames carry only nonzero nodes (absent row == exact 0)
+      def halfStep(scores: DataFrame, fromCol: String, toCol: String): DataFrame =
+        scores.join(g.e, col("id") === col(fromCol))
+          .groupBy(col(toCol).as("id"))
+          .agg(sum(col("score")).as("score"))
+      // h_0 = all-ones. A round is two half-steps with the auth frame lazy
+      // in between (measured 8.4 s → 4.6 s over materializing each
+      // half-step at sf0.01); each half-step reads the state once, so the
+      // round counts two reads and materializes every round. The last
+      // round pins auth too: it feeds the hub half-step AND the output.
+      val h = GraphLoop.iterate(g, g.nodes.select(col("id"), lit(1.0).as("score")),
+        iters - 1, refsPerRound = 2)(s => halfStep(halfStep(s, "src", "dst"), "dst", "src"))
+      val auth = g.pin(halfStep(h, "src", "dst"))
+      val hub = g.pin(halfStep(auth, "dst", "src"))
+      Materialize.free(h)
+      val hz = hub.agg(sum(col("score"))).head().getDouble(0)
+      val az = auth.agg(sum(col("score"))).head().getDouble(0)
+      // with normalization deferred to the end, unnormalized mass grows
+      // ~(mean degree)^2 per round; deep iters on dense graphs can push the
+      // sums to Infinity and the output would be silent NaN — fail loudly
+      // with the recovery path instead
+      require(java.lang.Double.isFinite(hz) && java.lang.Double.isFinite(az)
+          && hz > 0 && az > 0,
+        s"hits: unnormalized score mass overflowed after $iters rounds " +
+          s"(hub sum $hz, auth sum $az) — split into two shorter hits() " +
+          "calls and renormalize between them")
+      g.result(g.nodes
+        .join(hub.select(col("id").as("hid"), col("score").as("hs")),
+          col("id") === col("hid"), "left")
+        .join(auth.select(col("id").as("aid"), col("score").as("as_")),
+          col("id") === col("aid"), "left")
+        .select(col("id"),
+          (coalesce(col("hs"), lit(0.0)) / lit(hz)).as("hub"),
+          (coalesce(col("as_"), lit(0.0)) / lit(az)).as("auth")))
     }
-
-    val hz = hub.agg(sum(col("score"))).head().getDouble(0)
-    val az = auth.agg(sum(col("score"))).head().getDouble(0)
-    // with normalization deferred to the end, unnormalized mass grows
-    // ~(mean degree)^2 per round; deep iters on dense graphs can push the
-    // sums to Infinity and the output would be silent NaN — fail loudly
-    // with the recovery path instead
-    require(java.lang.Double.isFinite(hz) && java.lang.Double.isFinite(az)
-        && hz > 0 && az > 0,
-      s"hits: unnormalized score mass overflowed after $iters rounds " +
-        s"(hub sum $hz, auth sum $az) — split into two shorter hits() " +
-        "calls and renormalize between them")
-    nodes
-      .join(hub.select(col("id").as("hid"), col("score").as("hs")),
-        col("id") === col("hid"), "left")
-      .join(auth.select(col("id").as("aid"), col("score").as("as_")),
-        col("id") === col("aid"), "left")
-      .select(col("id"),
-        (coalesce(col("hs"), lit(0.0)) / lit(hz)).as("hub"),
-        (coalesce(col("as_"), lit(0.0)) / lit(az)).as("auth"))
   }
 }

@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.util.Using
+
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** k-core extraction over an undirected edge list — the dense-community
@@ -15,11 +17,11 @@ import org.apache.spark.sql.functions._
   * Spark shape — iterative peeling with bounded rounds: each round
   * recomputes degrees over the surviving edge set (one partial-agg
   * shuffle) and drops nodes under k (one broadcast-friendly semi-join:
-  * the dropped set is usually tiny). [[Materialize]] per round — the
-  * survivor relation is referenced twice (degree pass + edge filter),
-  * the same double-reference materialization rule PageRank documents;
-  * pass `checkpointDir` for reliable-storage checkpointing on a real
-  * cluster. Rounds are data-dependent but ≤ the peel depth, which on
+  * the dropped set is usually tiny). Rounds run through
+  * [[GraphLoop.until]] with the survivor count as the witness — the
+  * survivor relation is referenced twice (degree pass + edge filter), so
+  * every round materializes; pass `checkpointDir` for reliable-storage
+  * checkpointing on a real cluster. Rounds are data-dependent but ≤ the peel depth, which on
   * power-law graphs is tiny (a planted fixture converges in ≤ 3; the
   * operator fails loudly at `maxRounds` instead of silently returning a
   * non-core — the [[Dedup.connectedComponents]] discipline).
@@ -37,49 +39,45 @@ import org.apache.spark.sql.functions._
   */
 object KCore {
 
-  /** One peel at threshold `k` from an already-symmetrized, self-loop-free
-    * edge frame. Returns (survivingEdges materialized, survivingEdgeCount,
-    * roundsUsed); `converged` enforcement is the caller's (budget is
-    * shared across a sweep). The input must already be materialized.
-    * `startCount` (>= 0) is the caller's already-known edge count of
-    * `start` — passing it saves the entry count job on incremental sweeps.
-    *
-    * WITNESS FUSION (the PageRank.iterateUntil discipline): each round's
-    * survivor frame materializes LAZILY and the convergence count is the
-    * job that computes and persists it; the previous round's count is
-    * REMEMBERED instead of re-aggregated — one job per round where the
-    * old shape paid three (materialize + count(next) + count(cur)).
+  /** The symmetrized, self-loop-free edge leaf — (src, dst), or with
+    * `weightCol` (src, dst, w) with max-merged weights > 0 (the
+    * [[LabelProp.symmetrizeWeighted]] merge).
     */
-  private def peel(start: DataFrame, k: Int, maxRounds: Int,
-      matLazy: DataFrame => DataFrame,
-      startCount: Long = -1L): (DataFrame, Long, Int, Boolean) = {
-    var cur = start
-    var curCount = if (startCount >= 0) startCount else start.count()
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      val deg = cur.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-      val keep = deg.filter(col("deg") >= k).select("id")
-      val next = matLazy(cur
-        .join(keep.select(col("id").as("src")), Seq("src"), "left_semi")
-        .join(keep.select(col("id").as("dst")), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst")))
-      // one aggregate answers "did this round remove anything" AND
-      // computes/persists the new frame
-      val nextCount = next.count()
-      converged = nextCount == curCount
-      // free superseded rounds, but never the caller-owned `start`
-      if (!(cur eq start)) Materialize.free(cur)
-      cur = next
-      curCount = nextCount
-      rounds += 1
-    }
-    (cur, curCount, rounds, converged)
+  private def undirected(edges: DataFrame, srcCol: String, dstCol: String,
+      weightCol: Option[String], checkpointDir: Option[String], maxRounds: Int) = {
+    val w = weightCol.map(c => col(c).as("w")).toSeq
+    val fwd = edges.select(Seq(col(srcCol).as("src"), col(dstCol).as("dst")) ++ w: _*)
+    GraphLoop.prepare(fwd.unionByName(fwd.select(Seq(col("dst").as("src"),
+        col("src").as("dst")) ++ weightCol.map(_ => col("w")): _*)),
+      "src", "dst", weightCol.map(_ => "w"), dropLoops = true,
+      checkpointDir = checkpointDir, rounds = maxRounds)
   }
 
-  private def undirected(edges: DataFrame, srcCol: String, dstCol: String) =
-    LabelProp.symmetrize(edges, srcCol, dstCol)
-      .filter(col("src") =!= col("dst"))
+  /** One peel from the materialized edge leaf `start`: drop every node
+    * whose `degree` aggregate (over its surviving edges) is under
+    * `threshold`, with its edges, until no edge drops. Returns (surviving
+    * edges, their count, rounds used, converged); convergence enforcement
+    * is the caller's (a sweep shares one budget). `startCount` (>= 0) is
+    * the caller's already-known edge count of `start` — it saves the entry
+    * count job on incremental sweeps. The survivor count is the
+    * [[GraphLoop.until]] witness: it computes and persists each round's
+    * frame, and the previous round's count is remembered.
+    */
+  private def peel(g: GraphLoop.Graph, start: DataFrame, degree: Column,
+      threshold: Any, maxRounds: Int,
+      startCount: Long = -1L): (DataFrame, Long, Int, Boolean) = {
+    val count = new GraphLoop.Unchanged[Long](_.count(), Some(startCount).filter(_ >= 0))
+    val (core, rounds, converged) = GraphLoop.until(start, maxRounds, g.matLazy) { cur =>
+      val keep = cur.groupBy(col("src").as("id")).agg(degree.as("deg"))
+        .filter(col("deg") >= threshold).select("id")
+      cur.join(keep.select(col("id").as("src")), Seq("src"), "left_semi")
+        .join(keep.select(col("id").as("dst")), Seq("dst"), "left_semi")
+        .select(cur.columns.map(col).toSeq: _*)
+    }(count)
+    (core, count.last, rounds, converged)
+  }
+
+  private val edgeCount = count(lit(1))
 
   /** Surviving (src, dst) edges of the k-core (symmetrized, both
     * directions present). Returns an empty frame when nothing survives.
@@ -89,13 +87,12 @@ object KCore {
       checkpointDir: Option[String] = None): DataFrame = {
     require(k >= 1, s"kCoreEdges: k must be >= 1, got $k")
     require(maxRounds >= 1, s"kCoreEdges: maxRounds must be >= 1, got $maxRounds")
-    val mat = Materialize.policy(edges.sparkSession, checkpointDir)
-    val matLazy = Materialize.policyLazy(edges.sparkSession, checkpointDir)
-    val (core, _, rounds, converged) =
-      peel(mat(undirected(edges, srcCol, dstCol)), k, maxRounds, matLazy)
-    require(converged,
-      s"kCoreEdges: no fixpoint after $rounds rounds (maxRounds=$maxRounds) — raise maxRounds")
-    core
+    Using.resource(undirected(edges, srcCol, dstCol, None, checkpointDir, maxRounds)) { g =>
+      val (core, _, rounds, converged) = peel(g, g.e, edgeCount, k, maxRounds)
+      require(converged,
+        s"kCoreEdges: no fixpoint after $rounds rounds (maxRounds=$maxRounds) — raise maxRounds")
+      core
+    }
   }
 
   /** Per-node core membership card at the given k values: (id, max_core)
@@ -109,24 +106,23 @@ object KCore {
       checkpointDir: Option[String] = None): DataFrame = {
     require(ks.nonEmpty && ks == ks.sorted && ks.distinct == ks,
       s"coreMembership: ks must be ascending and distinct: $ks")
-    val mat = Materialize.policy(edges.sparkSession, checkpointDir)
-    val matLazy = Materialize.policyLazy(edges.sparkSession, checkpointDir)
-    val und = mat(undirected(edges, srcCol, dstCol))
-    val nodes = und.select(col("src").as("id")).distinct()
-    var cur = und
-    var curCount = -1L
-    ks.foldLeft(nodes.select(col("id"), lit(0).as("max_core"))) { (acc, k) =>
-      val (core, coreCount, rounds, converged) =
-        peel(cur, k, maxRounds, matLazy, curCount)
-      require(converged,
-        s"coreMembership: k=$k no fixpoint after $rounds rounds — raise maxRounds")
-      cur = core
-      curCount = coreCount
-      val members = core.select(col("src").as("id")).distinct()
-      acc.join(members.withColumn("in_core", lit(1)), Seq("id"), "left")
-        .select(col("id"),
-          when(col("in_core").isNotNull, lit(k)).otherwise(col("max_core"))
-            .as("max_core"))
+    Using.resource(undirected(edges, srcCol, dstCol, None, checkpointDir, maxRounds)) { g =>
+      var cur = g.e
+      var curCount = -1L
+      g.result(ks.foldLeft(g.e.select(col("src").as("id")).distinct()
+          .select(col("id"), lit(0).as("max_core"))) { (acc, k) =>
+        val (core, coreCount, rounds, converged) =
+          peel(g, cur, edgeCount, k, maxRounds, curCount)
+        require(converged,
+          s"coreMembership: k=$k no fixpoint after $rounds rounds — raise maxRounds")
+        cur = core
+        curCount = coreCount
+        val members = core.select(col("src").as("id")).distinct()
+        acc.join(members.withColumn("in_core", lit(1)), Seq("id"), "left")
+          .select(col("id"),
+            when(col("in_core").isNotNull, lit(k)).otherwise(col("max_core"))
+              .as("max_core"))
+      })
     }
   }
 
@@ -137,8 +133,7 @@ object KCore {
     * borderline edges don't substitute for one strong one the way the
     * unweighted 2-core pretends. Edges symmetrize with max-merged weights
     * ([[LabelProp.symmetrizeWeighted]]); weights must be > 0. Same peel
-    * shape as [[kCoreEdges]]: one sum aggregate + two semi-joins per
-    * round, materialized survivors, loud non-convergence. Output:
+    * as [[kCoreEdges]] with the weight sum as the degree. Output:
     * surviving (src, dst, w), both directions.
     */
   def sCoreEdges(edges: DataFrame, s: Double, maxRounds: Int = 50,
@@ -146,32 +141,13 @@ object KCore {
       checkpointDir: Option[String] = None): DataFrame = {
     require(s > 0, s"sCoreEdges: s must be > 0, got $s")
     require(maxRounds >= 1, s"sCoreEdges: maxRounds must be >= 1, got $maxRounds")
-    val mat = Materialize.policy(edges.sparkSession, checkpointDir)
-    val matLazy = Materialize.policyLazy(edges.sparkSession, checkpointDir)
-    var cur = mat(LabelProp.symmetrizeWeighted(edges, srcCol, dstCol, weightCol)
-      .filter(col("src") =!= col("dst")).filter(col("w") > 0))
-    var curCount = cur.count()
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      val strength = cur.groupBy(col("src").as("id")).agg(sum(col("w")).as("st"))
-      val keep = strength.filter(col("st") >= s).select("id")
-      // witness fusion: the count computes and persists the new frame,
-      // and the previous count is remembered (see peel)
-      val next = matLazy(cur
-        .join(keep.select(col("id").as("src")), Seq("src"), "left_semi")
-        .join(keep.select(col("id").as("dst")), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst"), col("w")))
-      val nextCount = next.count()
-      converged = nextCount == curCount
-      Materialize.free(cur)
-      cur = next
-      curCount = nextCount
-      rounds += 1
+    Using.resource(undirected(edges, srcCol, dstCol, Some(weightCol), checkpointDir,
+        maxRounds)) { g =>
+      val (core, _, rounds, converged) = peel(g, g.e, sum(col("w")), s, maxRounds)
+      require(converged,
+        s"sCoreEdges: no fixpoint after $rounds rounds (maxRounds=$maxRounds) — raise maxRounds")
+      core
     }
-    require(converged,
-      s"sCoreEdges: no fixpoint after $rounds rounds (maxRounds=$maxRounds) — raise maxRounds")
-    cur
   }
 
   /** Full core decomposition in ONE incremental sweep: (id, coreness INT)
@@ -188,38 +164,38 @@ object KCore {
       srcCol: String = "src", dstCol: String = "dst",
       checkpointDir: Option[String] = None): DataFrame = {
     require(maxRounds >= 1, s"coreness: maxRounds must be >= 1, got $maxRounds")
-    val spark = edges.sparkSession
-    val mat = Materialize.policy(spark, checkpointDir)
-    var cur = mat(undirected(edges, srcCol, dstCol))
-    // materialized so the later free(result) only ever touches the result
-    // frame's own blocks, never a leaf shared with the live edge frame
-    var result = mat(cur.select(col("src").as("id")).distinct()
-      .select(col("id"), lit(0).as("coreness")))
-    val matLazy = Materialize.policyLazy(spark, checkpointDir)
-    var budget = maxRounds
-    var k = 1
-    var n = cur.count()
-    while (n > 0) {
-      val (core, coreCount, rounds, converged) = peel(cur, k, budget, matLazy, n)
-      require(converged,
-        s"coreness: k=$k exhausted the $maxRounds-round budget — raise maxRounds")
-      budget -= math.max(rounds - 1, 0) // converged peels spend rounds-1 removing
-      val survivors = core.select(col("src").as("id")).distinct()
-      // survivors of the k-peel have coreness >= k; the k-peel's victims
-      // keep their previous value (k-1 or earlier thresholds)
-      val newResult = mat(result.join(survivors.withColumn("in_core", lit(1)), Seq("id"), "left")
-        .select(col("id"),
-          when(col("in_core").isNotNull, lit(k)).otherwise(col("coreness"))
-            .as("coreness")))
-      // the old result (and, once newResult is materialized, the old edge
-      // frame unless peel returned it unchanged) are dead — free them
-      Materialize.free(result)
-      if (!(core eq cur)) Materialize.free(cur)
-      result = newResult
-      cur = core
-      n = coreCount // peel already counted the survivors (witness fusion)
-      k += 1
+    Using.resource(undirected(edges, srcCol, dstCol, None, checkpointDir, maxRounds)) { g =>
+      var cur = g.e
+      // materialized so the later free(result) only ever touches the result
+      // frame's own blocks, never a leaf shared with the live edge frame
+      var result = g.mat(cur.select(col("src").as("id")).distinct()
+        .select(col("id"), lit(0).as("coreness")))
+      var budget = maxRounds
+      var k = 1
+      var n = cur.count()
+      while (n > 0) {
+        val (core, coreCount, rounds, converged) = peel(g, cur, edgeCount, k, budget, n)
+        require(converged,
+          s"coreness: k=$k exhausted the $maxRounds-round budget — raise maxRounds")
+        budget -= math.max(rounds - 1, 0) // converged peels spend rounds-1 removing
+        val survivors = core.select(col("src").as("id")).distinct()
+        // survivors of the k-peel have coreness >= k; the k-peel's victims
+        // keep their previous value (k-1 or earlier thresholds)
+        val newResult = g.mat(result.join(survivors.withColumn("in_core", lit(1)), Seq("id"), "left")
+          .select(col("id"),
+            when(col("in_core").isNotNull, lit(k)).otherwise(col("coreness"))
+              .as("coreness")))
+        // once newResult is materialized the old result and the peel's start
+        // edge frame are dead
+        Materialize.free(result)
+        Materialize.free(cur)
+        result = newResult
+        cur = core
+        n = coreCount // peel already counted the survivors (witness fusion)
+        k += 1
+      }
+      Materialize.free(cur)
+      result
     }
-    result
   }
 }

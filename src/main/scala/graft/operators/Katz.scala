@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.util.Using
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -13,7 +15,7 @@ import org.apache.spark.sql.functions._
   *
   * Same per-round Spark shape as [[PageRank]]: one (ranks ⋈ edges) hash
   * join + one (dst, contrib) partial-agg shuffle, a left join back onto
-  * the cached node frame, one materialization ([[Materialize]]); state
+  * the prepared node frame, rounds through [[GraphLoop.iterate]]; state
   * is 16 bytes/node. Truncation at `iters` leaves a geometric tail
   * ≤ (αλ)^iters — callers pick iters for the decimals they read.
   */
@@ -24,38 +26,17 @@ object Katz {
       checkpointDir: Option[String] = None): DataFrame = {
     require(iters >= 1, s"katz: iters must be >= 1, got $iters")
     require(alpha > 0 && alpha < 1, s"katz: alpha in (0,1), got $alpha")
-    val mat = Materialize.policy(edges.sparkSession, checkpointDir)
-
-    // LAZY checkpoints: the init materialization job computes and
-    // persists e AND nodes too (witness fusion) — one job, not three
-    val e = Materialize.sizedByKey(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-        .filter(col("src") =!= col("dst")).distinct(), "src").localCheckpoint(false)
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct().localCheckpoint(false)
-
-    def step(prev: DataFrame): DataFrame = {
-      val contribs = prev.join(e, col("id") === col("src"))
-        .groupBy(col("dst").as("cid"))
-        .agg(sum(col("katz")).as("contrib"))
-      nodes.join(contribs, col("id") === col("cid"), "left")
-        .select(col("id"),
-          (lit(1.0) + lit(alpha) * coalesce(col("contrib"), lit(0.0))).as("katz"))
+    Using.resource(GraphLoop.prepare(edges, srcCol, dstCol, dropLoops = true,
+        checkpointDir = checkpointDir, rounds = iters)) { g =>
+      // the state is read ONCE per round
+      GraphLoop.iterate(g, g.nodes.select(col("id"), lit(1.0).as("katz")), iters, 1) { prev =>
+        val contribs = prev.join(g.e, col("id") === col("src"))
+          .groupBy(col("dst").as("cid"))
+          .agg(sum(col("katz")).as("contrib"))
+        g.nodes.join(contribs, col("id") === col("cid"), "left")
+          .select(col("id"),
+            (lit(1.0) + lit(alpha) * coalesce(col("contrib"), lit(0.0))).as("katz"))
+      }
     }
-    var c = mat(nodes.select(col("id"), lit(1.0).as("katz")))
-    // the state is referenced ONCE per round, so two rounds fold into one
-    // materialization (the PageRank reference-count rule): same
-    // arithmetic, no recompute, half the checkpoint writes
-    var t = 0
-    while (t < iters) {
-      val steps = math.min(2, iters - t)
-      var nxt: DataFrame = c
-      for (_ <- 0 until steps) nxt = step(nxt)
-      val m = mat(nxt)
-      Materialize.free(c) // superseded round's blocks go now
-      c = m
-      t += steps
-    }
-    c
   }
 }

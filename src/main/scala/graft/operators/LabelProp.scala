@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.util.Using
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -29,13 +31,13 @@ import org.apache.spark.sql.functions._
   * equality joins and aggregates, no arithmetic on ids — the same
   * discipline as [[PageRank]], so host-graph propagation works directly.
   *
-  * Spark shape = the [[PageRank]] discipline: edges/degrees computed once
-  * and cached; per round one hash join + one partial-agg shuffle of
-  * (dst, contrib) pairs; seeds joined back as a broadcast-size relation;
-  * [[Materialize]] per round keeps lineage O(1) (default
-  * `localCheckpoint`; pass `checkpointDir` for reliable-storage
-  * checkpointing on a real cluster). State per node is one double —
-  * 16 bytes/node cluster-wide.
+  * Spark shape = the [[PageRank]] discipline: edges/degrees prepared once
+  * ([[GraphLoop.prepare]]); per round one hash join + one partial-agg
+  * shuffle of (dst, contrib) pairs; seeds joined back as a broadcast-size
+  * relation; rounds run through [[GraphLoop.iterate]], whose stride and
+  * freeing rules keep lineage O(1) (default `localCheckpoint`; pass
+  * `checkpointDir` for reliable-storage checkpointing on a real cluster).
+  * State per node is one double — 16 bytes/node cluster-wide.
   */
 object LabelProp {
 
@@ -75,63 +77,19 @@ object LabelProp {
       checkpointDir: Option[String] = None): DataFrame = {
     require(iters >= 1, s"propagate: iters must be >= 1, got $iters")
     require(alpha > 0 && alpha < 1, s"propagate: alpha in (0,1), got $alpha")
-    val mat = Materialize.policy(edges.sparkSession, checkpointDir)
-    val e = (weightCol match {
-      case None =>
-        edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-          .distinct().withColumn("w", lit(1.0))
-      case Some(wc) =>
-        edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-            col(wc).cast("double").as("w"))
-          .filter(col("w") > 0)
-          .groupBy("src", "dst").agg(max(col("w")).as("w"))
-    }).transform(d => Materialize.sizedByKey(d, "src")).cache()
-    val y = seeds.select(col(idCol).as("id"),
-      col(labelCol).cast("double").as("y"))
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id")))
-      .union(y.select("id")).distinct().cache()
-    val outDeg = e.groupBy("src").agg(sum(col("w")).as("deg")).cache()
-    // out-weight attached ONCE (the PageRank.attachDeg discipline): one
-    // hash join per round instead of two; `score * w / deg` is unchanged,
-    // so scores are bit-identical. Loop-cached frames are SIZE-partitioned
-    // (Materialize.sizedByKey — cache partitioning is frozen at build)
-    val eDeg = Materialize.sizedByKey(e.join(outDeg, "src"), "src").cache()
-    val yFull = Materialize.sizedByKey(nodes.join(y, Seq("id"), "left")
-      .select(col("id"), coalesce(col("y"), lit(0.0)).as("y")), "id").cache()
-    def step(prev: DataFrame): DataFrame = {
-      val contribs = prev.join(eDeg, col("id") === col("src"))
-        .groupBy(col("dst").as("cid"))
-        .agg(sum(col("score") * col("w") / col("deg")).as("contrib"))
-      yFull
-        .join(contribs, col("id") === col("cid"), "left")
-        .select(col("id"),
-          (lit(alpha) * coalesce(col("contrib"), lit(0.0))
+    Using.resource(GraphLoop.prepare(edges, srcCol, dstCol, weightCol,
+        checkpointDir = checkpointDir, rounds = iters)) { g =>
+      val y = seeds.select(col(idCol).as("id"), col(labelCol).cast("double").as("y"))
+      val yFull = g.shared(Materialize.sizedByKey(g.ids.union(y.select("id")).distinct()
+        .join(y, Seq("id"), "left")
+        .select(col("id"), coalesce(col("y"), lit(0.0)).as("y")), "id"))
+      // the score vector is read ONCE per round (the contribution join;
+      // yFull is a separate materialized base)
+      GraphLoop.iterate(g, yFull.select(col("id"), col("y").as("score")), iters, 1) { prev =>
+        yFull.join(g.contributions(prev, "score"), col("id") === col("cid"), "left")
+          .select(col("id"), (lit(alpha) * coalesce(col("contrib"), lit(0.0))
             + lit(1.0 - alpha) * col("y")).as("score"))
-    }
-    var f = mat(yFull.select(col("id"), col("y").as("score")))
-    // the score vector is referenced ONCE per round (the contribution
-    // join; yFull is a separate cached base), so two rounds fold into one
-    // materialization — the PageRank reference-count rule: same
-    // arithmetic, no recompute, half the checkpoint writes. The stride
-    // stays at 2: deeper folds buy little and grow the per-job plan.
-    try {
-      var t = 0
-      while (t < iters) {
-        val steps = math.min(2, iters - t)
-        var nxt: DataFrame = f
-        for (_ <- 0 until steps) nxt = step(nxt)
-        val m = mat(nxt)
-        Materialize.free(f) // superseded frame's executor blocks go now
-        f = m
-        t += steps
       }
-    } finally {
-      // f is materialized each round — the builder caches must not outlive
-      // the call in a long-lived session
-      e.unpersist(); nodes.unpersist(); outDeg.unpersist(); yFull.unpersist()
-      eDeg.unpersist()
     }
-    f
   }
 }

@@ -3,17 +3,18 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** Shared materialization policy for the iterative operators (PageRank,
-  * LabelProp, KCore, connectedComponents) AND for shared-subplan
-  * materializations ([[view]]). Every iterative round MUST materialize
-  * its state frame: the state is referenced at least twice by the next
-  * round (contribution join + dangling/fixpoint pass), so an
+/** Shared materialization policy for the iterative operators AND for
+  * shared-subplan materializations ([[view]]). Every iterative round MUST
+  * materialize its state frame: the state is referenced at least twice by
+  * the next round (contribution join + dangling/fixpoint pass), so an
   * unmaterialized chain re-executes its whole prefix ~2^rounds times —
-  * measured in PageRank.scala (q295: 5.1 s → 30.6 s when relaxed).
+  * measured in PageRank.scala (q295: 5.1 s → 30.6 s when relaxed). The
+  * graph operators reach this policy through one seam, [[GraphLoop]]: its
+  * prepared graph, round drivers, stride and witness rules.
   *
   * Backends (selected per call via `checkpointDir`, or session-wide via
   * `spark.graft.materialize.backend` = `local` | `disk` | `reliable` plus
-  * `spark.graft.materialize.dir` for `reliable`):
+  * `spark.graft.materialize.dir` for `reliable`; any other value throws):
   *  - `local` (the default): `localCheckpoint` — truncates lineage into
   *    executor MEMORY_AND_DISK blocks. Zero external storage, right for
   *    local mode and short jobs, but NOT fault-tolerant: the blocks live
@@ -48,8 +49,17 @@ private[graft] object Materialize {
     */
   private val StatCapBytes = 1L << 40
 
-  private def backend(spark: SparkSession): String =
-    spark.conf.get("spark.graft.materialize.backend", "local")
+  /** The backend of one call: an explicit `checkpointDir` means
+    * `reliable`; otherwise the session setting, which must name one of the
+    * three backends — a typo throws instead of silently checkpointing into
+    * reliable storage.
+    */
+  private def backend(spark: SparkSession, checkpointDir: Option[String]): String =
+    spark.conf.get("spark.graft.materialize.backend", "local") match {
+      case b @ ("local" | "disk" | "reliable") => if (checkpointDir.isDefined) "reliable" else b
+      case other => throw new IllegalArgumentException(
+        s"spark.graft.materialize.backend must be local, disk or reliable, got '$other'")
+    }
 
   /** Reliable checkpoint directory: the explicit per-call dir wins, then
     * the session conf, then an already-set SparkContext checkpoint dir.
@@ -72,15 +82,15 @@ private[graft] object Materialize {
     */
   def policy(spark: SparkSession, checkpointDir: Option[String],
       eager: Boolean = true): DataFrame => DataFrame =
-    checkpointDir match {
-      case None if backend(spark) == "local" =>
+    backend(spark, checkpointDir) match {
+      case "local" =>
         df => org.apache.spark.sql.graftbridge.Bridge.capStats(
           df.localCheckpoint(eager), StatCapBytes)
-      case None if backend(spark) == "disk" =>
+      case "disk" =>
         df => org.apache.spark.sql.graftbridge.Bridge.capStats(
           df.localCheckpoint(eager, StorageLevel.DISK_ONLY), StatCapBytes)
-      case other =>
-        spark.sparkContext.setCheckpointDir(reliableDir(spark, other))
+      case _ =>
+        spark.sparkContext.setCheckpointDir(reliableDir(spark, checkpointDir))
         df => org.apache.spark.sql.graftbridge.Bridge.capStats(
           df.checkpoint(eager), StatCapBytes)
     }
@@ -154,12 +164,15 @@ private[graft] object Materialize {
     * materialized and the delta/convergence aggregate has read the old
     * one. Reliable `checkpoint(dir)` frames live in external storage, not
     * executor memory (the cleaner GCs the files) — no-op for them, and for
-    * any frame that is not a materialized leaf.
+    * any frame that is not a materialized leaf. Freeing a frame twice is
+    * a no-op.
     */
   def free(df: DataFrame): Unit =
     df.queryExecution.analyzed.collectLeaves().foreach {
+      // only RDDs still registered as persisted: freeing twice would race
+      // two asynchronous block removals
       case l: org.apache.spark.sql.execution.LogicalRDD
-          if l.rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE =>
+          if l.rdd.sparkContext.getPersistentRDDs.contains(l.rdd.id) =>
         // quiet form of RDD.unpersist: freeing a dead locally-checkpointed
         // frame is THE contract here, so the per-call "cannot be
         // recomputed" warning is noise (CoreBridge scaladoc)

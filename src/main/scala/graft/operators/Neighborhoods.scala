@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.util.Using
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -23,11 +25,14 @@ import org.apache.spark.sql.functions._
   * aggregates, no UDFs) and whose per-round cost is ONE (dst-grouped)
   * sketch-union shuffle, the same shape as a PageRank round.
   *
-  * Both paths materialize per round ([[Materialize]]): the exact path
-  * materializes each round's SHELL once and keeps the visited set as a
-  * lazy union over those materialized shells (the anti-join re-reads
-  * cached blocks; no per-round copy of the whole set), the sketch path
-  * materializes its state frame — PageRank.scala's 2^T lineage guard.
+  * Both paths prepare their edges once ([[GraphLoop.prepare]]) and
+  * materialize per round: the exact path materializes each round's SHELL
+  * once and keeps the visited set as a lazy union over those materialized
+  * shells (the anti-join re-reads cached blocks; no per-round copy of the
+  * whole set), the sketch path materializes its state frame —
+  * PageRank.scala's 2^T lineage guard. Both ACCUMULATE their rounds into
+  * the output, so they keep every round's frame; the Bellman–Ford path
+  * replaces its state and runs through [[GraphLoop.iterate]].
   *
   * Distances follow OUT-edges: d(v, u) = length of the shortest directed
   * path v → u. For undirected semantics pass symmetrized edges
@@ -42,34 +47,28 @@ object Neighborhoods {
       srcCol: String = "src", dstCol: String = "dst",
       checkpointDir: Option[String] = None): DataFrame = {
     require(radius >= 1, s"boundedDistances: radius >= 1, got $radius")
-    val mat = Materialize.policy(edges.sparkSession, checkpointDir)
-    // LAZY checkpoint: the first round's materialization job computes
-    // and persists e too (witness fusion) — one job, not two
-    val e = Materialize.sizedByKey(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-        .filter(col("src") =!= col("dst")).distinct(), "src").localCheckpoint(false)
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-
-    // `known` is a LAZY union of the already-materialized shells: every
-    // leg is a LogicalRDD, so the anti-join re-reads cached blocks and
-    // the per-round "copy the whole visited set into a fresh
-    // materialization" job (O(Σ shells) per round — quadratic in total
-    // across rounds) is gone. Same BFS set semantics, one materialization
-    // per round instead of two.
-    var known = mat(nodes.select(col("id"), col("id").as("other")))
-    var frontier = known
-    var acc: DataFrame = null
-    for (d <- 1 to radius) {
-      val next = mat(frontier.join(e, col("other") === col("src"))
-        .select(col("id"), col("dst").as("other")).distinct()
-        .join(known, Seq("id", "other"), "left_anti"))
-      val shell = next.withColumn("dist", lit(d))
-      acc = if (acc == null) shell else acc.unionByName(shell)
-      known = known.unionByName(next)
-      frontier = next
+    Using.resource(GraphLoop.prepare(edges, srcCol, dstCol, dropLoops = true,
+        checkpointDir = checkpointDir, rounds = radius)) { g =>
+      // `known` is a LAZY union of the already-materialized shells: every
+      // leg is a LogicalRDD, so the anti-join re-reads cached blocks and
+      // the per-round "copy the whole visited set into a fresh
+      // materialization" job (O(Σ shells) per round — quadratic in total
+      // across rounds) is gone. Same BFS set semantics, one materialization
+      // per round instead of two.
+      var known = g.shared(g.ids.distinct().select(col("id"), col("id").as("other")))
+      var frontier = known
+      var acc: DataFrame = null
+      for (d <- 1 to radius) {
+        val next = g.mat(frontier.join(g.e, col("other") === col("src"))
+          .select(col("id"), col("dst").as("other")).distinct()
+          .join(known, Seq("id", "other"), "left_anti"))
+        val shell = next.withColumn("dist", lit(d))
+        acc = if (acc == null) shell else acc.unionByName(shell)
+        known = known.unionByName(next)
+        frontier = next
+      }
+      g.result(acc)
     }
-    acc
   }
 
   /** Ball shell sizes per node: (id, dist, cnt) = |{u : d(id,u) = dist}|
@@ -110,23 +109,16 @@ object Neighborhoods {
       srcCol: String = "src", dstCol: String = "dst", weightCol: String = "w",
       seedIdCol: String = "id", checkpointDir: Option[String] = None): DataFrame = {
     require(rounds >= 1, s"boundedWeightedDistances: rounds >= 1, got $rounds")
-    val mat = Materialize.policy(edges.sparkSession, checkpointDir)
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-        col(weightCol).cast("double").as("w"))
-      .filter(col("src") =!= col("dst") && col("w") >= 0)
-      .groupBy("src", "dst").agg(min(col("w")).as("w"))
-      .localCheckpoint(false) // computed+persisted by the first round's job
-    var d = mat(seeds.select(col(seedIdCol).as("id")).distinct()
-      .select(col("id"), lit(0.0).as("dist")))
-    for (_ <- 1 to rounds) {
-      val relax = d.join(e, col("id") === col("src"))
-        .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"))
-      val nxt = mat(d.unionByName(relax)
-        .groupBy("id").agg(min(col("dist")).as("dist")))
-      Materialize.free(d)
-      d = nxt
+    Using.resource(GraphLoop.prepare(edges, srcCol, dstCol, Some(weightCol),
+        dropLoops = true, costs = true, checkpointDir = checkpointDir, rounds = rounds)) { g =>
+      // the distance frame is read twice per round (relaxation + union)
+      GraphLoop.iterate(g, seeds.select(col(seedIdCol).as("id")).distinct()
+          .select(col("id"), lit(0.0).as("dist")), rounds, 2) { d =>
+        val relax = d.join(g.e, col("id") === col("src"))
+          .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"))
+        d.unionByName(relax).groupBy("id").agg(min(col("dist")).as("dist"))
+      }
     }
-    d
   }
 
   /** HyperBall: approximate ball sizes via per-node HLL sketches.
@@ -142,31 +134,27 @@ object Neighborhoods {
       srcCol: String = "src", dstCol: String = "dst", lgK: Int = 12,
       checkpointDir: Option[String] = None): DataFrame = {
     require(radius >= 1, s"hyperBall: radius >= 1, got $radius")
-    val mat = Materialize.policy(edges.sparkSession, checkpointDir)
-    // LAZY checkpoint: the first round's materialization job computes
-    // and persists e too (witness fusion) — one job, not two
-    val e = Materialize.sizedByKey(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-        .filter(col("src") =!= col("dst")).distinct(), "src").localCheckpoint(false)
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-
-    var state = mat(nodes.groupBy(col("id"))
-      .agg(hll_sketch_agg(col("id"), lit(lgK)).as("sk")))
-    var acc: DataFrame = null
-    for (d <- 1 to radius) {
-      // gather out-neighbor sketches onto src, union with own sketch
-      val gathered = state.join(e, col("id") === col("dst"))
-        .groupBy(col("src").as("gid"))
-        .agg(hll_union_agg(col("sk")).as("nsk"))
-      state = mat(state.join(gathered, col("id") === col("gid"), "left")
-        .select(col("id"),
-          when(col("nsk").isNull, col("sk"))
-            .otherwise(hll_union(col("sk"), col("nsk"))).as("sk")))
-      val est = state.select(col("id"), lit(d).as("dist"),
-        hll_sketch_estimate(col("sk")).as("est"))
-      acc = if (acc == null) est else acc.unionByName(est)
+    Using.resource(GraphLoop.prepare(edges, srcCol, dstCol, dropLoops = true,
+        checkpointDir = checkpointDir, rounds = radius)) { g =>
+      // every round's state is read by the output (its estimate column),
+      // so only the initial sketches are the loop's to free
+      var state = g.shared(g.ids.distinct().groupBy(col("id"))
+        .agg(hll_sketch_agg(col("id"), lit(lgK)).as("sk")))
+      var acc: DataFrame = null
+      for (d <- 1 to radius) {
+        // gather out-neighbor sketches onto src, union with own sketch
+        val gathered = state.join(g.e, col("id") === col("dst"))
+          .groupBy(col("src").as("gid"))
+          .agg(hll_union_agg(col("sk")).as("nsk"))
+        state = g.mat(state.join(gathered, col("id") === col("gid"), "left")
+          .select(col("id"),
+            when(col("nsk").isNull, col("sk"))
+              .otherwise(hll_union(col("sk"), col("nsk"))).as("sk")))
+        val est = state.select(col("id"), lit(d).as("dist"),
+          hll_sketch_estimate(col("sk")).as("est"))
+        acc = if (acc == null) est else acc.unionByName(est)
+      }
+      g.result(acc)
     }
-    acc
   }
 }

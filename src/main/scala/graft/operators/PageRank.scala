@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.Using
+
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Distributed PageRank over an edge list — the link-centrality pass a
@@ -13,19 +15,19 @@ import org.apache.spark.sql.functions._
   * graph signal (authority).
   *
   * Spark shape — power iteration with bounded, shuffle-minimal steps:
-  *  - `nodes`/`outDeg`/`edges` are computed ONCE and cached; every
-  *    iteration is one (ranks ⋈ edges on src) hash join + one groupBy(dst)
+  *  - the edges, nodes and out-degrees are prepared ONCE as materialized
+  *    leaves ([[GraphLoop.prepare]]); every iteration is one
+  *    (ranks ⋈ edges on src) hash join + one groupBy(dst)
   *    partial-aggregated shuffle carrying (dst, contrib) pairs only —
   *    never the edge payload;
   *  - the dangling-mass term is a 1-row aggregate crossJoin(broadcast) —
   *    the scalar-attachment idiom used repo-wide;
-  *  - each iteration materializes the new ranks frame via [[Materialize]]:
-  *    the rank vector is referenced twice per round (contributions +
-  *    dangling), so an unmaterialized chain re-executes its prefix
-  *    exponentially — and lineage/AQE re-planning stays O(1) in the
-  *    iteration count. Default backend is `localCheckpoint`; pass
-  *    `checkpointDir` for reliable-storage `checkpoint` on a real
-  *    cluster (executor loss survives);
+  *  - rounds run through [[GraphLoop]], which owns the materialization
+  *    stride, witness fusion and the freeing of superseded frames, so
+  *    lineage/AQE re-planning stays O(1) in the iteration count. Default
+  *    backend is `localCheckpoint`; pass `checkpointDir` for
+  *    reliable-storage `checkpoint` on a real cluster (executor loss
+  *    survives);
   *  - ranks are (id, double) — 16 bytes/node; a 10⁹-node host graph is
   *    ~16 GB cluster-wide, far under shuffle budgets.
   *
@@ -44,117 +46,44 @@ import org.apache.spark.sql.functions._
   */
 object PageRank {
 
-  /** Weighted, deduped edge relation (src, dst, w) + out-weight sums
-    * (src, deg = Σw). Unweighted edges take the `distinct` path with
-    * w ≡ 1.0, so deg equals the out-degree count bit-for-bit.
-    */
   private def prepare(edges: DataFrame, srcCol: String, dstCol: String,
-      weightCol: Option[String]): (DataFrame, DataFrame) = {
-    // id-type-agnostic: hosts/urls rank as naturally as numeric ids —
-    // every step is equality joins and aggregates, no arithmetic on ids
-    val e = weightCol match {
-      case None =>
-        edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-          .distinct().withColumn("w", lit(1.0))
-      case Some(wc) =>
-        edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-            col(wc).cast("double").as("w"))
-          .filter(col("w") > 0)
-          .groupBy("src", "dst").agg(max(col("w")).as("w"))
-    }
-    val outDeg = e.groupBy("src").agg(sum(col("w")).as("deg"))
-    (e, outDeg)
-  }
+      weightCol: Option[String], checkpointDir: Option[String], rounds: Int) =
+    GraphLoop.prepare(edges, srcCol, dstCol, weightCol,
+      checkpointDir = checkpointDir, rounds = rounds)
 
-  /** Edge relation with the out-weight sum attached ONCE:
-    * (src, dst, w, deg). Joining `outDeg` here instead of inside [[step]]
-    * removes one hash join from EVERY iteration (10–50 per query; on a
-    * cluster each avoided join is an avoided pass over the edge relation
-    * per round). `outDeg` aggregates from `e`, so the inner join keeps
-    * every edge row; the per-round arithmetic `rank * w / deg` is
-    * unchanged — bit-identical ranks.
-    *
-    * SKEW (guide §2.5): the per-round contribution join is deliberately
-    * exchange-free (cached eDeg ⋈ checkpointed ranks reuse their
-    * partitioning), which also takes AQE's runtime skew split off the
-    * table — a hot source's edges all sit in ONE cached partition, and
-    * on a power-law graph at scale that partition is the round's
-    * straggler. `spark.graft.graph.joinSalt` = k > 1 spreads it: the
-    * edge frame carries salt = pmod(xxhash64(dst), k) (DETERMINISTIC, so
-    * task retries re-derive the same placement — guide §2.5's rand()
-    * hazard) and hash-distributes by (src, salt); [[contributions]] then
-    * explodes the 16-byte rank side ×k and joins on (src, salt). The
-    * contribution term multiset is identical — only float summation
-    * order moves (the documented ~1e-12 band). Default 1 = off: the
-    * salt-free plan is byte-identical to the unsalted shape.
+  /** One damped update of `ranks` onto the ids of `base`: (id) nodes, the
+    * seed frame (id, p), or the rank frame itself as (id, prev) — then the
+    * output carries `prev` and a convergence delta needs NO extra join.
+    * `teleport` maps a mass to its per-node share: m / N for the uniform
+    * walk, m · p for the personalized one; it takes the (1−d) teleport
+    * mass and, with dangling nodes, the dangling mass.
+    * `hasDangling = false` (every node has out-edges — checked once per
+    * call) skips the dangling branch entirely: the left-anti join, its
+    * 1-row aggregate and the broadcast all drop, and `contrib + 0.0` is
+    * exact, so the ranks are bit-identical to the general path — measured
+    * ~25% off every round on the all-source query fixtures.
     */
-  private def attachDeg(e: DataFrame, outDeg: DataFrame): DataFrame = {
-    val k = joinSalt(e.sparkSession)
-    val j = e.join(outDeg, "src")
-    if (k <= 1) j
-    else j.withColumn("salt", pmod(xxhash64(col("dst")), lit(k)).cast("int"))
-      .repartition(col("src"), col("salt"))
-  }
-
-  private def joinSalt(spark: SparkSession): Int =
-    spark.conf.get("spark.graft.graph.joinSalt", "1").toInt
-
-  /** The per-round contribution relation (cid, contrib) from the rank
-    * frame and the deg-attached (possibly salted) edge frame.
-    */
-  private def contributions(eDeg: DataFrame, ranks: DataFrame): DataFrame = {
-    val joined =
-      if (eDeg.columns.contains("salt")) {
-        val k = joinSalt(eDeg.sparkSession)
-        ranks.select(col("id"), col("rank"),
-            explode(sequence(lit(0), lit(k - 1))).as("_rsalt"))
-          .join(eDeg, col("id") === col("src") && col("_rsalt") === col("salt"))
-      } else ranks.join(eDeg, col("id") === col("src"))
-    joined.groupBy(col("dst").as("cid"))
-      .agg(sum(col("rank") * col("w") / col("deg")).as("contrib"))
-  }
-
-  /** One damped update from `ranks` given prepared (eDeg, outDeg, nodes, n).
-    * `hasDangling = false` (every node has out-edges — checked ONCE per
-    * call with two cached counts) skips the per-round dangling branch
-    * entirely: the left-anti join, its 1-row aggregate and the broadcast
-    * all drop, and `contrib + 0.0` is exact float arithmetic (contrib is
-    * never -0.0), so the ranks are bit-identical to the general path —
-    * measured ~25% off every round on the all-source query fixtures.
-    *
-    * `carryPrev = true` replaces the `nodes` side of the contribution
-    * attach with the rank frame itself (same id set), so the output is
-    * (id, prev, rank) and a convergence delta needs NO extra join — the
-    * [[iterateUntil]] fusion: one aggregate over the already-materialized
-    * frame instead of a per-round join job.
-    */
-  private def step(eDeg: DataFrame, outDeg: DataFrame, nodes: DataFrame, n: Long,
-      ranks: DataFrame, damping: Double, hasDangling: Boolean,
-      carryPrev: Boolean = false): DataFrame = {
-    val contribs = contributions(eDeg, ranks)
-    val left = if (carryPrev) ranks.select(col("id"), col("rank").as("prev"))
-      else nodes
-    val base = left.join(contribs, col("id") === col("cid"), "left")
-    val keep = if (carryPrev) Seq(col("id"), col("prev")) else Seq(col("id"))
+  private def step(g: GraphLoop.Graph, ranks: DataFrame, base: DataFrame,
+      damping: Double, hasDangling: Boolean, teleport: Column => Column): DataFrame = {
+    val joined = base.join(g.contributions(ranks, "rank"), col("id") === col("cid"), "left")
+    val keep = base.columns.filter(Set("id", "prev")).map(col).toSeq
+    val contrib = coalesce(col("contrib"), lit(0.0))
     if (hasDangling) {
-      val dangling = ranks.join(outDeg, col("id") === col("src"), "left_anti")
+      val dangling = ranks.join(g.outDeg, col("id") === col("src"), "left_anti")
         .agg(coalesce(sum(col("rank")), lit(0.0)).as("dmass"))
-      base.crossJoin(broadcast(dangling))
-        .select(keep :+
-          (lit((1.0 - damping) / n) + lit(damping) *
-            (coalesce(col("contrib"), lit(0.0)) + col("dmass") / n)).as("rank"): _*)
-    } else {
-      base.select(keep :+
-        (lit((1.0 - damping) / n) + lit(damping) *
-          coalesce(col("contrib"), lit(0.0))).as("rank"): _*)
-    }
+      joined.crossJoin(broadcast(dangling)).select(keep :+ (teleport(lit(1.0 - damping)) +
+        lit(damping) * (contrib + teleport(col("dmass")))).as("rank"): _*)
+    } else joined.select(keep :+
+      (teleport(lit(1.0 - damping)) + lit(damping) * contrib).as("rank"): _*)
   }
 
   /** `iters` rounds of the damped update
     * r'(v) = (1−d)/N + d·(Σ_{u→v} r(u)·w(u,v)/Σ_out w(u) + danglingMass/N)
     * over `edges(srcCol, dstCol)` (w ≡ 1 without `weightCol`). Nodes =
     * src ∪ dst (isolated ids can be unioned in by the caller). Output:
-    * (id, rank DOUBLE), Σ rank = 1.
+    * (id, rank DOUBLE), Σ rank = 1. Strides follow [[GraphLoop.iterate]]:
+    * the rank frame is read twice per round with dangling nodes, once
+    * without.
     */
   def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85,
       srcCol: String = "src", dstCol: String = "dst",
@@ -162,64 +91,28 @@ object PageRank {
       checkpointDir: Option[String] = None): DataFrame = {
     require(iters >= 1, s"pageRank: iters must be >= 1, got $iters")
     require(damping > 0 && damping < 1, s"pageRank: damping in (0,1), got $damping")
-    val mat = Materialize.policy(edges.sparkSession, checkpointDir)
-    val (e0, outDeg0) = prepare(edges, srcCol, dstCol, weightCol)
-    // loop-cached frames get SIZE-derived partition counts (see
-    // Materialize.sizedByKey) — a cache scan's partitioning is frozen at
-    // build time, and these are re-scanned every round
-    val e = Materialize.sizedByKey(e0, "src").cache()
-    val nodes = Materialize.sizedByKey(e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct(), "id").cache()
-    val outDeg = outDeg0.cache()
-    val eDeg = Materialize.sizedByKey(attachDeg(e, outDeg), "src").cache()
-    val n = nodes.count()
+    Using.resource(prepare(edges, srcCol, dstCol, weightCol, checkpointDir, iters))(
+      ranks(_, iters, damping))
+  }
+
+  /** The [[pageRank]] rounds over a prepared graph. */
+  private[operators] def ranks(g: GraphLoop.Graph, iters: Int, damping: Double): DataFrame = {
+    val n = g.nodes.count()
     require(n > 0, "pageRank: empty graph")
-    val hasDangling = outDeg.count() < n
-    var ranks = mat(nodes.select(col("id"), (lit(1.0) / n).as("rank")))
-    // Materialization stride = the REFERENCE COUNT rule. With dangling
-    // nodes the rank frame is referenced TWICE per round (contributions
-    // + dangling mass), so every round must materialize: an
-    // un-materialized chain re-executes its whole prefix 2^rounds times
-    // — measured q295 5.1 s -> 30.6 s when this was relaxed to
-    // every-5th-round. WITHOUT dangling nodes the frame is referenced
-    // exactly ONCE per round (the contribution join), so folding two
-    // rounds per materialization is exact (identical arithmetic, no
-    // recompute) and HALVES the materialization count — locally a small
-    // effect (the per-round stages still run), but on the reliable
-    // `checkpoint(dir)` backend each skipped materialization is one
-    // whole state write+read against cluster storage. Superseded frames'
-    // executor blocks are freed immediately — at 50 rounds the dead
-    // frames would otherwise hold ~50x the steady-state storage until
-    // the ContextCleaner got to them.
-    val stride = if (hasDangling) 1 else 2
-    try {
-      var t = 0
-      while (t < iters) {
-        val steps = math.min(stride, iters - t)
-        var nxt = ranks
-        for (_ <- 0 until steps)
-          nxt = step(eDeg, outDeg, nodes, n, nxt, damping, hasDangling)
-        val m = mat(nxt)
-        Materialize.free(ranks)
-        ranks = m
-        t += steps
-      }
-    } finally {
-      // every rank frame is materialized, so the builder caches can go —
-      // a long-lived session running many rankings must not accumulate them
-      e.unpersist(); nodes.unpersist(); outDeg.unpersist(); eDeg.unpersist()
-    }
-    ranks
+    val hasDangling = g.outDeg.count() < n
+    GraphLoop.iterate(g, g.nodes.select(col("id"), (lit(1.0) / n).as("rank")), iters,
+      if (hasDangling) 2 else 1)(step(g, _, g.nodes, damping, hasDangling, _ / n))
   }
 
   /** Convergence-stopped PageRank: iterate until ‖r_t − r_{t−1}‖₁ < eps,
-    * capped at `maxIters`. The L1 delta is one extra 1-row aggregate per
-    * round over the already-materialized rank frames (the power iteration
-    * contracts geometrically at rate ≤ damping, so the stop round is
-    * ~log(eps)/log(damping) — PageRankSpec pins the bound). Returns
-    * (ranks at the stop round, rounds run, converged) — `converged` false
-    * means the cap hit first; callers that must not ship an unconverged
-    * ranking should fail on it (the connectedComponents discipline).
+    * capped at `maxIters`. The L1 delta is one 1-row aggregate per round
+    * over the materialized (id, prev, rank) frame — the [[GraphLoop.until]]
+    * witness (the power iteration contracts geometrically at rate ≤
+    * damping, so the stop round is ~log(eps)/log(damping) — PageRankSpec
+    * pins the bound). Returns (ranks at the stop round, rounds run,
+    * converged) — `converged` false means the cap hit first; callers that
+    * must not ship an unconverged ranking should fail on it (the
+    * connectedComponents discipline).
     */
   def pageRankUntil(edges: DataFrame, eps: Double, maxIters: Int = 50,
       damping: Double = 0.85, srcCol: String = "src", dstCol: String = "dst",
@@ -227,25 +120,12 @@ object PageRank {
       checkpointDir: Option[String] = None): (DataFrame, Int, Boolean) = {
     require(eps > 0, s"pageRankUntil: eps must be > 0, got $eps")
     require(maxIters >= 1, s"pageRankUntil: maxIters must be >= 1, got $maxIters")
-    val mat = Materialize.policy(edges.sparkSession, checkpointDir)
-    val (e0, outDeg0) = prepare(edges, srcCol, dstCol, weightCol)
-    // loop-cached frames get SIZE-derived partition counts (see
-    // Materialize.sizedByKey) — a cache scan's partitioning is frozen at
-    // build time, and these are re-scanned every round
-    val e = Materialize.sizedByKey(e0, "src").cache()
-    val nodes = Materialize.sizedByKey(e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct(), "id").cache()
-    val outDeg = outDeg0.cache()
-    val eDeg = Materialize.sizedByKey(attachDeg(e, outDeg), "src").cache()
-    val n = nodes.count()
-    require(n > 0, "pageRankUntil: empty graph")
-    val hasDangling = outDeg.count() < n
-    val init = mat(nodes.select(col("id"), (lit(1.0) / n).as("rank")))
-    try iterateUntil(init, eps, maxIters,
-      Materialize.policyLazy(edges.sparkSession, checkpointDir))(
-      prev => step(eDeg, outDeg, nodes, n, prev, damping, hasDangling,
-        carryPrev = true))
-    finally { e.unpersist(); nodes.unpersist(); outDeg.unpersist(); eDeg.unpersist() }
+    Using.resource(prepare(edges, srcCol, dstCol, weightCol, checkpointDir, maxIters)) { g =>
+      val n = g.nodes.count()
+      require(n > 0, "pageRankUntil: empty graph")
+      ranksUntil(g, g.nodes.select(col("id"), (lit(1.0) / n).as("rank")), n, eps, maxIters,
+        damping)
+    }
   }
 
   /** Warm-start re-ranking: resume the eps-stopped iteration from a PRIOR
@@ -265,66 +145,28 @@ object PageRank {
       checkpointDir: Option[String] = None): (DataFrame, Int, Boolean) = {
     require(eps > 0, s"pageRankResume: eps must be > 0, got $eps")
     require(maxIters >= 1, s"pageRankResume: maxIters must be >= 1, got $maxIters")
-    val mat = Materialize.policy(edges.sparkSession, checkpointDir)
-    val (e0, outDeg0) = prepare(edges, srcCol, dstCol, weightCol)
-    // loop-cached frames get SIZE-derived partition counts (see
-    // Materialize.sizedByKey) — a cache scan's partitioning is frozen at
-    // build time, and these are re-scanned every round
-    val e = Materialize.sizedByKey(e0, "src").cache()
-    val nodes = Materialize.sizedByKey(e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct(), "id").cache()
-    val outDeg = outDeg0.cache()
-    val eDeg = Materialize.sizedByKey(attachDeg(e, outDeg), "src").cache()
-    val n = nodes.count()
-    require(n > 0, "pageRankResume: empty graph")
-    val hasDangling = outDeg.count() < n
-    try {
-      val joined = nodes.join(
-        init.select(col("id"), col("rank").as("r0")), Seq("id"), "left")
-        .select(col("id"), coalesce(col("r0"), lit(1.0 / n)).as("r0")).cache()
+    Using.resource(prepare(edges, srcCol, dstCol, weightCol, checkpointDir, maxIters)) { g =>
+      val n = g.nodes.count()
+      require(n > 0, "pageRankResume: empty graph")
+      val joined = g.shared(g.nodes.join(
+          init.select(col("id"), col("rank").as("r0")), Seq("id"), "left")
+        .select(col("id"), coalesce(col("r0"), lit(1.0 / n)).as("r0")))
       val total = joined.agg(sum(col("r0"))).collect()(0).getDouble(0)
       require(total > 0, "pageRankResume: init ranks must sum > 0 over the node set")
-      val start = mat(joined.select(col("id"), (col("r0") / total).as("rank")))
-      joined.unpersist()
-      iterateUntil(start, eps, maxIters,
-        Materialize.policyLazy(edges.sparkSession, checkpointDir))(
-        prev => step(eDeg, outDeg, nodes, n, prev, damping, hasDangling,
-          carryPrev = true))
-    } finally { e.unpersist(); nodes.unpersist(); outDeg.unpersist(); eDeg.unpersist() }
+      ranksUntil(g, joined.select(col("id"), (col("r0") / total).as("rank")), n, eps,
+        maxIters, damping)
+    }
   }
 
-  /** Shared eps-stopped driver loop. `next` runs one update with
-    * `carryPrev = true`, so each materialized frame is (id, prev, rank)
-    * and the L1 delta is ONE scan-aggregate over it — the per-round
-    * join job the old shape paid (prev ⋈ cur on id) is gone; the pairs
-    * and |r_t − r_{t−1}| terms are identical, only float summation order
-    * can differ (the documented ~1e-12 band; every eps sits far away).
-    *
-    * WITNESS FUSION: the frame materializes LAZILY and the delta
-    * aggregate is the job that computes (and persists) it — one job per
-    * round instead of materialize-then-aggregate (guide §1.2: the
-    * per-round stage shapes are identical, only the job count halves).
-    */
-  private def iterateUntil(init: DataFrame, eps: Double, maxIters: Int,
-      matLazy: DataFrame => DataFrame)(next: DataFrame => DataFrame)
-      : (DataFrame, Int, Boolean) = {
-    var ranks = init
-    var t = 0
-    var converged = false
-    while (!converged && t < maxIters) {
-      val cur = matLazy(next(ranks))
-      val delta = cur.agg(sum(abs(col("rank") - col("prev"))))
-        .collect()(0).getDouble(0)
-      // the previous frame is dead once the delta has read it — free its
-      // executor blocks now, not at some future ContextCleaner GC. `init`
-      // belongs to the caller (pageRankResume passes a frame the caller
-      // may still hold); only frames this loop created are freed.
-      if (!(ranks eq init)) Materialize.free(ranks)
-      ranks = cur.select(col("id"), col("rank"))
-      t += 1
-      converged = delta < eps
-    }
-    (ranks, t, converged)
+  /** The eps-stopped rounds of [[pageRankUntil]] and [[pageRankResume]]. */
+  private def ranksUntil(g: GraphLoop.Graph, init: DataFrame, n: Long, eps: Double,
+      maxIters: Int, damping: Double): (DataFrame, Int, Boolean) = {
+    val hasDangling = g.outDeg.count() < n
+    val (cur, t, converged) = GraphLoop.until(init, maxIters, g.matLazy)(prev =>
+      step(g, prev, prev.select(col("id"), col("rank").as("prev")), damping, hasDangling,
+        _ / n))((_, cur) =>
+      cur.agg(sum(abs(col("rank") - col("prev")))).collect()(0).getDouble(0) < eps)
+    (cur.select(col("id"), col("rank")), t, converged)
   }
 
   /** Personalized PageRank: teleport (and dangling mass) flow to the
@@ -332,9 +174,9 @@ object PageRank {
     * r'(v) = (1−d)·p(v) + d·(Σ_{u→v} r(u)/deg(u) + danglingMass·p(v))
     * with p the normalized seed weights (0 off-seed). The seed-biased
     * random walk is the standard graph-expansion primitive: "rank the
-    * corpus by link-proximity to this curated set". Same per-iteration
-    * shape and materialization rule as [[pageRank]]; `seeds` is
-    * (idCol, weightCol ≥ 0), joined once and carried per round.
+    * corpus by link-proximity to this curated set". Same round and stride
+    * as [[pageRank]]; `seeds` is (idCol, weightCol ≥ 0), joined once and
+    * carried per round.
     */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame, iters: Int,
       damping: Double = 0.85, srcCol: String = "src", dstCol: String = "dst",
@@ -344,59 +186,18 @@ object PageRank {
     require(iters >= 1, s"personalizedPageRank: iters must be >= 1, got $iters")
     require(damping > 0 && damping < 1,
       s"personalizedPageRank: damping in (0,1), got $damping")
-    val mat = Materialize.policy(edges.sparkSession, checkpointDir)
-    val (e0, outDeg0) = prepare(edges, srcCol, dstCol, edgeWeightCol)
-    val e = Materialize.sizedByKey(e0, "src").cache()
-    val rawSeeds = seeds.select(col(idCol).as("id"),
-      col(weightCol).cast("double").as("w"))
-    val total = rawSeeds.agg(sum(col("w"))).collect()(0).getDouble(0)
-    require(total > 0, "personalizedPageRank: seed weights must sum > 0")
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id")))
-      .union(rawSeeds.select("id")).distinct()
-    val outDeg = outDeg0.cache()
-    val p = Materialize.sizedByKey(nodes.join(rawSeeds, Seq("id"), "left")
-      .select(col("id"), (coalesce(col("w"), lit(0.0)) / total).as("p")), "id").cache()
-    val eDeg = Materialize.sizedByKey(attachDeg(e, outDeg), "src").cache()
-    // same once-per-call dangling detection as [[pageRank]]: nodes here
-    // includes seed ids, so count p (== |nodes|) against outDeg
-    val hasDangling = outDeg.count() < p.count()
-    def pprStep(prev: DataFrame): DataFrame = {
-      val contribs = contributions(eDeg, prev)
-      val base = p.join(contribs, col("id") === col("cid"), "left")
-      if (hasDangling) {
-        val dangling = prev.join(outDeg, col("id") === col("src"), "left_anti")
-          .agg(coalesce(sum(col("rank")), lit(0.0)).as("dmass"))
-        base.crossJoin(broadcast(dangling))
-          .select(col("id"),
-            (lit(1.0 - damping) * col("p") + lit(damping) *
-              (coalesce(col("contrib"), lit(0.0)) + col("dmass") * col("p")))
-              .as("rank"))
-      } else base.select(col("id"),
-        (lit(1.0 - damping) * col("p") + lit(damping) *
-          coalesce(col("contrib"), lit(0.0))).as("rank"))
+    Using.resource(prepare(edges, srcCol, dstCol, edgeWeightCol, checkpointDir, iters)) { g =>
+      val rawSeeds = seeds.select(col(idCol).as("id"), col(weightCol).cast("double").as("w"))
+      val total = rawSeeds.agg(sum(col("w"))).collect()(0).getDouble(0)
+      require(total > 0, "personalizedPageRank: seed weights must sum > 0")
+      val p = g.shared(Materialize.sizedByKey(g.ids.union(rawSeeds.select("id")).distinct()
+        .join(rawSeeds, Seq("id"), "left")
+        .select(col("id"), (coalesce(col("w"), lit(0.0)) / total).as("p")), "id"))
+      // nodes here include seed ids, so count p (== |nodes|) against outDeg
+      val hasDangling = g.outDeg.count() < p.count()
+      GraphLoop.iterate(g, p.select(col("id"), col("p").as("rank")), iters,
+        if (hasDangling) 2 else 1)(step(g, _, p, damping, hasDangling, _ * col("p")))
     }
-    var ranks = mat(p.select(col("id"), col("p").as("rank")))
-    // the [[pageRank]] reference-count rule: without dangling nodes the
-    // rank frame is referenced once per round, so fold two rounds per
-    // materialization job; with dangling it is referenced twice and
-    // every round must materialize
-    val stride = if (hasDangling) 1 else 2
-    try {
-      var t = 0
-      while (t < iters) {
-        val steps = math.min(stride, iters - t)
-        var nxt: DataFrame = ranks
-        for (_ <- 0 until steps) nxt = pprStep(nxt)
-        val m = mat(nxt)
-        Materialize.free(ranks)
-        ranks = m
-        t += steps
-      }
-    } finally {
-      e.unpersist(); outDeg.unpersist(); p.unpersist(); eDeg.unpersist()
-    }
-    ranks
   }
 
   /** Convergence instrument: ‖r_T − r_{T−1}‖₁ — one extra iteration from
@@ -413,18 +214,15 @@ object PageRank {
   }
 
   /** One update step from an existing rank vector (the [[pageRank]] loop
-    * body, exposed for the delta card and for incremental re-ranking).
+    * body, exposed for the delta card and for incremental re-ranking). The
+    * graph is prepared for a single round: only its edge leaf materializes,
+    * and the returned frame reads it.
     */
   def pageRankStep(edges: DataFrame, ranks: DataFrame, damping: Double = 0.85,
       srcCol: String = "src", dstCol: String = "dst",
-      weightCol: Option[String] = None): DataFrame = {
-    val (e, outDeg) = prepare(edges, srcCol, dstCol, weightCol)
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct().cache()
-    try {
-      val n = nodes.count()
-      val hasDangling = outDeg.count() < n
-      step(attachDeg(e, outDeg), outDeg, nodes, n, ranks, damping, hasDangling)
-    } finally nodes.unpersist()
-  }
+      weightCol: Option[String] = None): DataFrame =
+    Using.resource(prepare(edges, srcCol, dstCol, weightCol, None, 1)) { g =>
+      val n = g.nodes.count()
+      g.result(step(g, ranks, g.nodes, damping, g.outDeg.count() < n, _ / n))
+    }
 }

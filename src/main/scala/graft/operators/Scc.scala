@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.util.Using
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -34,8 +36,10 @@ import org.apache.spark.sql.functions._
   * The min-label fixpoint is convergence-stopped via a 1-row aggregate
   * of sum(label): labels are monotone non-increasing, so the sum is
   * strictly decreasing exactly until the fixpoint (summed as
-  * decimal(38,0) — exact, overflow-proof at any node count). Frames
-  * materialize per round ([[Materialize]]).
+  * decimal(38,0) — exact, overflow-proof at any node count). The
+  * fixpoints run through [[GraphLoop.until]] (witness fusion and
+  * freeing rules there); the trim and wave loops accumulate their
+  * assignments and free their own superseded frames.
   *
   * Ids must be numeric (labels are compared with min); hash or
   * rank-index string ids first. Self-loops are ignored (they never
@@ -46,9 +50,8 @@ import org.apache.spark.sql.functions._
 object Scc {
 
   /** Exact label sum — the monotone convergence witness. */
-  private def labelSum(lab: DataFrame): java.math.BigDecimal =
-    lab.agg(sum(col("lab").cast("decimal(38,0)")).as("s"))
-      .head().getDecimal(0)
+  private def labelSum(lab: DataFrame): BigDecimal =
+    BigDecimal(lab.agg(sum(col("lab").cast("decimal(38,0)")).as("s")).head().getDecimal(0))
 
   /** Min-label fixpoint over `e(from, to)`: lab(v) = min id with a
     * directed path to v (including v). Each round combines the one-hop
@@ -69,17 +72,10 @@ object Scc {
     * somewhere along its path), so the sum witness is unchanged.
     * `maxInner` guards the worst case loudly.
     */
-  private def minLabelFixpoint(e: DataFrame, nodes: DataFrame, maxInner: Int,
-      matLazy: DataFrame => DataFrame): DataFrame = {
-    // WITNESS FUSION (the PageRank.iterateUntil discipline): every round's
-    // frame materializes LAZILY and the labelSum witness is the job that
-    // computes and persists it — one job per round instead of two.
-    var lab = matLazy(nodes.select(col("id"), col("id").as("lab")))
-    var prevSum = labelSum(lab)
-    var converged = false
-    var it = 0
-    while (!converged && it < maxInner) {
-      it += 1
+  private def minLabelFixpoint(g: GraphLoop.Graph, e: DataFrame, nodes: DataFrame,
+      maxInner: Int): DataFrame = {
+    val (lab, _, converged) = GraphLoop.until(nodes.select(col("id"), col("id").as("lab")),
+        maxInner, g.matLazy) { lab =>
       // ONE join per round: the pointer-jump term lab(lab(v)) is exactly
       // a min-label propagation over the LABEL EDGES (lab(v) → v) — lab
       // reaches v, so whatever reaches lab reaches v — so e ∪ labEdges
@@ -93,34 +89,34 @@ object Scc {
       val prop = lab.join(e.unionByName(labEdges), col("id") === col("from"))
         .groupBy(col("to").as("pid"))
         .agg(min(col("lab")).as("cand"))
-      val nxt = matLazy(lab
-        .join(prop, col("id") === col("pid"), "left")
-        .select(col("id"), least(col("lab"),
-          coalesce(col("cand"), col("lab"))).as("lab")))
-      val s = labelSum(nxt) // computes AND persists nxt (witness fusion)
-      Materialize.free(lab)
-      lab = nxt
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-    }
+      lab.join(prop, col("id") === col("pid"), "left")
+        .select(col("id"), least(col("lab"), coalesce(col("cand"), col("lab"))).as("lab"))
+    }(new GraphLoop.Unchanged(labelSum))
     require(converged,
       s"Scc: min-label fixpoint did not converge in $maxInner rounds — " +
         "graph diameter exceeds the bound; raise maxInner")
     lab
   }
 
+  private def prepare(edges: DataFrame, srcCol: String, dstCol: String,
+      checkpointDir: Option[String], maxInner: Int) =
+    GraphLoop.prepare(edges, srcCol, dstCol, dropLoops = true,
+      checkpointDir = checkpointDir, rounds = maxInner)
+
   /** SCC assignment (id, scc). */
   def scc(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
       maxWaves: Int = 50, maxInner: Int = 200,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val spark = edges.sparkSession
-    val mat = Materialize.policy(spark, checkpointDir)
-    val matLazy = Materialize.policyLazy(spark, checkpointDir)
+      checkpointDir: Option[String] = None): DataFrame =
+    Using.resource(prepare(edges, srcCol, dstCol, checkpointDir, maxInner))(
+      g => g.result(assign(g, maxWaves, maxInner)))
 
-    var rem = mat(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .filter(col("src") =!= col("dst")).distinct())
-    var nodes = mat(rem.select(col("src").as("id"))
-      .union(rem.select(col("dst").as("id"))).distinct())
+  /** The trim/color/peel waves over a prepared graph; the graph's own
+    * edge and node frames stay the graph's (freed on its `close`).
+    */
+  private def assign(g: GraphLoop.Graph, maxWaves: Int, maxInner: Int): DataFrame = {
+    val (mat, matLazy) = (g.mat, g.matLazy)
+    var rem = g.e
+    var nodes = g.nodes
     // empty start (all edges were self-loops / input empty) returns the
     // empty assignment with the right schema instead of null. Seeded from
     // an explicitly EMPTY frame, not limit(0) over `nodes`: the nodes
@@ -129,6 +125,7 @@ object Scc {
     // that rule excluded the returned frame would chase freed blocks
     var result: DataFrame = {
       val idT = nodes.schema("id").dataType
+      val spark = g.e.sparkSession
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType(Seq(
@@ -140,6 +137,7 @@ object Scc {
 
     def accumulate(a: DataFrame): Unit =
       result = result.unionByName(a)
+    def release(df: DataFrame): Unit = if (!(df eq g.e) && !(df eq g.nodes)) Materialize.free(df)
 
     while (remaining > 0 && wave < maxWaves) {
       wave += 1
@@ -177,7 +175,10 @@ object Scc {
           live = newLive
           liveE = newE
           liveN -= nTrivial
-        } else trimmed = false
+        } else {
+          Materialize.free(trivial)
+          trimmed = false
+        }
       }
 
       if (liveN > 0) {
@@ -188,16 +189,14 @@ object Scc {
         import scala.concurrent.{Await, Future}
         import scala.concurrent.ExecutionContext.Implicits.global
         import scala.concurrent.duration.Duration
-        val ff = Future(minLabelFixpoint(
-          liveE.select(col("src").as("from"), col("dst").as("to")), live,
-          maxInner, matLazy))
-        val gf = Future(minLabelFixpoint(
-          liveE.select(col("dst").as("from"), col("src").as("to")), live,
-          maxInner, matLazy))
+        val ff = Future(minLabelFixpoint(g,
+          liveE.select(col("src").as("from"), col("dst").as("to")), live, maxInner))
+        val bf = Future(minLabelFixpoint(g,
+          liveE.select(col("dst").as("from"), col("src").as("to")), live, maxInner))
         val f = Await.result(ff, Duration.Inf)
-        val g = Await.result(gf, Duration.Inf)
+        val b = Await.result(bf, Duration.Inf)
         val fg = mat(f.join(
-            g.select(col("id").as("gid"), col("lab").as("glab")),
+            b.select(col("id").as("gid"), col("lab").as("glab")),
             col("id") === col("gid"))
           .select(col("id"), col("lab").as("flab"), col("glab")))
         val assigned = fg.filter(col("flab") === col("glab"))
@@ -225,21 +224,22 @@ object Scc {
           .select(col("src"), col("dst")))
         // with the next wave's frames materialized, this wave's working
         // frames are dead (result holds only its own mat'd union legs)
-        Materialize.free(f); Materialize.free(g); Materialize.free(fg)
+        Seq(f, b, fg).foreach(Materialize.free)
         if (!(live eq nodes)) Materialize.free(live)
         if (!(liveE eq rem)) Materialize.free(liveE)
-        Materialize.free(nodes); Materialize.free(rem)
+        release(nodes); release(rem)
         nodes = newNodes
         rem = newRem
       } else {
-        if (!(live eq nodes)) { Materialize.free(nodes); nodes = live }
-        if (!(liveE eq rem)) { Materialize.free(rem); rem = liveE }
+        if (!(live eq nodes)) { release(nodes); nodes = live }
+        if (!(liveE eq rem)) { release(rem); rem = liveE }
       }
       remaining = nodes.count()
     }
     require(remaining == 0,
       s"Scc: $remaining nodes unassigned after $maxWaves waves — " +
         "condensation peel depth exceeds the bound; raise maxWaves")
+    release(nodes); release(rem)
     result
   }
 
@@ -247,31 +247,19 @@ object Scc {
     * `e(from, to)` to a fixpoint. Monotone non-decreasing flag sum is the
     * convergence witness (exact long — flags are 0/1).
     */
-  private def reachFlag(e: DataFrame, nodes: DataFrame, seeds: DataFrame,
-      maxInner: Int, matLazy: DataFrame => DataFrame): DataFrame = {
-    // witness fusion: the flag-sum witness computes and persists each
-    // round's frame — one job per round (see minLabelFixpoint)
-    var lab = matLazy(nodes.join(seeds.select(col("id"), lit(1).as("_s")),
-        Seq("id"), "left")
-      .select(col("id"), coalesce(col("_s"), lit(0)).as("flag")))
-    var prev = -1L
-    var cur = lab.agg(sum(col("flag"))).head().getLong(0)
-    var it = 0
-    while (cur != prev && it < maxInner) {
-      it += 1
+  private def reachFlag(g: GraphLoop.Graph, e: DataFrame, seeds: DataFrame,
+      maxInner: Int): DataFrame = {
+    val (lab, _, converged) = GraphLoop.until(g.nodes.join(
+        seeds.select(col("id"), lit(1).as("_s")), Seq("id"), "left")
+      .select(col("id"), coalesce(col("_s"), lit(0)).as("flag")), maxInner, g.matLazy) { lab =>
       val prop = lab.filter(col("flag") === 1)
         .join(e, col("id") === col("from"))
         .select(col("to").as("pid")).distinct()
-      val nxt = matLazy(lab.join(prop, col("id") === col("pid"), "left")
+      lab.join(prop, col("id") === col("pid"), "left")
         .select(col("id"),
-          greatest(col("flag"), when(col("pid").isNull, 0).otherwise(1)).as("flag")))
-      prev = cur
-      cur = nxt.agg(sum(col("flag"))).head().getLong(0)
-      Materialize.free(lab)
-      lab = nxt
-    }
-    require(cur == prev,
-      s"Scc.reachFlag: no fixpoint in $maxInner rounds; raise maxInner")
+          greatest(col("flag"), when(col("pid").isNull, 0).otherwise(1)).as("flag"))
+    }(new GraphLoop.Unchanged(_.agg(sum(col("flag"))).head().getLong(0)))
+    require(converged, s"Scc.reachFlag: no fixpoint in $maxInner rounds; raise maxInner")
     lab
   }
 
@@ -285,44 +273,37 @@ object Scc {
     */
   def bowTie(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
       maxWaves: Int = 50, maxInner: Int = 200,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val spark = edges.sparkSession
-    val mat = Materialize.policy(spark, checkpointDir)
-    val matLazy = Materialize.policyLazy(spark, checkpointDir)
-    val e = mat(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .filter(col("src") =!= col("dst")).distinct())
-    val nodes = mat(e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct())
-    val assign = mat(scc(e, "src", "dst", maxWaves, maxInner, checkpointDir))
+      checkpointDir: Option[String] = None): DataFrame =
+    Using.resource(prepare(edges, srcCol, dstCol, checkpointDir, maxInner)) { g =>
+      val waves = assign(g, maxWaves, maxInner)
+      val assigned = g.pin(waves)
+      Materialize.free(waves)
+      val coreId = assigned.groupBy(col("scc")).agg(count(lit(1)).as("n"))
+        .orderBy(col("n").desc, col("scc")).limit(1)
+        .head().get(0)
+      val core = assigned.filter(col("scc") === lit(coreId)).select(col("id"))
 
-    val coreId = assign.groupBy(col("scc")).agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("scc")).limit(1)
-      .head().get(0)
-    val core = assign.filter(col("scc") === lit(coreId)).select(col("id"))
+      // the two reachability fixpoints are independent — submit concurrently
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      import scala.concurrent.duration.Duration
+      val fwdF = Future(reachFlag(g, g.e.select(col("src").as("from"), col("dst").as("to")),
+        core, maxInner))
+      val bwdF = Future(reachFlag(g, g.e.select(col("dst").as("from"), col("src").as("to")),
+        core, maxInner))
+      val fwd = Await.result(fwdF, Duration.Inf)
+      val bwd = Await.result(bwdF, Duration.Inf)
 
-    // the two reachability fixpoints are independent — submit concurrently
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val fwdF = Future(reachFlag(
-      e.select(col("src").as("from"), col("dst").as("to")), nodes, core,
-      maxInner, matLazy))
-    val bwdF = Future(reachFlag(
-      e.select(col("dst").as("from"), col("src").as("to")), nodes, core,
-      maxInner, matLazy))
-    val fwd = Await.result(fwdF, Duration.Inf)
-    val bwd = Await.result(bwdF, Duration.Inf)
-
-    nodes
-      .join(core.select(col("id"), lit(1).as("_c")), Seq("id"), "left")
-      .join(fwd.select(col("id"), col("flag").as("_f")), "id")
-      .join(bwd.select(col("id"), col("flag").as("_b")), "id")
-      .select(col("id"),
-        when(col("_c") === 1, "core")
-          .when(col("_b") === 1, "in")   // reaches the core (bwd from core)
-          .when(col("_f") === 1, "out")  // reached from the core
-          .otherwise("other").as("cls"))
-  }
+      g.result(g.nodes
+        .join(core.select(col("id"), lit(1).as("_c")), Seq("id"), "left")
+        .join(fwd.select(col("id"), col("flag").as("_f")), "id")
+        .join(bwd.select(col("id"), col("flag").as("_b")), "id")
+        .select(col("id"),
+          when(col("_c") === 1, "core")
+            .when(col("_b") === 1, "in")   // reaches the core (bwd from core)
+            .when(col("_f") === 1, "out")  // reached from the core
+            .otherwise("other").as("cls")))
+    }
 
   /** Condensation DAG: edges between distinct components with multiplicity
     * — (scc_src, scc_dst, cnt), intra-component edges dropped. `assign` is

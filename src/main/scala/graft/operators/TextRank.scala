@@ -45,9 +45,8 @@ object TextRank {
     // lambdas otherwise re-evaluates the split-tokenize expression per
     // element (no cross-lambda subexpression elimination) — O(len²)
     // re-tokenization per doc, measured 7.7 s -> ~1 s at sf0.1
-    val base = docs.select(graft.functions.TextFunctions.tokens(
-        lower(coalesce(col(textCol), lit("")))).as("ts"))
-      .localCheckpoint(true)
+    val base = Materialize.view(docs.select(graft.functions.TextFunctions.tokens(
+        lower(coalesce(col(textCol), lit("")))).as("ts")))
     val ts = col("ts")
     val allPairs = (1 to window).map(d => pairsAt(ts, d))
       .reduce((x, y) => concat(x, y))
@@ -63,6 +62,7 @@ object TextRank {
         greatest(col("a"), col("b")).as("y"))
       .agg(count(lit(1)).cast("double").as("w"))
       .filter(col("w") >= minCount)) // both mirror legs read it — one pass
+    Materialize.free(base) // canon is materialized: the token arrays are dead
     canon.select(col("x").as("src"), col("y").as("dst"), col("w"))
       .unionByName(canon.select(col("y").as("src"), col("x").as("dst"), col("w")))
   }
@@ -72,10 +72,13 @@ object TextRank {
     */
   def tokenRanks(docs: DataFrame, textCol: String, window: Int = 2,
       minCount: Long = 5L, iters: Int = 10,
-      checkpointDir: Option[String] = None): DataFrame =
-    PageRank.pageRank(cooccurrenceEdges(docs, textCol, window, minCount),
-        iters, weightCol = Some("w"), checkpointDir = checkpointDir)
-      .select(col("id").as("token"), col("rank"))
+      checkpointDir: Option[String] = None): DataFrame = {
+    val edges = cooccurrenceEdges(docs, textCol, window, minCount)
+    val ranks = PageRank.pageRank(edges, iters, weightCol = Some("w"),
+      checkpointDir = checkpointDir)
+    Materialize.free(edges) // the ranks are a materialized leaf of their own
+    ranks.select(col("id").as("token"), col("rank"))
+  }
 
   /** Top-`topK` keywords by rank (bounded TakeOrdered, ties to token). */
   def keywords(docs: DataFrame, textCol: String, topK: Int,

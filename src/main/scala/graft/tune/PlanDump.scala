@@ -52,42 +52,6 @@ object PlanDump {
           (lit(1.0) / n).as("rank")).localCheckpoint(true)
         dump("pagerank_step",
           graft.operators.PageRank.pageRankStep(edges, ranks))
-      case "pagerank_round" =>
-        // The PER-ROUND plan A/B, built expression-for-expression from the
-        // two step shapes (old: ranks ⋈ e ⋈ outDeg per round; new:
-        // ranks ⋈ eDeg with the deg join hoisted out of the loop and
-        // cached). The one-shot pageRankStep probe cannot show this —
-        // the deg join must still run once per CALL; inside the iterative
-        // loop it runs once per QUERY instead of once per round.
-        val docs = graft.Tables.documents(spark, sfDir).select(col("doc_id"))
-        val n = docs.count()
-        val e = docs.select(col("doc_id").as("src"),
-            explode(array(lit(0), lit(1), lit(2))).as("j"))
-          .select(col("src"), ((col("src") * 7 + col("j") * 13 + 1) % n).as("dst"))
-          .filter(col("dst") =!= col("src"))
-          .distinct().withColumn("w", lit(1.0)).cache()
-        val outDeg = e.groupBy("src").agg(sum(col("w")).as("deg")).cache()
-        val eDeg = e.join(outDeg, "src").cache()
-        eDeg.count() // populate caches as the loop does
-        val nodes = e.select(col("src").as("id"))
-          .union(e.select(col("dst").as("id"))).distinct().cache()
-        val ranks = nodes.select(col("id"), (lit(1.0) / n).as("rank"))
-          .localCheckpoint(true)
-        def project(base: org.apache.spark.sql.DataFrame) =
-          base.select(col("id"), (lit(0.15 / n) + lit(0.85) *
-            coalesce(col("contrib"), lit(0.0))).as("rank"))
-        val oldRound = project(nodes.join(
-          ranks.join(e, col("id") === col("src")).join(outDeg, "src")
-            .groupBy(col("dst").as("cid"))
-            .agg(sum(col("rank") * col("w") / col("deg")).as("contrib")),
-          col("id") === col("cid"), "left"))
-        val newRound = project(nodes.join(
-          ranks.join(eDeg, col("id") === col("src"))
-            .groupBy(col("dst").as("cid"))
-            .agg(sum(col("rank") * col("w") / col("deg")).as("contrib")),
-          col("id") === col("cid"), "left"))
-        dump("pagerank_round_old", oldRound)
-        dump("pagerank_round_new", newRound)
       case "labelprop_step" =>
         // one full propagate call's plan is iterative; dump 1-iter run
         val docs = graft.Tables.documents(spark, sfDir).select(col("doc_id"))

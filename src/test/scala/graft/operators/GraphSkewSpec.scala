@@ -109,4 +109,27 @@ class GraphSkewSpec extends SparkSpec {
       }
     } finally conf.unset("spark.graft.graph.joinSalt")
   }
+
+  test("the join salt is captured when the graph is prepared, not re-read per round") {
+    // a conf change between prepare and the rounds (toggled mid-call, or
+    // another thread on a shared session) must not split the computation:
+    // the salted edge frame and the rank explosion use the SAME k
+    val n = 2000
+    val e = hotGraph(n)
+    val base = PageRank.pageRank(e, iters = 3)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val conf = spark.conf
+    val g = try {
+      conf.set("spark.graft.graph.joinSalt", "4")
+      GraphLoop.prepare(e, "src", "dst", rounds = 3)
+    } finally conf.unset("spark.graft.graph.joinSalt")
+    val salted = scala.util.Using.resource(g) { g =>
+      assert(g.k == 4 && g.eDeg.columns.contains("salt"))
+      PageRank.ranks(g, 3, 0.85).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    }
+    assert(salted.keySet == base.keySet)
+    base.foreach { case (id, r) =>
+      assert(math.abs(salted(id) - r) < 1e-12, s"rank drift at id=$id: ${salted(id)} vs $r")
+    }
+  }
 }
