@@ -206,12 +206,12 @@ object Main {
             val dfCap = flags.getOrElse("df-cap", "0").toInt
             if (dfCap > 0) {
               // long-lived-session hygiene: own the shingle-table persistence
-              // here — materialize the pairs (localCheckpoint truncates the
-              // lineage back into `sets`), then release the cached table so
+              // here — materialize the pairs (which truncates the lineage
+              // back into `sets`), then release the cached table so
               // repeated CLI invocations don't accumulate pinned storage
               val sets = operators.Dedup.hashedShingleSets(docs, idC, txtC, 3).cache()
-              try operators.Dedup.cappedJaccardPairsFromSets(sets, threshold, dfCap)
-                .localCheckpoint(eager = true)
+              try operators.Materialize.view(
+                operators.Dedup.cappedJaccardPairsFromSets(sets, threshold, dfCap))
               finally sets.unpersist()
             } else operators.Dedup.ngramJaccardPairs(docs, idC, txtC,
               threshold = threshold)

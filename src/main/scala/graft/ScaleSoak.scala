@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Ann, AsofJoin, Bm25, Dedup, Knn, Mixture, Packing, Sampling}
+import graft.operators.{Ann, AsofJoin, Bm25, Dedup, Knn, Materialize, Mixture, Packing,
+  Sampling}
 
 /** Scaling soak (dev tool, not part of the driver contract): measures the
   * flagship scale paths at 100-1000× the driver testdata sizes so the
@@ -369,8 +370,7 @@ object ScaleSoak {
           val i = operators.Ann.ivfIndexWithMeta(metaBase, cents, metaCols = Seq("lab"))
           i.cache(); i.count(); i
         }
-        val stats = operators.Ann.cellSelectivityStats(rIndex, "lab")
-          .localCheckpoint()
+        val stats = Materialize.view(operators.Ann.cellSelectivityStats(rIndex, "lab"))
         def blob(lt: Long): Array[Byte] = PNodeCodec.encodeFramed(
           PredicateNode.namedTyped("lab", OpType.LT, Comparand.IntVal(lt)),
           PNodeCodec.Mode.NamedTyped)
@@ -964,9 +964,9 @@ object ScaleSoak {
       val p10 = operators.Release.Params(budget = nRel * 10)
       val art = timed(s"release [v1 artifacts] over ${nRel} docs (the cached prior release)") {
         val a = operators.Release.artifacts(v1, bench, "doc_id", "text", p10)
-        operators.Release.Artifacts(a.index.localCheckpoint(),
-          a.pairs.localCheckpoint(), a.contam.localCheckpoint(),
-          a.scores.localCheckpoint())
+        operators.Release.Artifacts(Materialize.view(a.index),
+          Materialize.view(a.pairs), Materialize.view(a.contam),
+          Materialize.view(a.scores))
       }
       timed(s"release [from-scratch] over $nRel docs") {
         operators.Release.fromScratch(v2, bench, "doc_id", "text", p10).count()
@@ -980,14 +980,14 @@ object ScaleSoak {
       locally {
         import operators._
         val d = timed("release/incr [1/5] snapshot diff (2 md5 scans + id join)") {
-          Snapshot.diff(v1, v2, "doc_id", "text").localCheckpoint()
+          Materialize.view(Snapshot.diff(v1, v2, "doc_id", "text"))
         }
-        val unchanged = d.filter(col("status") === "unchanged")
-          .select(col("doc_id").cast("long").as("id")).localCheckpoint()
-        val newSlice = v2.join(d.filter(col("status").isin("added", "changed"))
-          .select("doc_id"), Seq("doc_id"), "left_semi").localCheckpoint()
+        val unchanged = Materialize.view(d.filter(col("status") === "unchanged")
+          .select(col("doc_id").cast("long").as("id")))
+        val newSlice = Materialize.view(v2.join(d.filter(col("status").isin("added", "changed"))
+          .select("doc_id"), Seq("doc_id"), "left_semi"))
         val newIdx = timed("release/incr [2/5] signature the new slice only") {
-          Dedup.minhashIndex(newSlice, "doc_id", "text").localCheckpoint()
+          Materialize.view(Dedup.minhashIndex(newSlice, "doc_id", "text"))
         }
         timed("release/incr [3/5] incremental LSH probe vs pruned index") {
           Dedup.minhashLshPairsIncremental(
@@ -1015,7 +1015,7 @@ object ScaleSoak {
             .hashedEmbedding(docs, "doc_id", "text", dim = 16, HashMode.Xx64)
             .select(col("doc_id").as("vec_id"),
               col("hvec").cast("array<float>").as("embedding"))
-          val quant = emb(bench).orderBy("vec_id").limit(8).localCheckpoint()
+          val quant = Materialize.view(emb(bench).orderBy("vec_id").limit(8))
           timed(s"release/index [rebuild] embed+assign ALL $nRel docs") {
             operators.Ann.ivfIndexWithMeta(emb(v2), quant,
               metric = "EUCLIDEAN").count()
@@ -1072,9 +1072,14 @@ object ScaleSoak {
         .createTempDirectory("graft-soak-ckpt").toString
       val tC = System.nanoTime()
       val rC = timed(s"pagerank $nPrNodes nodes, 5 iters, reliable checkpoint") {
-        val r = operators.PageRank.pageRank(edges, iters = 5,
-          checkpointDir = Some(ckptDir))
-        r.agg(sum("rank")).collect()(0).getDouble(0)
+        spark.conf.set("spark.graft.materialize.backend", "reliable")
+        spark.conf.set("spark.graft.materialize.dir", ckptDir)
+        try operators.PageRank.pageRank(edges, iters = 5)
+          .agg(sum("rank")).collect()(0).getDouble(0)
+        finally {
+          spark.conf.unset("spark.graft.materialize.backend")
+          spark.conf.unset("spark.graft.materialize.dir")
+        }
       }
       val dC = (System.nanoTime() - tC) / 1e9
       require(math.abs(rC - 1.0) < 1e-6, s"checkpointed pagerank mass drifted: $rC")

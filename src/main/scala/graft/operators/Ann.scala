@@ -198,12 +198,12 @@ object Ann {
       vecCol: String = "embedding", predicateCol: String = "predicate",
       metadataCols: Seq[String] = Nil, excludeSelf: Boolean = false): DataFrame = {
     require(nProbes.nonEmpty, "filteredRecallCurve needs at least one nProbe")
-    val index = ivfIndexWithMeta(base, centroids, metric, idCol, vecCol, metadataCols)
-      .localCheckpoint()
-    val truth = HybridGroundTruth.knnWithPerQueryPredicates(
+    val index = Materialize.view(
+      ivfIndexWithMeta(base, centroids, metric, idCol, vecCol, metadataCols))
+    val truth = Materialize.view(HybridGroundTruth.knnWithPerQueryPredicates(
         queries, base, k, metric, idCol, vecCol, predicateCol, metadataCols,
         excludeSelf)
-      .select(col("query_id"), col("neighbor_id")).localCheckpoint()
+      .select(col("query_id"), col("neighbor_id")))
     val truthN = truth.groupBy("query_id").agg(count(lit(1)).as("truth_n"))
     val tiers = queries.select(col(idCol).cast("long").as("query_id"),
       col(tierCol).as("tier"))
@@ -300,11 +300,11 @@ object Ann {
     require(nProbes.nonEmpty, "recallCurve needs at least one nProbe")
     val spark = queries.sparkSession
     import spark.implicits._
-    val index = ivfIndex(base, centroids, metric, idCol, vecCol)
-      .localCheckpoint() // assigned once, probed |nProbes| times
-    val truth = Knn.knn(queries, base, k, metric, idCol, vecCol,
+    // assigned once, probed |nProbes| times
+    val index = Materialize.view(ivfIndex(base, centroids, metric, idCol, vecCol))
+    val truth = Materialize.view(Knn.knn(queries, base, k, metric, idCol, vecCol,
         excludeSelf = excludeSelf)
-      .select(col("query_id"), col("neighbor_id")).localCheckpoint()
+      .select(col("query_id"), col("neighbor_id")))
     val nQ = truth.select("query_id").distinct().count()
     val curves = nProbes.map { np =>
       val pred = ivfSearch(queries, index, centroids, k, np, metric,
@@ -743,13 +743,13 @@ object Ann {
       metric: String = "COSINE", idCol: String = "vec_id",
       vecCol: String = "embedding", excludeSelf: Boolean = false): DataFrame = {
     require(configs.nonEmpty, "ivfStalenessCard needs at least one centroid config")
-    val truth = Knn.knn(queries, base, k, metric, idCol, vecCol,
+    val truth = Materialize.view(Knn.knn(queries, base, k, metric, idCol, vecCol,
         excludeSelf = excludeSelf)
-      .select(col("query_id"), col("neighbor_id")).localCheckpoint()
+      .select(col("query_id"), col("neighbor_id")))
     val nQ = truth.select("query_id").distinct().count()
     val total = base.count().toDouble
     configs.map { case (name, cents) =>
-      val index = ivfIndex(base, cents, metric, idCol, vecCol).localCheckpoint()
+      val index = Materialize.view(ivfIndex(base, cents, metric, idCol, vecCol))
       val pred = ivfSearch(queries, index, cents, k, nProbe, metric,
         idCol, vecCol, excludeSelf)
       val hits = pred.select(col("query_id"), col("neighbor_id"))
@@ -890,17 +890,17 @@ object Ann {
       excludeSelf: Boolean = false): DataFrame = {
     require(safeties.nonEmpty, "safetyCalibrationCard needs at least one safety")
     // the index feeds the truth pass plus one leg per grid safety —
-    // materialize it once (no-op if already materialized; see
-    // materializedView): previously every grid cell re-ran the full
+    // materialize it once (no-op if already a leaf; see
+    // Materialize.view): previously every grid cell re-ran the full
     // upstream index assignment. stats/queries stay lazy (broadcast-scale).
-    val idx = materializedView(index)
+    val idx = Materialize.view(index)
     val st = stats
     val qs = queries
-    val truth = HybridGroundTruth.knnWithPerQueryPredicates(
+    val truth = Materialize.view(HybridGroundTruth.knnWithPerQueryPredicates(
         qs, idx.select((Seq(col("id").as(idCol),
           col("vec").as(vecCol)) ++ metadataCols.map(col)): _*),
         k, metric, idCol, vecCol, predicateCol, metadataCols, excludeSelf)
-      .select(col("query_id"), col("neighbor_id")).localCheckpoint()
+      .select(col("query_id"), col("neighbor_id")))
     val truthN = truth.groupBy("query_id").agg(count(lit(1)).as("truth_n"))
     val tiers = qs.select(col(idCol).cast("long").as("query_id"),
       col(tierCol).as("tier"))
@@ -992,16 +992,16 @@ object Ann {
       predicateCol: String = "predicate", metadataCols: Seq[String] = Nil,
       excludeSelf: Boolean = false): DataFrame = {
     val nList = centroids.count().toInt
-    val approx = ivfSearchFiltered(queries, index, centroids, k, nProbe,
-      metric, idCol, vecCol, predicateCol, metadataCols, excludeSelf)
-      .localCheckpoint() // consumed by the starvation count AND the union
+    // consumed by the starvation count AND the union
+    val approx = Materialize.view(ivfSearchFiltered(queries, index, centroids, k, nProbe,
+      metric, idCol, vecCol, predicateCol, metadataCols, excludeSelf))
     // a query is starved if its list is short — including EMPTY (absent
     // from approx entirely), hence the left join from the query relation
-    val starvedIds = queries.select(col(idCol).cast("long").as("query_id"))
+    val starvedIds = Materialize.view(queries.select(col(idCol).cast("long").as("query_id"))
       .join(approx.groupBy("query_id").agg(count(lit(1)).as("n_got")),
         Seq("query_id"), "left")
       .filter(coalesce(col("n_got"), lit(0L)) < k)
-      .select("query_id").localCheckpoint()
+      .select("query_id"))
     val starved = queries.join(
       starvedIds.withColumnRenamed("query_id", idCol), Seq(idCol), "left_semi")
     val exact = ivfSearchFiltered(starved, index, centroids, k, nList,
@@ -1034,14 +1034,31 @@ object Ann {
     */
   def routePlan(queries: DataFrame, stats: DataFrame, metaCol: String,
       exactMax: Long, wideFraction: Double, idCol: String = "vec_id",
-      predicateCol: String = "predicate"): DataFrame = {
+      predicateCol: String = "predicate"): DataFrame =
+    routesAndRollup(queries, stats, metaCol, exactMax, wideFraction, idCol, predicateCol)._1
+
+  /** [[routePlan]] computed once, for a caller that reads only the
+    * routes: the per-value rollup they were planned from is freed.
+    */
+  private def materializedRoutes(queries: DataFrame, stats: DataFrame, metaCol: String,
+      exactMax: Long, wideFraction: Double, idCol: String,
+      predicateCol: String): DataFrame = {
+    val (routes, rollup) = routesAndRollup(queries, stats, metaCol, exactMax, wideFraction,
+      idCol, predicateCol)
+    try Materialize.view(routes) finally Materialize.free(rollup)
+  }
+
+  /** (routes, the materialized per-value rollup they read). */
+  private def routesAndRollup(queries: DataFrame, stats: DataFrame, metaCol: String,
+      exactMax: Long, wideFraction: Double, idCol: String,
+      predicateCol: String): (DataFrame, DataFrame) = {
     require(exactMax >= 0, s"exactMax must be >= 0, got $exactMax")
     require(wideFraction > 0 && wideFraction <= 1,
       s"wideFraction must be in (0, 1], got $wideFraction")
-    val globalStats = stats.groupBy(col(metaCol)).agg(sum("n").as("n"))
-      .localCheckpoint() // tiny: one row per distinct metadata value
+    // tiny: one row per distinct metadata value
+    val globalStats = Materialize.view(stats.groupBy(col(metaCol)).agg(sum("n").as("n")))
     val totalN = globalStats.agg(sum("n").as("total"))
-    queries
+    (queries
       .select(col(idCol).cast("long").as("query_id"),
         col(predicateCol).cast("binary").as("_pred"))
       .crossJoin(broadcast(globalStats))
@@ -1054,7 +1071,7 @@ object Ann {
         when(col("est_eligible") <= exactMax, lit("exact"))
           .when(col("est_eligible") >=
             col("total").cast("double") * wideFraction, lit("wide"))
-          .otherwise(lit("planned")).as("route"))
+          .otherwise(lit("planned")).as("route")), globalStats)
   }
 
   /** ROUTED filtered search: [[routePlan]] splits the query load, each
@@ -1071,17 +1088,6 @@ object Ann {
     * route column makes serving cost attributable per policy — the
     * report card [[routerReportCard]] reads it.
     */
-  /** Materialize a frame that is about to be consumed by several
-    * independent legs of one composed plan — UNLESS it already is a
-    * materialized leaf (a prior localCheckpoint / collected relation), in
-    * which case re-checkpointing would only copy it. Catalyst does not
-    * dedupe common subplans across join/union legs, so an unmaterialized
-    * index passed to a 3-route search is re-assigned once per route (the
-    * q249 plan carried 16 parquet scans / 56 exchanges before this).
-    */
-  private def materializedView(df: DataFrame): DataFrame =
-    Materialize.view(df)
-
   def hybridSearchRouted(queries: DataFrame, index: DataFrame,
       centroids: DataFrame, stats: DataFrame, metaCol: String, k: Int,
       exactMax: Long, wideFraction: Double, nProbeWide: Int, safety: Double,
@@ -1091,14 +1097,17 @@ object Ann {
       excludeSelf: Boolean = false): DataFrame = {
     val nList = centroids.count().toInt
     // the index feeds all three route searches — materialize it once
-    // (no-op when the caller already did). stats/queries are
-    // broadcast-scale relations; re-deriving them per leg is cheaper
-    // than a checkpoint job each (measured on the q246-q249 cards).
-    val idx = materializedView(index)
+    // (no-op when the caller already did; Catalyst does not dedupe common
+    // subplans across join/union legs, so an unmaterialized index is
+    // re-assigned once per route — the q249 plan carried 16 parquet scans
+    // / 56 exchanges before this). stats/queries are broadcast-scale
+    // relations; re-deriving them per leg is cheaper than a checkpoint
+    // job each (measured on the q246-q249 cards).
+    val idx = Materialize.view(index)
     val st = stats
     val qs = queries
-    val routes = routePlan(qs, st, metaCol, exactMax, wideFraction,
-      idCol, predicateCol).localCheckpoint()
+    val routes = materializedRoutes(qs, st, metaCol, exactMax, wideFraction,
+      idCol, predicateCol)
     def slice(route: String): DataFrame = qs.join(
       routes.filter(col("route") === route)
         .select(col("query_id").as(idCol)), Seq(idCol), "left_semi")
@@ -1131,23 +1140,23 @@ object Ann {
       predicateCol: String = "predicate", metadataCols: Seq[String] = Nil,
       excludeSelf: Boolean = false): DataFrame = {
     // materialize the INDEX once for the legs below (routed search ×3
-    // routes, truth pass) — see materializedView; inner hybridSearchRouted
-    // sees the materialized leaf and does not re-checkpoint. stats/queries
-    // stay lazy (broadcast-scale; a checkpoint job each costs more than
+    // routes, truth pass) — see hybridSearchRouted, which sees the
+    // materialized leaf and does not re-checkpoint. stats/queries stay
+    // lazy (broadcast-scale; a checkpoint job each costs more than
     // re-derivation).
-    val idx = materializedView(index)
+    val idx = Materialize.view(index)
     val st = stats
     val qs = queries
-    val routes = routePlan(qs, st, metaCol, exactMax, wideFraction,
-      idCol, predicateCol).localCheckpoint()
+    val routes = materializedRoutes(qs, st, metaCol, exactMax, wideFraction,
+      idCol, predicateCol)
     val pred = hybridSearchRouted(qs, idx, centroids, st, metaCol,
       k, exactMax, wideFraction, nProbeWide, safety, minProbe, maxProbe,
       metric, idCol, vecCol, predicateCol, metadataCols, excludeSelf)
-    val truth = HybridGroundTruth.knnWithPerQueryPredicates(
+    val truth = Materialize.view(HybridGroundTruth.knnWithPerQueryPredicates(
         qs, idx.select((Seq(col("id").as(idCol),
           col("vec").as(vecCol)) ++ metadataCols.map(col)): _*),
         k, metric, idCol, vecCol, predicateCol, metadataCols, excludeSelf)
-      .select(col("query_id"), col("neighbor_id")).localCheckpoint()
+      .select(col("query_id"), col("neighbor_id")))
     val truthN = truth.groupBy("query_id").agg(count(lit(1)).as("truth_n"))
     val hits = pred.select("query_id", "neighbor_id")
       .join(truth, Seq("query_id", "neighbor_id"), "left_semi")

@@ -18,15 +18,15 @@ import graft.functions.TextFunctions
   * billion-word vocabulary still fits the model. Each merge iteration is
   * one pair-explode + sum aggregate (map-side combined, pair-keyed) and a
   * TakeOrdered(1); the segmentation update is a typed per-row kernel (no
-  * shuffle). The vocabulary is `localCheckpoint`ed each round — caching is
+  * shuffle). The vocabulary is materialized each round — caching is
   * NOT enough: a cache leaves the logical plan chained through every
   * previous round, and Catalyst re-analysis + codegen over that growing
   * plan turn superlinear (measured: 10 merges 25 s, 16 merges 79 s, 20
   * merges OOMs an 8 GB driver); the checkpoint truncates each round's
   * plan to the materialized RDD, making per-merge cost flat. Local
   * checkpoints trade executor-loss recovery for speed — a cluster run
-  * that must survive preemption should set a reliable checkpoint dir and
-  * swap `localCheckpoint` for `checkpoint` (same contract).
+  * that must survive preemption sets `spark.graft.materialize.backend`
+  * to `reliable` (same contract; see [[Materialize]]).
   *
   * Determinism: pair ties break on (count desc, left asc, right asc) in
   * binary string order — byte-replayable by any engine. Merge application
@@ -119,17 +119,15 @@ object Bpe {
     require(numMerges >= 0, s"numMerges must be >= 0, got $numMerges")
     val spark = wc.sparkSession
     import spark.implicits._
-    // initial segmentation: one symbol per character
-    var vocab = wc
+    // initial segmentation: one symbol per character. LAZY checkpoint: the
+    // driver-path gate's count() below is the job that computes and
+    // persists the blocks — one job, not a checkpoint job plus a count job
+    // (witness fusion; lineage still truncates at that job's end)
+    var vocab = Materialize.policy(spark, eager = false)(wc
       .select(col("word"), col("cnt"),
         expr("transform(sequence(1, char_length(word)), i -> substring(word, i, 1))")
-          .as("syms"))
+          .as("syms")))
       .as[(String, Long, Array[String])]
-      // LAZY checkpoint: the driver-path gate's count() below is the job
-      // that computes and persists the blocks — one job, not a
-      // checkpoint job plus a count job (witness fusion; lineage still
-      // truncates at that job's end)
-      .localCheckpoint(false)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     if (vocab.count() <= driverThreshold) {
       // driver path: one collect, then the whole merge loop in memory —
@@ -201,8 +199,9 @@ object Bpe {
         case Some((l, r, cnt)) =>
           merges += ((rank, l, r, cnt))
           val prev = vocab
-          vocab = vocab.map { case (w, c, syms) => (w, c, applyMerge(syms, l, r)) }
-            .localCheckpoint() // eager
+          vocab = Materialize.view(
+            vocab.map { case (w, c, syms) => (w, c, applyMerge(syms, l, r)) }.toDF())
+            .as[(String, Long, Array[String])]
           Materialize.free(prev.toDF()) // superseded round's blocks go now
           rank += 1
       }

@@ -36,12 +36,13 @@ object Cooccur {
       symmetric: Boolean = false): DataFrame = {
     require(minCount >= 1 && maxGroupSize >= 2,
       s"pairs: need minCount >= 1 and maxGroupSize >= 2, got $minCount/$maxGroupSize")
-    val gi = df.select(col(groupCol).as("g"), col(itemCol).as("item"))
-      .filter(col("item").isNotNull).distinct().localCheckpoint(true)
+    val gi = Materialize.view(df.select(col(groupCol).as("g"), col(itemCol).as("item"))
+      .filter(col("item").isNotNull).distinct())
     val sized = gi.groupBy("g").agg(count(lit(1)).as("gsz"))
       .filter(col("gsz") <= maxGroupSize)
-    val kept = gi.join(sized.select("g"), "g").localCheckpoint(true)
+    val kept = Materialize.view(gi.join(sized.select("g"), "g"))
     val nGroups = sized.count() // the group universe the pairs come from
+    Materialize.free(gi) // the pairs read only `kept`
     val totals = kept.groupBy(col("item")).agg(count(lit(1)).as("n"))
 
     val a = kept.select(col("g"), col("item").as("a"))

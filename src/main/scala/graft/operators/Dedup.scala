@@ -62,18 +62,6 @@ object Dedup {
         (size(splitParts) - size(kept)).cast("long").as("n_dropped"))
   }
 
-  /** Distinct word-n-gram shingle sets per doc: (id, shingles array).
-    * Tokenization is materialized into a column first so each shingle
-    * position reads the array instead of re-splitting the text (Catalyst
-    * does not CSE through higher-order-function lambdas).
-    */
-  def shingleSets(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    docs.select(col(idCol).as("id"),
-        TextFunctions.tokens(lower(col(textCol))).as("toks"))
-      .select(col("id"),
-        array_distinct(TextFunctions.shinglesFromTokens(col("toks"), n)).as("shingles"))
-      .filter(size(col("shingles")) > 0)
-
   /** Distinct shingle sets reduced to 64-bit hashes: every downstream
     * join/intersection runs over 8-byte keys instead of ~n·8-char strings
     * (collision probability ~|shingles|²/2⁶⁴ — ignorable at any corpus
@@ -281,29 +269,6 @@ object Dedup {
         when(col("id") =!= col("exact_canonical"), col("exact_canonical"))
           .when(col("near_canonical").isNotNull, col("near_canonical"))
           .otherwise(col("id")).as("canonical_id"))
-  }
-
-  private val MersennePrime = (1L << 61) - 1
-
-  /** MinHash signature from a shingles-array column: for each of `numPerms`
-    * universal-hash permutations (a_i·h + b_i mod p), the minimum over the
-    * doc's shingle hashes. Seeded-deterministic, columnar — no per-perm
-    * shuffle.
-    */
-  def minhashSignature(shingles: Column, numPerms: Int, seed: Long = 42L): Column =
-    minhashSignatureFromHashes(transform(shingles, s => xxhash64(s)), numPerms, seed)
-
-  /** Signature over an already-hashed shingle array: numPerms universal
-    * permutations (a·h+b mod p) — Column form for small inputs; the LSH
-    * operator uses the typed kernel below (interpreted lambda eval costs
-    * ~100ns/element-op; the kernel does the same 10k ops/doc in a JVM loop).
-    */
-  private def minhashSignatureFromHashes(hashes: Column, numPerms: Int, seed: Long): Column = {
-    val params = permParams(numPerms, seed)
-    val mins = params.map { case (a, b) =>
-      array_min(transform(hashes, h => pmod(xxhash64(h, lit(a), lit(b)), lit(MersennePrime))))
-    }
-    array(mins: _*)
   }
 
   private def permParams(numPerms: Int, seed: Long): Seq[(Long, Long)] = {
@@ -694,8 +659,7 @@ object Dedup {
     * edges. Output: (id, cluster_id = min id reachable).
     */
   def connectedComponents(pairs: DataFrame, maxIterations: Int = 20,
-      driverEdgeThreshold: Long = 200000,
-      checkpointDir: Option[String] = None): DataFrame = {
+      driverEdgeThreshold: Long = 200000): DataFrame = {
     val edges = pairs.select(col("id_a").as("s"), col("id_b").as("t"))
       .unionByName(pairs.select(col("id_b").as("s"), col("id_a").as("t")))
       .cache()
@@ -741,7 +705,7 @@ object Dedup {
       return ids.sorted.map(id => (id, minOfRoot(find(id)))).toSeq.toDF("id", "cluster")
     }
     val (labels, rounds, converged) =
-      propagateMinLabels(edges, maxIterations, checkpointDir)
+      propagateMinLabels(edges, maxIterations)
     edges.unpersist()
     // FAIL LOUDLY on non-convergence: a still-changing loop that returns
     // anyway hands back SPLIT clusters (wrong dedup groups) with no error —
@@ -765,11 +729,10 @@ object Dedup {
     * witness.
     */
   private[operators] def propagateMinLabels(edges: DataFrame,
-      maxIterations: Int,
-      checkpointDir: Option[String] = None): (DataFrame, Int, Boolean) =
+      maxIterations: Int): (DataFrame, Int, Boolean) =
     GraphLoop.until(edges.select(col("s").as("id")).distinct()
         .select(col("id"), col("id").as("cluster")), maxIterations,
-      Materialize.policyLazy(edges.sparkSession, checkpointDir)) { labels =>
+      Materialize.policy(edges.sparkSession, eager = false)) { labels =>
       val viaNeighbors = edges
         .join(labels.withColumnRenamed("id", "t").withColumnRenamed("cluster", "nc"), "t")
         .groupBy(col("s").as("id"))
@@ -1375,16 +1338,16 @@ object Dedup {
     // Token array materialized FIRST: captured inside the transform lambda
     // it would re-evaluate the split per element (the q313 lambda-CSE
     // lesson, PLANS.md) — bounded here by the fixed sample, fixed anyway.
-    val base = docs.select(col(idCol).cast("long").as("id"),
+    val base = Materialize.view(docs.select(col(idCol).cast("long").as("id"),
         filter(split(lower(coalesce(col(textCol), lit(""))), " "),
-          t => t =!= "").as("toks"))
-      .localCheckpoint()
+          t => t =!= "").as("toks")))
     val shingleArr = when(size(col("toks")) >= n,
       array_distinct(transform(sequence(lit(0), size(col("toks")) - n),
         i => concat_ws(" ", slice(col("toks"), i + 1, lit(n))))))
       .otherwise(array().cast("array<string>"))
-    val docSh = base.select(col("id"), shingleArr.as("shs"))
-      .filter(size(col("shs")) > 0).localCheckpoint()
+    val docSh = Materialize.view(base.select(col("id"), shingleArr.as("shs"))
+      .filter(size(col("shs")) > 0))
+    Materialize.free(base)
 
     // exact Jaccard over co-occurring pairs (the inverted-index stream)
     val sh = docSh.select(col("id"), explode(col("shs")).as("shingle"))
@@ -1414,12 +1377,12 @@ object Dedup {
       (id, sig)
     }.toDF("id", "sig")
 
-    val joined = pairs
+    val joined = Materialize.view(pairs // shared by every config's band comparison
       .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
       .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
       .withColumn("bucket",
-        least(floor(col("s") * nBuckets), lit(nBuckets - 1L)).cast("long"))
-      .localCheckpoint() // shared by every config's band comparison
+        least(floor(col("s") * nBuckets), lit(nBuckets - 1L)).cast("long")))
+    Materialize.free(docSh)
 
     configs.map { case (b, r) =>
       val detected = exists(sequence(lit(0), lit(b - 1)),

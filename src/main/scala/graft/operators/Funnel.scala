@@ -36,9 +36,11 @@ object Funnel {
     import spark.implicits._
 
     // fold: (user_id, t) = conversion time of the previous step
+    val matLazy = Materialize.policy(spark, eager = false)
     var cur: DataFrame = null
     val counts = steps.zipWithIndex.map { case (et, i) =>
       val hits = events.filter(col("event_type") === et)
+      val prev = cur
       cur = if (i == 0) {
         hits.groupBy(col("user_id")).agg(min(col("ts")).as("t"))
       } else {
@@ -50,11 +52,14 @@ object Funnel {
           .filter(col("ts") > col("t") && gapOk)
           .groupBy(col("user_id")).agg(min(col("ts")).as("t"))
       }
-      // witness fusion (the PageRank.iterateUntil discipline): the count
-      // is the job that computes and persists each step's frame
-      cur = cur.localCheckpoint(false)
-      (i + 1, et, cur.count())
+      // witness fusion (the GraphLoop.until discipline): the count is the
+      // job that computes and persists each step's frame
+      cur = matLazy(cur)
+      val n = cur.count()
+      if (prev != null) Materialize.free(prev)
+      (i + 1, et, n)
     }
+    Materialize.free(cur)
     counts.map { case (step, et, n) =>
       val prev = if (step == 1) n else counts(step - 2)._3
       val conv = if (prev == 0) 0.0 else n.toDouble / prev

@@ -126,8 +126,7 @@ private[operators] object GraphLoop {
     */
   def prepare(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: Option[String] = None, dropLoops: Boolean = false,
-      costs: Boolean = false, checkpointDir: Option[String] = None,
-      rounds: Int = 2): Graph = {
+      costs: Boolean = false, rounds: Int = 2): Graph = {
     val sel = edges.select(Seq(col(srcCol).as("src"), col(dstCol).as("dst")) ++
       weightCol.map(c => col(c).cast("double").as("w")): _*)
     val kept = if (dropLoops) sel.filter(col("src") =!= col("dst")) else sel
@@ -139,8 +138,8 @@ private[operators] object GraphLoop {
         kept.filter(col("w") > 0).groupBy("src", "dst").agg(max(col("w")).as("w"))
     }
     // one policy per call: `mat` (eager) and `matLazy` (witness-fused)
-    val mat = Materialize.policy(edges.sparkSession, checkpointDir)
-    val matLazy = Materialize.policyLazy(edges.sparkSession, checkpointDir)
+    val mat = Materialize.policy(edges.sparkSession)
+    val matLazy = Materialize.policy(edges.sparkSession, eager = false)
     new Graph(matLazy(Materialize.sizedByKey(norm, "src")), weightCol.isDefined, mat,
       matLazy, rounds)
   }
@@ -167,11 +166,11 @@ private[operators] object GraphLoop {
 
   /** Witness-stopped rounds from `init`, at most `maxRounds`, each frame
     * materialized by the lazy materializer `matLazy` (a [[Graph]]'s, or
-    * [[Materialize.policyLazy]]): `witness(prev, next)` says whether
-    * `next` is converged and is the job that computes it. An `init` that
-    * is already a materialized leaf is read as is and stays the caller's;
-    * any other is materialized lazily and freed like every superseded
-    * round. Returns (last frame, rounds run, converged) — `converged`
+    * [[Materialize.policy]] with `eager = false`): `witness(prev, next)`
+    * says whether `next` is converged and is the job that computes it. An
+    * `init` that is already a materialized leaf is read as is and stays
+    * the caller's; any other is materialized lazily and freed like every
+    * superseded round. Returns (last frame, rounds run, converged) — `converged`
     * false means the cap hit first.
     */
   def until(init: DataFrame, maxRounds: Int, matLazy: DataFrame => DataFrame)(

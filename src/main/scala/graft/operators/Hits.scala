@@ -50,11 +50,10 @@ object Hits {
     * Id-type-agnostic — equality joins only, no arithmetic on ids.
     */
   def hits(edges: DataFrame, iters: Int,
-      srcCol: String = "src", dstCol: String = "dst",
-      checkpointDir: Option[String] = None): DataFrame = {
+      srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(iters >= 1, s"hits: iters must be >= 1, got $iters")
     Using.resource(GraphLoop.prepare(edges, srcCol, dstCol, dropLoops = true,
-        checkpointDir = checkpointDir, rounds = iters)) { g =>
+        rounds = iters)) { g =>
       val n = g.nodes.count()
       require(n > 0, "hits: empty graph")
       // one half-step: raw propagation of `scores` across the edges.

@@ -609,7 +609,8 @@ object Hnsw {
     // dodges the self-overwrite check; LAZY, so the tmp write itself is
     // the materializing job (every task computes off the still-live old
     // files; the renames happen only after the write returns)
-    out.localCheckpoint(false).write.partitionBy("cell").parquet(tmp)
+    val staged = Materialize.policy(spark, eager = false)(out)
+    try staged.write.partitionBy("cell").parquet(tmp) finally Materialize.free(staged)
     crash(1)
     val live = new java.io.File(s"$path/cells")
     val aside = new java.io.File(s"$path/.cells-old-$stamp")
@@ -631,8 +632,8 @@ object Hnsw {
     * partition overwrite) — untouched cells' files never move, and the
     * on-disk bundle equals a from-scratch build over the union (the
     * in-memory [[hnswAppend]] parity, at rest). The rebuilt frame is
-    * localCheckpointed before the write because it reads the same path
-    * it overwrites.
+    * materialized before the write because it reads the same path it
+    * overwrites.
     */
   def appendToBundle(newVecs: DataFrame, path: String, m: Int = 8,
       efConstruction: Int = 32, metric: String = "COSINE",
@@ -642,33 +643,36 @@ object Hnsw {
     // LAZY checkpoint: the affected-cell collect below is the job that
     // computes and persists the assignment — the write's rebuild then
     // reads the stored blocks instead of re-running the quantizer pass
-    val assigned = Ann.ivfIndex(newVecs, quant, metric, idCol, vecCol)
-      .localCheckpoint(false)
-    val affected = assigned.select("cell").distinct()
-      .collect().map(_.getLong(0)).sorted
-    if (affected.isEmpty) return
-    // dropDuplicates(id) makes the append IDEMPOTENT: re-appending rows
-    // already in the bundle (an at-least-once streaming replay, a retried
-    // job) rebuilds the same graphs instead of corrupting them with
-    // duplicate points — the property the streaming ingest
-    // (StreamHnsw.appendToBundle) relies on for exactly-once EFFECT
-    val touched = spark.read.parquet(s"$path/cells")
-      .filter(col("cell").isin(affected: _*))
-      .select(col("cell").cast("long").as("cell"), col("id"), col("vec"))
-      .unionByName(assigned.select(col("cell"), col("id"), col("vec")))
-      .dropDuplicates("id")
-    // lazy checkpoint (was eager): the rebuilt frame reads the same path
-    // it overwrites, so it must be fully computed off the OLD files
-    // before any of them move — the write job's TASKS do exactly that
-    // (dynamic partition overwrite only deletes/renames at job COMMIT,
-    // after every task has finished computing), so the write itself is
-    // the materializing job and the rebuild runs ONE pass, not
-    // compute-store-reread-write
-    buildGraphs(touched, m, efConstruction, metric)
-      .localCheckpoint(false)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cell").parquet(s"$path/cells")
+    val matLazy = Materialize.policy(spark, eager = false)
+    val assigned = matLazy(Ann.ivfIndex(newVecs, quant, metric, idCol, vecCol))
+    try {
+      val affected = assigned.select("cell").distinct()
+        .collect().map(_.getLong(0)).sorted
+      if (affected.nonEmpty) {
+        // dropDuplicates(id) makes the append IDEMPOTENT: re-appending rows
+        // already in the bundle (an at-least-once streaming replay, a
+        // retried job) rebuilds the same graphs instead of corrupting them
+        // with duplicate points — the property the streaming ingest
+        // (StreamHnsw.appendToBundle) relies on for exactly-once EFFECT
+        val touched = spark.read.parquet(s"$path/cells")
+          .filter(col("cell").isin(affected: _*))
+          .select(col("cell").cast("long").as("cell"), col("id"), col("vec"))
+          .unionByName(assigned.select(col("cell"), col("id"), col("vec")))
+          .dropDuplicates("id")
+        // lazy checkpoint (was eager): the rebuilt frame reads the same
+        // path it overwrites, so it must be fully computed off the OLD
+        // files before any of them move — the write job's TASKS do exactly
+        // that (dynamic partition overwrite only deletes/renames at job
+        // COMMIT, after every task has finished computing), so the write
+        // itself is the materializing job and the rebuild runs ONE pass,
+        // not compute-store-reread-write
+        val rebuilt = matLazy(buildGraphs(touched, m, efConstruction, metric))
+        try rebuilt.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("cell").parquet(s"$path/cells")
+        finally Materialize.free(rebuilt)
+      }
+    } finally Materialize.free(assigned)
   }
 
   /** Delete ids from a PERSISTED bundle EAGERLY: affected cells rebuild
@@ -702,15 +706,16 @@ object Hnsw {
       .select(col("cell").cast("long").as("cell"), col("id"), col("vec"))
     // lazy: the write is the materializing job (see appendToBundle); the
     // stillThere probe below then reads the persisted blocks
-    val rebuilt = buildGraphs(survivors, m, efConstruction, metric)
-      .localCheckpoint(false)
-    rebuilt.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cell").parquet(s"$path/cells")
+    val rebuilt = Materialize.policy(spark, eager = false)(
+      buildGraphs(survivors, m, efConstruction, metric))
     // dynamic overwrite cannot express "this cell is now empty" (no rows
     // → no partition in the write); drop those directories explicitly
-    val stillThere = rebuilt.select("cell").distinct()
-      .collect().map(_.getLong(0)).toSet
+    val stillThere = try {
+      rebuilt.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("cell").parquet(s"$path/cells")
+      rebuilt.select("cell").distinct().collect().map(_.getLong(0)).toSet
+    } finally Materialize.free(rebuilt)
     affected.filterNot(stillThere).foreach { c =>
       val dir = new java.io.File(s"$path/cells/cell=$c")
       def rmTree(f: java.io.File): Unit = {

@@ -131,13 +131,4 @@ object HtmlExtract {
     val ex = udf((h: String) => extractText(h, minChars, maxLinkDensity))
     docs.select(col(idCol), ex(col(htmlCol)).as("text"))
   }
-
-  /** [[extract]] with the title kept as metadata: (idCol, title, text). */
-  def extractWithTitle(docs: DataFrame, idCol: String, htmlCol: String,
-      minChars: Int = 25, maxLinkDensity: Double = 0.34): DataFrame = {
-    val ex = udf((h: String) => extractText(h, minChars, maxLinkDensity))
-    val ti = udf((h: String) => extractTitle(h))
-    docs.select(col(idCol), ti(col(htmlCol)).as("title"),
-      ex(col(htmlCol)).as("text"))
-  }
 }

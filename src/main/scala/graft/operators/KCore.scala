@@ -20,8 +20,9 @@ import org.apache.spark.sql.functions._
   * the dropped set is usually tiny). Rounds run through
   * [[GraphLoop.until]] with the survivor count as the witness — the
   * survivor relation is referenced twice (degree pass + edge filter), so
-  * every round materializes; pass `checkpointDir` for reliable-storage
-  * checkpointing on a real cluster. Rounds are data-dependent but ≤ the peel depth, which on
+  * every round materializes; set `spark.graft.materialize.backend=reliable`
+  * (and `spark.graft.materialize.dir`) for reliable-storage checkpointing
+  * on a real cluster. Rounds are data-dependent but ≤ the peel depth, which on
   * power-law graphs is tiny (a planted fixture converges in ≤ 3; the
   * operator fails loudly at `maxRounds` instead of silently returning a
   * non-core — the [[Dedup.connectedComponents]] discipline).
@@ -44,13 +45,13 @@ object KCore {
     * [[LabelProp.symmetrizeWeighted]] merge).
     */
   private def undirected(edges: DataFrame, srcCol: String, dstCol: String,
-      weightCol: Option[String], checkpointDir: Option[String], maxRounds: Int) = {
+      weightCol: Option[String], maxRounds: Int) = {
     val w = weightCol.map(c => col(c).as("w")).toSeq
     val fwd = edges.select(Seq(col(srcCol).as("src"), col(dstCol).as("dst")) ++ w: _*)
     GraphLoop.prepare(fwd.unionByName(fwd.select(Seq(col("dst").as("src"),
         col("src").as("dst")) ++ weightCol.map(_ => col("w")): _*)),
       "src", "dst", weightCol.map(_ => "w"), dropLoops = true,
-      checkpointDir = checkpointDir, rounds = maxRounds)
+      rounds = maxRounds)
   }
 
   /** One peel from the materialized edge leaf `start`: drop every node
@@ -83,11 +84,10 @@ object KCore {
     * directions present). Returns an empty frame when nothing survives.
     */
   def kCoreEdges(edges: DataFrame, k: Int, maxRounds: Int = 50,
-      srcCol: String = "src", dstCol: String = "dst",
-      checkpointDir: Option[String] = None): DataFrame = {
+      srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(k >= 1, s"kCoreEdges: k must be >= 1, got $k")
     require(maxRounds >= 1, s"kCoreEdges: maxRounds must be >= 1, got $maxRounds")
-    Using.resource(undirected(edges, srcCol, dstCol, None, checkpointDir, maxRounds)) { g =>
+    Using.resource(undirected(edges, srcCol, dstCol, None, maxRounds)) { g =>
       val (core, _, rounds, converged) = peel(g, g.e, edgeCount, k, maxRounds)
       require(converged,
         s"kCoreEdges: no fixpoint after $rounds rounds (maxRounds=$maxRounds) — raise maxRounds")
@@ -102,11 +102,10 @@ object KCore {
     * full peel plus |ks|−1 incremental ones.
     */
   def coreMembership(edges: DataFrame, ks: Seq[Int], maxRounds: Int = 50,
-      srcCol: String = "src", dstCol: String = "dst",
-      checkpointDir: Option[String] = None): DataFrame = {
+      srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(ks.nonEmpty && ks == ks.sorted && ks.distinct == ks,
       s"coreMembership: ks must be ascending and distinct: $ks")
-    Using.resource(undirected(edges, srcCol, dstCol, None, checkpointDir, maxRounds)) { g =>
+    Using.resource(undirected(edges, srcCol, dstCol, None, maxRounds)) { g =>
       var cur = g.e
       var curCount = -1L
       g.result(ks.foldLeft(g.e.select(col("src").as("id")).distinct()
@@ -137,12 +136,10 @@ object KCore {
     * surviving (src, dst, w), both directions.
     */
   def sCoreEdges(edges: DataFrame, s: Double, maxRounds: Int = 50,
-      srcCol: String = "src", dstCol: String = "dst", weightCol: String = "w",
-      checkpointDir: Option[String] = None): DataFrame = {
+      srcCol: String = "src", dstCol: String = "dst", weightCol: String = "w"): DataFrame = {
     require(s > 0, s"sCoreEdges: s must be > 0, got $s")
     require(maxRounds >= 1, s"sCoreEdges: maxRounds must be >= 1, got $maxRounds")
-    Using.resource(undirected(edges, srcCol, dstCol, Some(weightCol), checkpointDir,
-        maxRounds)) { g =>
+    Using.resource(undirected(edges, srcCol, dstCol, Some(weightCol), maxRounds)) { g =>
       val (core, _, rounds, converged) = peel(g, g.e, sum(col("w")), s, maxRounds)
       require(converged,
         s"sCoreEdges: no fixpoint after $rounds rounds (maxRounds=$maxRounds) — raise maxRounds")
@@ -161,10 +158,9 @@ object KCore {
     * decomposition.
     */
   def coreness(edges: DataFrame, maxRounds: Int = 200,
-      srcCol: String = "src", dstCol: String = "dst",
-      checkpointDir: Option[String] = None): DataFrame = {
+      srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(maxRounds >= 1, s"coreness: maxRounds must be >= 1, got $maxRounds")
-    Using.resource(undirected(edges, srcCol, dstCol, None, checkpointDir, maxRounds)) { g =>
+    Using.resource(undirected(edges, srcCol, dstCol, None, maxRounds)) { g =>
       var cur = g.e
       // materialized so the later free(result) only ever touches the result
       // frame's own blocks, never a leaf shared with the live edge frame

@@ -22,12 +22,11 @@ import org.apache.spark.sql.functions._
 object Katz {
 
   def katz(edges: DataFrame, iters: Int, alpha: Double = 0.2,
-      srcCol: String = "src", dstCol: String = "dst",
-      checkpointDir: Option[String] = None): DataFrame = {
+      srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(iters >= 1, s"katz: iters must be >= 1, got $iters")
     require(alpha > 0 && alpha < 1, s"katz: alpha in (0,1), got $alpha")
     Using.resource(GraphLoop.prepare(edges, srcCol, dstCol, dropLoops = true,
-        checkpointDir = checkpointDir, rounds = iters)) { g =>
+        rounds = iters)) { g =>
       // the state is read ONCE per round
       GraphLoop.iterate(g, g.nodes.select(col("id"), lit(1.0).as("katz")), iters, 1) { prev =>
         val contribs = prev.join(g.e, col("id") === col("src"))

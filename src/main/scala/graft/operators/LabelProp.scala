@@ -35,8 +35,10 @@ import org.apache.spark.sql.functions._
   * ([[GraphLoop.prepare]]); per round one hash join + one partial-agg
   * shuffle of (dst, contrib) pairs; seeds joined back as a broadcast-size
   * relation; rounds run through [[GraphLoop.iterate]], whose stride and
-  * freeing rules keep lineage O(1) (default `localCheckpoint`; pass
-  * `checkpointDir` for reliable-storage checkpointing on a real cluster).
+  * freeing rules keep lineage O(1) (default `localCheckpoint`; set
+  * `spark.graft.materialize.backend=reliable` and
+  * `spark.graft.materialize.dir` for reliable-storage checkpointing on a
+  * real cluster).
   * State per node is one double — 16 bytes/node cluster-wide.
   */
 object LabelProp {
@@ -73,12 +75,11 @@ object LabelProp {
   def propagate(edges: DataFrame, seeds: DataFrame, iters: Int,
       alpha: Double = 0.8, srcCol: String = "src", dstCol: String = "dst",
       idCol: String = "id", labelCol: String = "label",
-      weightCol: Option[String] = None,
-      checkpointDir: Option[String] = None): DataFrame = {
+      weightCol: Option[String] = None): DataFrame = {
     require(iters >= 1, s"propagate: iters must be >= 1, got $iters")
     require(alpha > 0 && alpha < 1, s"propagate: alpha in (0,1), got $alpha")
     Using.resource(GraphLoop.prepare(edges, srcCol, dstCol, weightCol,
-        checkpointDir = checkpointDir, rounds = iters)) { g =>
+        rounds = iters)) { g =>
       val y = seeds.select(col(idCol).as("id"), col(labelCol).cast("double").as("y"))
       val yFull = g.shared(Materialize.sizedByKey(g.ids.union(y.select("id")).distinct()
         .join(y, Seq("id"), "left")

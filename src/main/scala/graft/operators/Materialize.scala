@@ -12,7 +12,7 @@ import org.apache.spark.storage.StorageLevel
   * graph operators reach this policy through one seam, [[GraphLoop]]: its
   * prepared graph, round drivers, stride and witness rules.
   *
-  * Backends (selected per call via `checkpointDir`, or session-wide via
+  * Backends (selected by the session only:
   * `spark.graft.materialize.backend` = `local` | `disk` | `reliable` plus
   * `spark.graft.materialize.dir` for `reliable`; any other value throws):
   *  - `local` (the default): `localCheckpoint` — truncates lineage into
@@ -28,7 +28,9 @@ import org.apache.spark.storage.StorageLevel
   *    store): the production setting for long iterative jobs on real
   *    clusters; survives executor loss at the cost of one write+read of
   *    the state per round — 16 bytes/node for rank frames, far under any
-  *    shuffle budget.
+  *    shuffle budget. A lazy reliable frame is also persisted in executor
+  *    storage, so its first action computes the rows once and the
+  *    checkpoint write reads them back instead of re-running the lineage.
   *
   * `policy` prepares the SparkContext ONCE per operator call
   * (`setCheckpointDir` creates a fresh UUID subdirectory every time it
@@ -49,25 +51,22 @@ private[graft] object Materialize {
     */
   private val StatCapBytes = 1L << 40
 
-  /** The backend of one call: an explicit `checkpointDir` means
-    * `reliable`; otherwise the session setting, which must name one of the
-    * three backends — a typo throws instead of silently checkpointing into
-    * reliable storage.
+  /** The session's backend, which must name one of the three — a typo
+    * throws instead of silently checkpointing into reliable storage.
     */
-  private def backend(spark: SparkSession, checkpointDir: Option[String]): String =
+  private def backend(spark: SparkSession): String =
     spark.conf.get("spark.graft.materialize.backend", "local") match {
-      case b @ ("local" | "disk" | "reliable") => if (checkpointDir.isDefined) "reliable" else b
+      case b @ ("local" | "disk" | "reliable") => b
       case other => throw new IllegalArgumentException(
         s"spark.graft.materialize.backend must be local, disk or reliable, got '$other'")
     }
 
-  /** Reliable checkpoint directory: the explicit per-call dir wins, then
-    * the session conf, then an already-set SparkContext checkpoint dir.
-    * Set once per materializer (see object scaladoc).
+  /** Reliable checkpoint directory: the session conf, then an already-set
+    * SparkContext checkpoint dir. Set once per materializer (see object
+    * scaladoc).
     */
-  private def reliableDir(spark: SparkSession, explicit: Option[String]): String =
-    explicit
-      .orElse(Option(spark.conf.get("spark.graft.materialize.dir", null)))
+  private def reliableDir(spark: SparkSession): String =
+    Option(spark.conf.get("spark.graft.materialize.dir", null))
       .orElse(spark.sparkContext.getCheckpointDir)
       .getOrElse(sys.props("java.io.tmpdir") + "/graft-ckpt")
 
@@ -80,31 +79,34 @@ private[graft] object Materialize {
     * the end of that first action (Spark fills in any partitions the
     * action skipped), so the plan-growth guarantee is unchanged.
     */
-  def policy(spark: SparkSession, checkpointDir: Option[String],
-      eager: Boolean = true): DataFrame => DataFrame =
-    backend(spark, checkpointDir) match {
-      case "local" =>
-        df => org.apache.spark.sql.graftbridge.Bridge.capStats(
-          df.localCheckpoint(eager), StatCapBytes)
-      case "disk" =>
-        df => org.apache.spark.sql.graftbridge.Bridge.capStats(
-          df.localCheckpoint(eager, StorageLevel.DISK_ONLY), StatCapBytes)
+  def policy(spark: SparkSession, eager: Boolean = true): DataFrame => DataFrame = {
+    val checkpoint: DataFrame => DataFrame = backend(spark) match {
+      case "local" => _.localCheckpoint(eager)
+      case "disk" => _.localCheckpoint(eager, StorageLevel.DISK_ONLY)
       case _ =>
-        spark.sparkContext.setCheckpointDir(reliableDir(spark, checkpointDir))
-        df => org.apache.spark.sql.graftbridge.Bridge.capStats(
-          df.checkpoint(eager), StatCapBytes)
+        spark.sparkContext.setCheckpointDir(reliableDir(spark))
+        df => {
+          val out = df.checkpoint(eager)
+          // a lazy checkpoint writes its files in a second job after the
+          // first action; persisted, that job reads the rows the action
+          // stored instead of recomputing the lineage ([[free]] releases them)
+          if (!eager) out.queryExecution.analyzed match {
+            case l: org.apache.spark.sql.execution.LogicalRDD =>
+              l.rdd.persist(StorageLevel.MEMORY_AND_DISK)
+            case _ =>
+          }
+          out
+        }
     }
-
-  /** [[policy]] with `eager = false` — the witness-fusion form. */
-  def policyLazy(spark: SparkSession,
-      checkpointDir: Option[String]): DataFrame => DataFrame =
-    policy(spark, checkpointDir, eager = false)
+    df => org.apache.spark.sql.graftbridge.Bridge.capStats(checkpoint(df), StatCapBytes)
+  }
 
   /** Materialize a SHARED SUBPLAN once (Catalyst has no cross-join-leg
     * subplan dedup, so an unmaterialized frame referenced by k legs
     * re-executes its whole pipeline k times). Same backend policy as the
-    * iterative seam; frames that are already materialized leaves pass
-    * through untouched (the Release.materialized leaf-skip rule).
+    * iterative seam; frames that are already leaves — materialized
+    * frames, local relations, file and DSv2 scans — pass through untouched
+    * (the Release.materialized leaf-skip rule).
     *
     * `estBytes` (> 0) gates the materialization on size: above
     * `spark.graft.materialize.maxBytes` (default 32 GiB) the frame is
@@ -117,15 +119,13 @@ private[graft] object Materialize {
     */
   def view(df: DataFrame, estBytes: Long = 0L): DataFrame = {
     val spark = df.sparkSession
-    val isLeaf = df.queryExecution.analyzed match {
-      case _: org.apache.spark.sql.execution.LogicalRDD => true
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
-      case _ => false
-    }
+    backend(spark) // a typo throws even when the frame passes through
+    val isLeaf =
+      df.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LeafNode]
     lazy val maxBytes =
       spark.conf.get("spark.graft.materialize.maxBytes", (32L << 30).toString).toLong
     if (isLeaf || (estBytes > 0 && estBytes > maxBytes)) df
-    else policy(spark, None)(df)
+    else policy(spark)(df)
   }
 
   /** Hash-repartition a frame that is about to be CACHED and re-scanned
@@ -162,10 +162,11 @@ private[graft] object Materialize {
     * RDD is the `LogicalRDD` leaf of the returned frame; unpersist it
     * (non-blocking) as soon as the next round's frame is eagerly
     * materialized and the delta/convergence aggregate has read the old
-    * one. Reliable `checkpoint(dir)` frames live in external storage, not
-    * executor memory (the cleaner GCs the files) — no-op for them, and for
-    * any frame that is not a materialized leaf. Freeing a frame twice is
-    * a no-op.
+    * one. Eager reliable `checkpoint(dir)` frames live in external storage,
+    * not executor memory (the cleaner GCs the files) — no-op for them, and
+    * for any frame that is not a materialized leaf; a lazy reliable frame
+    * releases the blocks its first action persisted. Freeing a frame twice
+    * is a no-op.
     */
   def free(df: DataFrame): Unit =
     df.queryExecution.analyzed.collectLeaves().foreach {

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * Spark shape: truncation is `slice` on the array column (codegen'd, no
   * UDF); each sweep point is the repo's exact KNN (broadcast + bounded
   * heap — never a global sort) plus the left-semi recall join. The
-  * full-dim truth is computed ONCE and localCheckpointed across sweep
+  * full-dim truth is computed ONCE and materialized across sweep
   * points. Cost scales linearly in |dims| — at corpus scale run the
   * sweep on a query SAMPLE, which is the standard methodology.
   */
@@ -45,8 +45,8 @@ object Matryoshka {
       s"recallCurve: dims must be within [1, $fullDim] (the vector " +
         s"dimension) — got ${dims.filterNot(d => d >= 1 && d <= fullDim).mkString(", ")}")
 
-    val truth = Knn.knn(queries, base, k, metric, idCol, vecCol)
-      .select(col("query_id"), col("neighbor_id")).localCheckpoint(true)
+    val truth = Materialize.view(Knn.knn(queries, base, k, metric, idCol, vecCol)
+      .select(col("query_id"), col("neighbor_id")))
 
     // sweep points are independent given the materialized truth — submit
     // all of them concurrently (the SCC coloring trick; measured ~2x on
@@ -63,6 +63,7 @@ object Matryoshka {
       }
     }
     val rows = futures.map(Await.result(_, Duration.Inf))
+    Materialize.free(truth)
     rows.toDF("dims", "avg_recall")
   }
 }

@@ -44,11 +44,10 @@ object Neighborhoods {
     * (set semantics; no floats). Self-pairs (dist 0) are excluded.
     */
   def boundedDistances(edges: DataFrame, radius: Int,
-      srcCol: String = "src", dstCol: String = "dst",
-      checkpointDir: Option[String] = None): DataFrame = {
+      srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(radius >= 1, s"boundedDistances: radius >= 1, got $radius")
     Using.resource(GraphLoop.prepare(edges, srcCol, dstCol, dropLoops = true,
-        checkpointDir = checkpointDir, rounds = radius)) { g =>
+        rounds = radius)) { g =>
       // `known` is a LAZY union of the already-materialized shells: every
       // leg is a LogicalRDD, so the anti-join re-reads cached blocks and
       // the per-round "copy the whole visited set into a fresh
@@ -107,10 +106,10 @@ object Neighborhoods {
     */
   def boundedWeightedDistances(edges: DataFrame, seeds: DataFrame, rounds: Int,
       srcCol: String = "src", dstCol: String = "dst", weightCol: String = "w",
-      seedIdCol: String = "id", checkpointDir: Option[String] = None): DataFrame = {
+      seedIdCol: String = "id"): DataFrame = {
     require(rounds >= 1, s"boundedWeightedDistances: rounds >= 1, got $rounds")
     Using.resource(GraphLoop.prepare(edges, srcCol, dstCol, Some(weightCol),
-        dropLoops = true, costs = true, checkpointDir = checkpointDir, rounds = rounds)) { g =>
+        dropLoops = true, costs = true, rounds = rounds)) { g =>
       // the distance frame is read twice per round (relaxation + union)
       GraphLoop.iterate(g, seeds.select(col(seedIdCol).as("id")).distinct()
           .select(col("id"), lit(0.0).as("dist")), rounds, 2) { d =>
@@ -131,11 +130,10 @@ object Neighborhoods {
     * above is the spec's ground truth.
     */
   def hyperBall(edges: DataFrame, radius: Int,
-      srcCol: String = "src", dstCol: String = "dst", lgK: Int = 12,
-      checkpointDir: Option[String] = None): DataFrame = {
+      srcCol: String = "src", dstCol: String = "dst", lgK: Int = 12): DataFrame = {
     require(radius >= 1, s"hyperBall: radius >= 1, got $radius")
     Using.resource(GraphLoop.prepare(edges, srcCol, dstCol, dropLoops = true,
-        checkpointDir = checkpointDir, rounds = radius)) { g =>
+        rounds = radius)) { g =>
       // every round's state is read by the output (its estimate column),
       // so only the initial sketches are the loop's to free
       var state = g.shared(g.ids.distinct().groupBy(col("id"))

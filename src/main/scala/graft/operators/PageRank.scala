@@ -25,9 +25,10 @@ import org.apache.spark.sql.functions._
   *  - rounds run through [[GraphLoop]], which owns the materialization
   *    stride, witness fusion and the freeing of superseded frames, so
   *    lineage/AQE re-planning stays O(1) in the iteration count. Default
-  *    backend is `localCheckpoint`; pass `checkpointDir` for
-  *    reliable-storage `checkpoint` on a real cluster (executor loss
-  *    survives);
+  *    backend is `localCheckpoint`; the session keys
+  *    `spark.graft.materialize.backend=reliable` and
+  *    `spark.graft.materialize.dir` select reliable-storage `checkpoint`
+  *    on a real cluster (executor loss survives);
   *  - ranks are (id, double) — 16 bytes/node; a 10⁹-node host graph is
   *    ~16 GB cluster-wide, far under shuffle budgets.
   *
@@ -47,9 +48,9 @@ import org.apache.spark.sql.functions._
 object PageRank {
 
   private def prepare(edges: DataFrame, srcCol: String, dstCol: String,
-      weightCol: Option[String], checkpointDir: Option[String], rounds: Int) =
+      weightCol: Option[String], rounds: Int) =
     GraphLoop.prepare(edges, srcCol, dstCol, weightCol,
-      checkpointDir = checkpointDir, rounds = rounds)
+      rounds = rounds)
 
   /** One damped update of `ranks` onto the ids of `base`: (id) nodes, the
     * seed frame (id, p), or the rank frame itself as (id, prev) — then the
@@ -87,11 +88,10 @@ object PageRank {
     */
   def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85,
       srcCol: String = "src", dstCol: String = "dst",
-      weightCol: Option[String] = None,
-      checkpointDir: Option[String] = None): DataFrame = {
+      weightCol: Option[String] = None): DataFrame = {
     require(iters >= 1, s"pageRank: iters must be >= 1, got $iters")
     require(damping > 0 && damping < 1, s"pageRank: damping in (0,1), got $damping")
-    Using.resource(prepare(edges, srcCol, dstCol, weightCol, checkpointDir, iters))(
+    Using.resource(prepare(edges, srcCol, dstCol, weightCol, iters))(
       ranks(_, iters, damping))
   }
 
@@ -116,11 +116,10 @@ object PageRank {
     */
   def pageRankUntil(edges: DataFrame, eps: Double, maxIters: Int = 50,
       damping: Double = 0.85, srcCol: String = "src", dstCol: String = "dst",
-      weightCol: Option[String] = None,
-      checkpointDir: Option[String] = None): (DataFrame, Int, Boolean) = {
+      weightCol: Option[String] = None): (DataFrame, Int, Boolean) = {
     require(eps > 0, s"pageRankUntil: eps must be > 0, got $eps")
     require(maxIters >= 1, s"pageRankUntil: maxIters must be >= 1, got $maxIters")
-    Using.resource(prepare(edges, srcCol, dstCol, weightCol, checkpointDir, maxIters)) { g =>
+    Using.resource(prepare(edges, srcCol, dstCol, weightCol, maxIters)) { g =>
       val n = g.nodes.count()
       require(n > 0, "pageRankUntil: empty graph")
       ranksUntil(g, g.nodes.select(col("id"), (lit(1.0) / n).as("rank")), n, eps, maxIters,
@@ -141,11 +140,10 @@ object PageRank {
     */
   def pageRankResume(edges: DataFrame, init: DataFrame, eps: Double,
       maxIters: Int = 50, damping: Double = 0.85, srcCol: String = "src",
-      dstCol: String = "dst", weightCol: Option[String] = None,
-      checkpointDir: Option[String] = None): (DataFrame, Int, Boolean) = {
+      dstCol: String = "dst", weightCol: Option[String] = None): (DataFrame, Int, Boolean) = {
     require(eps > 0, s"pageRankResume: eps must be > 0, got $eps")
     require(maxIters >= 1, s"pageRankResume: maxIters must be >= 1, got $maxIters")
-    Using.resource(prepare(edges, srcCol, dstCol, weightCol, checkpointDir, maxIters)) { g =>
+    Using.resource(prepare(edges, srcCol, dstCol, weightCol, maxIters)) { g =>
       val n = g.nodes.count()
       require(n > 0, "pageRankResume: empty graph")
       val joined = g.shared(g.nodes.join(
@@ -181,12 +179,11 @@ object PageRank {
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame, iters: Int,
       damping: Double = 0.85, srcCol: String = "src", dstCol: String = "dst",
       idCol: String = "id", weightCol: String = "weight",
-      edgeWeightCol: Option[String] = None,
-      checkpointDir: Option[String] = None): DataFrame = {
+      edgeWeightCol: Option[String] = None): DataFrame = {
     require(iters >= 1, s"personalizedPageRank: iters must be >= 1, got $iters")
     require(damping > 0 && damping < 1,
       s"personalizedPageRank: damping in (0,1), got $damping")
-    Using.resource(prepare(edges, srcCol, dstCol, edgeWeightCol, checkpointDir, iters)) { g =>
+    Using.resource(prepare(edges, srcCol, dstCol, edgeWeightCol, iters)) { g =>
       val rawSeeds = seeds.select(col(idCol).as("id"), col(weightCol).cast("double").as("w"))
       val total = rawSeeds.agg(sum(col("w"))).collect()(0).getDouble(0)
       require(total > 0, "personalizedPageRank: seed weights must sum > 0")
@@ -221,7 +218,7 @@ object PageRank {
   def pageRankStep(edges: DataFrame, ranks: DataFrame, damping: Double = 0.85,
       srcCol: String = "src", dstCol: String = "dst",
       weightCol: Option[String] = None): DataFrame =
-    Using.resource(prepare(edges, srcCol, dstCol, weightCol, None, 1)) { g =>
+    Using.resource(prepare(edges, srcCol, dstCol, weightCol, 1)) { g =>
       val n = g.nodes.count()
       g.result(step(g, ranks, g.nodes, damping, g.outDeg.count() < n, _ / n))
     }

@@ -556,14 +556,13 @@ object Pq {
       predicateCol: String = "predicate", metadataCols: Seq[String] = Nil,
       excludeSelf: Boolean = false): DataFrame = {
     val nList = centroids.count().toInt
-    val approx = ivfPqSearchFiltered(queries, index, centroids, codebooks,
-      k, nProbe, idCol, vecCol, predicateCol, metadataCols, excludeSelf)
-      .localCheckpoint()
-    val starvedIds = queries.select(col(idCol).cast("long").as("query_id"))
+    val approx = Materialize.view(ivfPqSearchFiltered(queries, index, centroids, codebooks,
+      k, nProbe, idCol, vecCol, predicateCol, metadataCols, excludeSelf))
+    val starvedIds = Materialize.view(queries.select(col(idCol).cast("long").as("query_id"))
       .join(approx.groupBy("query_id").agg(count(lit(1)).as("n_got")),
         Seq("query_id"), "left")
       .filter(coalesce(col("n_got"), lit(0L)) < k)
-      .select("query_id").localCheckpoint()
+      .select("query_id"))
     val starved = queries.join(
       starvedIds.withColumnRenamed("query_id", idCol), Seq(idCol), "left_semi")
     val exact = ivfPqSearchFiltered(starved, index, centroids, codebooks,

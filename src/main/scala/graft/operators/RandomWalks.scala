@@ -70,12 +70,12 @@ object RandomWalks {
     */
   def walks(edges: DataFrame, starts: DataFrame, length: Int,
       idCol: String = "id", srcCol: String = "src", dstCol: String = "dst",
-      seed: Long = 0L, checkpointDir: Option[String] = None): DataFrame = {
+      seed: Long = 0L): DataFrame = {
     require(length >= 1, s"walks: length must be >= 1, got $length")
     require(seed >= 0 && seed < M,
       s"walks: seed must be in [0, $M) so the mix stays exact, got $seed")
-    val mat = Materialize.policy(edges.sparkSession, checkpointDir)
-    val adj = rankedAdjacency(edges, srcCol, dstCol).localCheckpoint(true)
+    val mat = Materialize.policy(edges.sparkSession)
+    val adj = Materialize.view(rankedAdjacency(edges, srcCol, dstCol))
 
     var cur = mat(starts.select(col(idCol).cast("long").as("walk_id"))
       .distinct()
@@ -87,6 +87,7 @@ object RandomWalks {
         .select(col("walk_id"), col("dst").as("node"), lit(t).as("step")))
       acc = acc.unionByName(cur)
     }
+    Materialize.free(adj) // the walks read only the materialized steps
     acc
   }
 

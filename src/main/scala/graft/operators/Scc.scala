@@ -99,15 +99,14 @@ object Scc {
   }
 
   private def prepare(edges: DataFrame, srcCol: String, dstCol: String,
-      checkpointDir: Option[String], maxInner: Int) =
+      maxInner: Int) =
     GraphLoop.prepare(edges, srcCol, dstCol, dropLoops = true,
-      checkpointDir = checkpointDir, rounds = maxInner)
+      rounds = maxInner)
 
   /** SCC assignment (id, scc). */
   def scc(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
-      maxWaves: Int = 50, maxInner: Int = 200,
-      checkpointDir: Option[String] = None): DataFrame =
-    Using.resource(prepare(edges, srcCol, dstCol, checkpointDir, maxInner))(
+      maxWaves: Int = 50, maxInner: Int = 200): DataFrame =
+    Using.resource(prepare(edges, srcCol, dstCol, maxInner))(
       g => g.result(assign(g, maxWaves, maxInner)))
 
   /** The trim/color/peel waves over a prepared graph; the graph's own
@@ -272,9 +271,8 @@ object Scc {
     * all with the same per-round shapes. Output: (id, cls).
     */
   def bowTie(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
-      maxWaves: Int = 50, maxInner: Int = 200,
-      checkpointDir: Option[String] = None): DataFrame =
-    Using.resource(prepare(edges, srcCol, dstCol, checkpointDir, maxInner)) { g =>
+      maxWaves: Int = 50, maxInner: Int = 200): DataFrame =
+    Using.resource(prepare(edges, srcCol, dstCol, maxInner)) { g =>
       val waves = assign(g, maxWaves, maxInner)
       val assigned = g.pin(waves)
       Materialize.free(waves)

@@ -71,11 +71,9 @@ object TextRank {
     * over the co-occurrence graph. Deterministic to float-summation order.
     */
   def tokenRanks(docs: DataFrame, textCol: String, window: Int = 2,
-      minCount: Long = 5L, iters: Int = 10,
-      checkpointDir: Option[String] = None): DataFrame = {
+      minCount: Long = 5L, iters: Int = 10): DataFrame = {
     val edges = cooccurrenceEdges(docs, textCol, window, minCount)
-    val ranks = PageRank.pageRank(edges, iters, weightCol = Some("w"),
-      checkpointDir = checkpointDir)
+    val ranks = PageRank.pageRank(edges, iters, weightCol = Some("w"))
     Materialize.free(edges) // the ranks are a materialized leaf of their own
     ranks.select(col("id").as("token"), col("rank"))
   }

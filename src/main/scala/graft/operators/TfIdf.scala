@@ -143,15 +143,14 @@ object TfIdf {
       s"need minCount/topK >= 1, got $minCount/$topK")
     val toks = filter(split(lower(coalesce(col(textCol), lit(""))), " "),
       t => t =!= "")
-    val tokRel = docs.select(explode(toks).as("t")).localCheckpoint()
-    val bigrams = docs.select(toks.as("ts"))
+    val tokRel = Materialize.view(docs.select(explode(toks).as("t")))
+    val bigrams = Materialize.view(docs.select(toks.as("ts"))
       .select(explode(when(size(col("ts")) >= 2,
         transform(sequence(lit(0), size(col("ts")) - 2),
           i => struct(element_at(col("ts"), i + 1).as("w1"),
             element_at(col("ts"), i + 2).as("w2"))))
         .otherwise(array().cast("array<struct<w1:string,w2:string>>"))).as("bg"))
-      .select(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-      .localCheckpoint()
+      .select(col("bg.w1").as("w1"), col("bg.w2").as("w2")))
     val uni = tokRel.groupBy(col("t")).agg(count(lit(1)).as("c"))
     val nu = tokRel.agg(count(lit(1)).as("nu"))
     val nb = bigrams.agg(count(lit(1)).as("nb"))

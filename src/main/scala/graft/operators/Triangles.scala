@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * The shared prefix (symmetrize → degree → oriented edges) is computed
   * ONCE per public call and threaded through: `clusteringCoefficients`
   * and `densityCard` reference `ranked` from several join legs, so the
-  * intermediates are `localCheckpoint`ed instead of trusting AQE's
+  * intermediates are materialized ([[Materialize.view]]) instead of trusting AQE's
   * ReusedExchange to dedup identical subtrees (a planner maybe, not a
   * guarantee — the PageRank materialization lesson). PlanShapeSpec
   * asserts the executed plan carries no duplicate degree aggregation.
@@ -33,23 +33,21 @@ import org.apache.spark.sql.functions._
 object Triangles {
 
   /** The once-computed prefix: (oriented edges materialized, degrees
-    * materialized). Both frames are localCheckpointed — small (edge ids /
-    * node ids only) and referenced from multiple join legs downstream.
+    * materialized). Both frames are small (edge ids / node ids only) and
+    * referenced from multiple join legs downstream.
     */
   private def prefix(edges: DataFrame, srcCol: String, dstCol: String)
       : (DataFrame, DataFrame) = {
     val und = LabelProp.symmetrize(edges, srcCol, dstCol)
       .filter(col("src") =!= col("dst"))
-    val deg = und.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
+    val deg = Materialize.view(und.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")))
     // orient low -> high by (deg, id): rank(u) < rank(v)
-    val ranked = und
+    val ranked = Materialize.view(und
       .join(deg.select(col("id").as("src"), col("deg").as("sdeg")), "src")
       .join(deg.select(col("id").as("dst"), col("deg").as("ddeg")), "dst")
       .filter(col("sdeg") < col("ddeg") ||
         (col("sdeg") === col("ddeg") && col("src") < col("dst")))
-      .select(col("src"), col("dst"))
-      .localCheckpoint(true)
+      .select(col("src"), col("dst")))
     (ranked, deg)
   }
 
@@ -90,7 +88,8 @@ object Triangles {
     */
   def triangles(edges: DataFrame, srcCol: String = "src",
       dstCol: String = "dst"): DataFrame = {
-    val (ranked, _) = prefix(edges, srcCol, dstCol)
+    val (ranked, deg) = prefix(edges, srcCol, dstCol)
+    Materialize.free(deg)
     trianglesFromRanked(ranked)
   }
 
@@ -120,19 +119,17 @@ object Triangles {
     */
   def weightedClusteringCoefficients(edges: DataFrame, srcCol: String = "src",
       dstCol: String = "dst", weightCol: String = "w"): DataFrame = {
-    val und = LabelProp.symmetrizeWeighted(edges, srcCol, dstCol, weightCol)
-      .filter(col("src") =!= col("dst")).filter(col("w") > 0)
-      .localCheckpoint(true)
-    val deg = und.groupBy(col("src").as("id"))
-      .agg(count(lit(1)).as("deg"), sum(col("w")).as("strength"))
-      .localCheckpoint(true)
-    val ranked = und
+    val und = Materialize.view(LabelProp.symmetrizeWeighted(edges, srcCol, dstCol, weightCol)
+      .filter(col("src") =!= col("dst")).filter(col("w") > 0))
+    val deg = Materialize.view(und.groupBy(col("src").as("id"))
+      .agg(count(lit(1)).as("deg"), sum(col("w")).as("strength")))
+    val ranked = Materialize.view(und
       .join(deg.select(col("id").as("src"), col("deg").as("sdeg")), "src")
       .join(deg.select(col("id").as("dst"), col("deg").as("ddeg")), "dst")
       .filter(col("sdeg") < col("ddeg") ||
         (col("sdeg") === col("ddeg") && col("src") < col("dst")))
-      .select(col("src"), col("dst"), col("w"))
-      .localCheckpoint(true)
+      .select(col("src"), col("dst"), col("w")))
+    Materialize.free(und)
     val wedge = ranked.as("e1").join(ranked.as("e2"),
         col("e1.src") === col("e2.src") && col("e1.dst") < col("e2.dst"))
       .select(col("e1.src").as("a"), col("e1.dst").as("b"), col("e2.dst").as("c"),
@@ -181,13 +178,13 @@ object Triangles {
     // community strength sum — the card that respects the similarity
     // weights the dedup emitters produce. w ≡ 1.0 (the default) reduces
     // bit-exactly to the count-based unweighted form.
-    val und = (weightCol match {
+    val und = Materialize.view((weightCol match {
       case None => LabelProp.symmetrize(edges, srcCol, dstCol)
         .withColumn("w", lit(1.0))
       case Some(wc) => LabelProp.symmetrizeWeighted(edges, srcCol, dstCol, wc)
-    }).filter(col("src") =!= col("dst")).localCheckpoint(true)
-    val asg = assignment.select(col(idCol).as("id"),
-      col(communityCol).as("community")).localCheckpoint(true)
+    }).filter(col("src") =!= col("dst")))
+    val asg = Materialize.view(assignment.select(col(idCol).as("id"),
+      col(communityCol).as("community")))
     val nNodes = und.select(col("src").as("id")).distinct().count()
     val covered = und.select(col("src").as("id")).distinct()
       .join(asg, Seq("id"), "left_semi").count()
@@ -231,11 +228,15 @@ object Triangles {
         (sum(col("deg")) / 2).cast("long").as("n_edges"),
         sum((col("deg") * (col("deg") - 1)) / 2).cast("double").as("wedges"),
         avg(col("clustering")).as("mean_local"))
-      agg.select(col("n_nodes"), col("n_edges"), lit(nTri).as("n_triangles"),
+      Materialize.view(agg.select(col("n_nodes"), col("n_edges"), lit(nTri).as("n_triangles"),
         when(col("wedges") > 0, lit(3.0) * nTri / col("wedges"))
           .otherwise(lit(0.0)).as("global_clustering"),
-        col("mean_local")).localCheckpoint(true)
-    } finally cc.unpersist()
+        col("mean_local")))
+    } finally {
+      cc.unpersist()
+      Materialize.free(ranked)
+      Materialize.free(deg)
+    }
   }
 
   /** In-degree distribution + log-log power-law fit: (distinct degree
@@ -281,8 +282,8 @@ object Triangles {
     */
   def healthCard(edges: DataFrame, srcCol: String = "src",
       dstCol: String = "dst"): DataFrame = {
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint(true)
+    val e = Materialize.view(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      .filter(col("src") =!= col("dst")).distinct())
     val nNodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct().count()
     val m = e.count()

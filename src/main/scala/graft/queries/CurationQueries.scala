@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{AsofJoin, Bm25, Dsir, Mixture, Packing, Sampling}
+import graft.operators.{AsofJoin, Bm25, Dsir, Materialize, Mixture, Packing, Sampling}
 
 /** Corpus-curation operators: point-in-time (as-of) join, stratified
   * sampling, split assignment. Every oracle replays the operator's
@@ -1509,10 +1509,10 @@ object CurationQueries {
 
       val art = Release.materialized(
         Release.artifacts(v1, bench, "doc_id", "text", p))
-      val selV1 = Release.fromArtifacts(v1, art, "doc_id", p)
-        .select("id").localCheckpoint()
-      val selV2 = Release.incremental(v1, art, v2, bench, "doc_id", "text", p)
-        .select("id").localCheckpoint()
+      val selV1 = Materialize.view(Release.fromArtifacts(v1, art, "doc_id", p)
+        .select("id"))
+      val selV2 = Materialize.view(Release.incremental(v1, art, v2, bench, "doc_id", "text", p)
+        .select("id"))
       val i1 = Ann.ivfIndexWithMeta(
         embed(v1, selV1.select(col("id").as("doc_id"))), centroids,
         metric = "EUCLIDEAN")

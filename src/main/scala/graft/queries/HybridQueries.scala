@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.HybridGroundTruth
+import graft.operators.{HybridGroundTruth, Materialize}
 import graft.predicates._
 
 /** Per-query predicate ground truth (the reference's real hybrid-query
@@ -657,17 +657,16 @@ object HybridQueries {
           when(pmod(col("vec_id"), lit(3)) === 0, "sel_10pct")
             .when(pmod(col("vec_id"), lit(3)) === 1, "sel_50pct")
             .otherwise("sel_20pct"))
-      val index = Ann.ivfIndexWithMeta(emb, centroids, metaCols = Seq("label"))
-        .localCheckpoint()
+      val index = Materialize.view(
+        Ann.ivfIndexWithMeta(emb, centroids, metaCols = Seq("label")))
       val stats = Ann.cellSelectivityStats(index, "label")
       val widths = Ann.adaptiveProbeWidths(queries, centroids, stats, "label",
         k = 5, safety = 2.0, minProbe = 1, maxProbe = 8)
       val pred = Ann.ivfSearchFilteredAdaptive(queries, index, centroids,
         stats, "label", k = 5, safety = 2.0, minProbe = 1, maxProbe = 8,
         metadataCols = Seq("label"), excludeSelf = true)
-      val truth = HybridGroundTruth.knnWithPerQueryPredicates(
-          queries, emb, k = 5, metadataCols = Seq("label"), excludeSelf = true)
-        .localCheckpoint()
+      val truth = Materialize.view(HybridGroundTruth.knnWithPerQueryPredicates(
+          queries, emb, k = 5, metadataCols = Seq("label"), excludeSelf = true))
       val truthN = truth.groupBy("query_id").agg(count(lit(1)).as("truth_n"))
       val hits = pred.select("query_id", "neighbor_id")
         .join(truth.select("query_id", "neighbor_id"),

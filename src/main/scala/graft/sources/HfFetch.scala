@@ -145,7 +145,8 @@ object HfFetch {
 
     val nChunks = ((totalSize + chunkBytes - 1) / chunkBytes).toInt
     import spark.implicits._
-    val report = (0 until nChunks).toDS()
+    // materialized NOW: the fan-out runs here; the report is the receipt
+    val report = graft.operators.Materialize.view((0 until nChunks).toDS()
       .repartition(math.max(1, math.min(nChunks, 32)))
       .map { idx =>
         val start = idx.toLong * chunkBytes
@@ -157,8 +158,7 @@ object HfFetch {
           (idx, true, null: String)
         } catch { case e: Exception => (idx, false, e.toString) }
       }
-      .toDF("chunk_idx", "valid", "error")
-      .localCheckpoint(true) // run the fan-out NOW; the report is the receipt
+      .toDF("chunk_idx", "valid", "error"))
     val bad = report.filter(!col("valid")).limit(1).collect()
     require(bad.isEmpty,
       s"fetch $url: chunk ${bad.head.getInt(0)} failed: " +

@@ -48,8 +48,8 @@ object PlanDump {
             explode(array(lit(0), lit(1), lit(2))).as("j"))
           .select(col("src"), ((col("src") * 7 + col("j") * 13 + 1) % n).as("dst"))
           .filter(col("dst") =!= col("src"))
-        val ranks = docs.select(col("doc_id").as("id"),
-          (lit(1.0) / n).as("rank")).localCheckpoint(true)
+        val ranks = graft.operators.Materialize.view(docs.select(col("doc_id").as("id"),
+          (lit(1.0) / n).as("rank")))
         dump("pagerank_step",
           graft.operators.PageRank.pageRankStep(edges, ranks))
       case "labelprop_step" =>

@@ -7,9 +7,11 @@ import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.SparkSpec
 
-/** Table-driven sweep over every graph-operator entry point that runs on
-  * the [[GraphLoop]] kernel, on small fixed fixtures (the shape of
-  * `WindowSweepSpec`: one table, one rule per column):
+/** Table-driven sweep over every entry point that materializes through
+  * [[Materialize]] — the graph operators on the [[GraphLoop]] kernel and
+  * every other operator whose body materializes a frame — on small fixed
+  * fixtures (the shape of `WindowSweepSpec`: one table, one rule per
+  * column):
   *
   *  - HYGIENE: once a result is collected, the call has left behind no
   *    persisted RDD except the ones behind the result's own plan leaves,
@@ -18,7 +20,8 @@ import graft.SparkSpec
   *    result collect) with adaptive execution off stay at or under the
   *    count measured the same way on the same fixture before the kernel
   *    existed (commit 14aca443, local[4], 4 shuffle partitions, `local`
-  *    backend);
+  *    backend) — or, for the rows from `Triangles.triangles` on, before
+  *    their raw checkpoints were routed through the seam (commit 79fd185);
   *  - BACKENDS: `local`, `disk` and `reliable` materialization give the
   *    same rows — integers exactly, doubles within the documented ~1e-12
   *    float-order band.
@@ -26,7 +29,7 @@ import graft.SparkSpec
   * The spec runs on its own sessions so conf set by other suites cannot
   * move its plans or job counts.
   */
-class GraphLoopSweepSpec extends SparkSpec {
+class GraphLoopSweepSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   private lazy val session: SparkSession = spark.newSession()
 
@@ -79,8 +82,88 @@ class GraphLoopSweepSpec extends SparkSpec {
       "the fox and the dog are friends").toDF("text")
   }
 
+  /** Event log for [[Funnel.funnel]]: users 1..6 stepping through
+    * view -> click -> buy, some out of order.
+    */
+  private def events(s: SparkSession): DataFrame = {
+    import s.implicits._
+    import org.apache.spark.sql.functions._
+    Seq((1L, "view", 1L), (1L, "click", 5L), (1L, "buy", 9L), (2L, "click", 2L),
+      (2L, "view", 4L), (3L, "view", 3L), (3L, "view", 7L), (4L, "view", 2L),
+      (4L, "click", 3L), (5L, "view", 6L), (5L, "click", 8L), (5L, "buy", 8L))
+      .toDF("user_id", "event_type", "sec")
+      .withColumn("ts", timestamp_seconds(col("sec")))
+  }
+
+  /** Doc pairs sharing a 4..16-word prefix of 20 — a similarity ladder. */
+  private def ladder(s: SparkSession): DataFrame = {
+    import s.implicits._
+    (0 until 8).flatMap { i =>
+      val keep = 4 + (i % 4) * 4
+      val a = (0 until 20).map(w => s"w${i}_$w")
+      val b = a.take(keep) ++ (0 until (20 - keep)).map(w => s"x${i}_$w")
+      Seq((2L * i, a.mkString(" ")), (2L * i + 1, b.mkString(" ")))
+    }.toDF("doc_id", "text")
+  }
+
+  /** 60 deterministic 8-dim vectors with a 4-valued `label`; the first
+    * four are the quantizer.
+    */
+  private def vectors(s: SparkSession): DataFrame = {
+    import s.implicits._
+    def vec(i: Long): Seq[Float] = (0 until 8).map(j =>
+      ((graft.functions.StableHash.fnv64(s"sweep:$i:$j") >>> 12).toDouble /
+        (1L << 52) * 2 - 1).toFloat)
+    (0L until 60L).map(i => (i, vec(i), i % 4)).toDF("vec_id", "embedding", "label")
+  }
+
+  private def cents(s: SparkSession): DataFrame =
+    vectors(s).filter("vec_id < 4").select("vec_id", "embedding")
+
+  /** The last ten vectors as queries, each with a wire predicate on
+    * `label` (IN(0) / >= 2 / IN(0, 1)) and a tier.
+    */
+  private def filtered(s: SparkSession): DataFrame = {
+    import org.apache.spark.sql.functions._
+    import graft.predicates._
+    def blob(mod: Long): Array[Byte] = PNodeCodec.encodeFramed(mod match {
+      case 0 => PredicateNode.namedTyped("label", OpType.IN, Comparand.IntVal(0))
+      case 1 => PredicateNode.namedTyped("label", OpType.GE, Comparand.IntVal(2))
+      case _ => PredicateNode.namedTyped("label", OpType.IN, Comparand.IntVal(0),
+        Comparand.IntVal(1))
+    }, PNodeCodec.Mode.NamedTyped)
+    val blobUdf = udf((qid: Long) => blob(qid % 3))
+    vectors(s).filter("vec_id >= 50")
+      .withColumn("predicate", blobUdf(col("vec_id")))
+      .withColumn("tier", when(pmod(col("vec_id"), lit(2)) === 0, "a").otherwise("b"))
+  }
+
+  private def metaIndex(s: SparkSession): DataFrame =
+    Ann.ivfIndexWithMeta(vectors(s), cents(s), metaCols = Seq("label"))
+
+  private def stats(s: SparkSession): DataFrame =
+    Ann.cellSelectivityStats(metaIndex(s), "label")
+
+  private val bundles = scala.collection.mutable.Buffer.empty[java.io.File]
+
+  override def afterAll(): Unit =
+    try bundles.foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+    finally super.afterAll()
+
+  /** A fresh HNSW bundle over the first 50 vectors. */
+  private def bundle(s: SparkSession): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-sweep-hnsw").toFile
+    bundles.synchronized(bundles += dir)
+    val base = vectors(s).filter("vec_id < 50").select("vec_id", "embedding")
+    Hnsw.writeBundle(Hnsw.hnswIndex(base, cents(s), m = 4, efConstruction = 16),
+      cents(s), dir.toString)
+    dir.toString
+  }
+
   /** Entry point -> the call under test, and the job count the same call
-    * made at commit 14aca443 (before the kernel), adaptive execution off.
+    * made at commit 14aca443 (before the kernel; at 79fd185 for the rows
+    * from `Triangles.triangles` on), adaptive execution off. The HNSW rows
+    * return the bundle's cells as read back after the write.
     */
   private val entries: Seq[(String, SparkSession => DataFrame, Int)] = Seq(
     ("PageRank.pageRank", s => PageRank.pageRank(digraph(s), iters = 3), 17),
@@ -129,7 +212,79 @@ class GraphLoopSweepSpec extends SparkSpec {
     ("Dedup.propagateMinLabels",
       s => Dedup.propagateMinLabels(
         digraph(s).withColumnRenamed("src", "s").withColumnRenamed("dst", "t"),
-        maxIterations = 20)._1, 21)
+        maxIterations = 20)._1, 21),
+    ("Triangles.triangles", s => Triangles.triangles(digraph(s)), 5),
+    ("Triangles.clusteringCoefficients", s => Triangles.clusteringCoefficients(digraph(s)), 5),
+    ("Triangles.weightedClusteringCoefficients",
+      s => Triangles.weightedClusteringCoefficients(weighted(s)), 6),
+    ("Triangles.modularity", s => {
+      import s.implicits._
+      Triangles.modularity(digraph(s), (0L until 40L).map(i => (i, i % 4)).toDF("id", "community"))
+    }, 10),
+    ("Triangles.densityCard", s => Triangles.densityCard(digraph(s)), 7),
+    ("Triangles.healthCard", s => Triangles.healthCard(digraph(s)), 8),
+    ("Cooccur.pairs", s => Cooccur.pairs(digraph(s).selectExpr("src % 9 AS g",
+      "dst % 7 AS item"), "g", "item", maxGroupSize = 6L), 8),
+    ("TfIdf.pmiCollocations", s => TfIdf.pmiCollocations(docs(s), "text", 1L, 5), 7),
+    ("Funnel.funnel", s => Funnel.funnel(events(s), Seq("view", "click", "buy")), 5),
+    ("RandomWalks.walks", s => RandomWalks.walks(digraph(s), seeds(s), length = 3), 9),
+    ("Matryoshka.recallCurve", s => Matryoshka.recallCurve(
+      vectors(s).filter("vec_id >= 50"), vectors(s).filter("vec_id < 50"), Seq(4, 8), k = 3),
+      10),
+    ("Ann.recallCurve", s => Ann.recallCurve(vectors(s).filter("vec_id >= 50"), vectors(s),
+      cents(s), k = 3, nProbes = Seq(1, 2), excludeSelf = true), 9),
+    ("Ann.filteredRecallCurve", s => Ann.filteredRecallCurve(filtered(s), vectors(s),
+      cents(s), k = 3, nProbes = Seq(1, 2), tierCol = "tier", metadataCols = Seq("label"),
+      excludeSelf = true), 11),
+    ("Ann.ivfStalenessCard", s => Ann.ivfStalenessCard(vectors(s).filter("vec_id >= 50"),
+      vectors(s).select("vec_id", "embedding"),
+      Seq("a" -> cents(s), "b" -> vectors(s).filter("vec_id >= 56").select("vec_id",
+        "embedding")), k = 3, nProbe = 2, metric = "EUCLIDEAN", excludeSelf = true), 13),
+    ("Ann.safetyCalibrationCard", s => Ann.safetyCalibrationCard(filtered(s), metaIndex(s),
+      cents(s), stats(s), "label", k = 3, safeties = Seq(1.0, 3.0), minProbe = 1,
+      maxProbe = 4, tierCol = "tier", targetRecall = 0.5, metadataCols = Seq("label"),
+      excludeSelf = true), 17),
+    ("Ann.ivfSearchFilteredGuaranteed", s => Ann.ivfSearchFilteredGuaranteed(filtered(s),
+      metaIndex(s), cents(s), k = 3, nProbe = 1, metadataCols = Seq("label"),
+      excludeSelf = true), 9),
+    ("Ann.routePlan", s => Ann.routePlan(filtered(s), stats(s), "label", exactMax = 16L,
+      wideFraction = 0.4), 4),
+    ("Ann.hybridSearchRouted", s => Ann.hybridSearchRouted(filtered(s), metaIndex(s),
+      cents(s), stats(s), "label", k = 3, exactMax = 16L, wideFraction = 0.4,
+      nProbeWide = 2, safety = 2.0, minProbe = 1, maxProbe = 4,
+      metadataCols = Seq("label"), excludeSelf = true), 16),
+    ("Ann.routerReportCard", s => Ann.routerReportCard(filtered(s), metaIndex(s),
+      cents(s), stats(s), "label", k = 3, exactMax = 16L, wideFraction = 0.4,
+      nProbeWide = 2, safety = 2.0, minProbe = 1, maxProbe = 4,
+      metadataCols = Seq("label"), excludeSelf = true), 24),
+    ("Pq.ivfPqSearchFilteredGuaranteed", s => {
+      val cbs = Pq.subsetCodebooks(vectors(s).filter("vec_id < 16"), m = 4)
+      val index = Pq.ivfPqIndex(vectors(s), cents(s), cbs)
+        .join(vectors(s).selectExpr("vec_id AS id", "label"), Seq("id"))
+      Pq.ivfPqSearchFilteredGuaranteed(filtered(s), index, cents(s), cbs, k = 3,
+        nProbe = 1, metadataCols = Seq("label"), excludeSelf = true)
+    }, 7),
+    ("Dedup.lshCalibrationCard", s => Dedup.lshCalibrationCard(ladder(s), "doc_id", "text",
+      n = 3, numPerms = 12, configs = Seq((4, 3), (3, 4)), nBuckets = 3), 7),
+    ("Bpe.train", s => Bpe.train(docs(s), "text", numMerges = 8), 2),
+    ("Hnsw.appendToBundle", s => {
+      val dir = bundle(s)
+      Hnsw.appendToBundle(vectors(s).filter("vec_id >= 50").select("vec_id", "embedding"),
+        dir, m = 4, efConstruction = 16)
+      s.read.parquet(s"$dir/cells")
+    }, 9),
+    ("Hnsw.deleteFromBundle", s => {
+      val dir = bundle(s)
+      Hnsw.deleteFromBundle(vectors(s).filter("vec_id % 7 = 3").select("vec_id"), dir,
+        m = 4, efConstruction = 16)
+      s.read.parquet(s"$dir/cells")
+    }, 10),
+    ("Hnsw.compactBundle", s => {
+      val dir = bundle(s)
+      Hnsw.tombstoneFromBundle(vectors(s).filter("vec_id % 7 = 3").select("vec_id"), dir)
+      Hnsw.compactBundle(s, dir, m = 4, efConstruction = 16)
+      s.read.parquet(s"$dir/cells")
+    }, 11)
   )
 
   /** Adaptive execution off: a job count under AQE includes one job per

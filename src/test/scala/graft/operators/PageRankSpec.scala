@@ -193,8 +193,15 @@ class PageRankSpec extends SparkSpec {
       .filter { case (a, b) => a != b }.toDF("src", "dst")
     val local = PageRank.pageRank(edges, 6)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val ckpt = PageRank.pageRank(edges, 6, checkpointDir = Some(dir))
+    // the backend is a session choice: set it for this call only
+    spark.conf.set("spark.graft.materialize.backend", "reliable")
+    spark.conf.set("spark.graft.materialize.dir", dir)
+    val ckpt = try PageRank.pageRank(edges, 6)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    finally {
+      spark.conf.unset("spark.graft.materialize.backend")
+      spark.conf.unset("spark.graft.materialize.dir")
+    }
     local.foreach { case (id, r) =>
       assert(math.abs(r - ckpt(id)) < 1e-12, s"node $id: $r vs ${ckpt(id)}")
     }
