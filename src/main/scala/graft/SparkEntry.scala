@@ -33,9 +33,7 @@ object SparkEntry {
     val emb = Tables.embeddings(spark, dir)
 
     // format layer: round the vectors through the xvec binary format
-    val tmp = java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_TMPDIR",
-        System.getProperty("java.io.tmpdir")), "graft-qtmp")).toString
+    val tmp = graft.queries.tmpDir()
     val fvec = s"$tmp/entry-${System.nanoTime()}.fvec"
     graft.sources.xvec.XvecIO.write(
       emb.select(col("vec_id").as("ordinal"), col("embedding").as("vector")), fvec)

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -17,14 +15,6 @@ import graft.sources.xvec.XvecIO
   * renderers (P7/P8), PNode string comparison (F5), element map (P3).
   */
 object CoverageFunctionQueries {
-
-  private def tmpDir(): String = {
-    val base = sys.env.getOrElse("SPARK_GRAFT_TMPDIR",
-      System.getProperty("java.io.tmpdir"))
-    val d = Paths.get(base, "graft-qtmp")
-    Files.createDirectories(d)
-    d.toString
-  }
 
   /** Crockford base32 of a 128-bit value in DuckDB: digit i = (v / 32^(25-i))
     * % 32 — the power table rides as HUGEINT literals (32^25 = 2^125 fits).

@@ -24,14 +24,6 @@ import graft.sources.{CsvJsonArray, VectorSinks}
   */
 object CoverageSourceQueries {
 
-  private def tmpDir(): String = {
-    val base = sys.env.getOrElse("SPARK_GRAFT_TMPDIR",
-      System.getProperty("java.io.tmpdir"))
-    val d = Paths.get(base, "graft-qtmp")
-    Files.createDirectories(d)
-    d.toString
-  }
-
   private val duckNorm =
     "round(sqrt(list_sum(list_transform(embedding, x -> x::DOUBLE*x::DOUBLE))), 6)"
 

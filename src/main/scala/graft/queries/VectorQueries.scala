@@ -199,18 +199,10 @@ object VectorQueries {
         |      FROM d)
         |WHERE rank <= 5""".stripMargin) { (s, dir) =>
       val emb = Tables.embeddings(s, dir)
-      // PER-PROCESS fixed name (facet writes truncate): repeated runs in one
-      // JVM overwrite a single package instead of accumulating temp copies,
-      // while concurrent driver processes (verify + bench at once) each get
-      // their own dir and can't interleave facet writes into one package
-      val out = {
-        val base = sys.env.getOrElse("SPARK_GRAFT_TMPDIR",
-          System.getProperty("java.io.tmpdir"))
-        val d = java.nio.file.Paths.get(base, "graft-qtmp",
-          s"gtpkg-${ProcessHandle.current().pid()}")
-        java.nio.file.Files.createDirectories(d.getParent)
-        d.toString
-      }
+      // fixed name in the per-process scratch dir (facet writes truncate):
+      // repeated runs in one JVM overwrite a single package instead of
+      // accumulating temp copies
+      val out = s"${tmpDir()}/gtpkg"
       graft.layout.GroundTruthDataset.build(s, emb,
         emb.filter(col("vec_id") >= 100 && col("vec_id") < 120),
         k = 5, metric = "EUCLIDEAN", outDir = out)

@@ -5,12 +5,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 package object queries {
   /** Scratch dir for queries that must round data through a file format:
     * cwd-independent AND host-portable — env override, else the JVM tmpdir.
+    * One subdirectory per process, so two drivers on one host (a Verify run
+    * next to a test run) never read or clean up each other's files.
     */
-  private[queries] def tmpDir(): String = {
+  private[graft] def tmpDir(): String = {
     val base = sys.env.getOrElse("SPARK_GRAFT_TMPDIR",
       System.getProperty("java.io.tmpdir"))
-    val d = java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(base, "graft-qtmp"))
+    val d = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(
+      base, "graft-qtmp", s"pid-${ProcessHandle.current().pid()}"))
     d.toString
   }
 

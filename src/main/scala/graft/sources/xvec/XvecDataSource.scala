@@ -165,6 +165,41 @@ class XvecScanBuilder(path: String, fmt: XvecFormat, window: FWindow,
 case class XvecInputPartition(path: String, dimExpected: Int, recordStart: Long,
     recordEnd: Long, dataOffset: Long = 0L) extends InputPartition
 
+/** The one split planner of the xvec scan, batch and micro-batch alike. */
+object XvecSplits {
+  /** The largest split, the fixed split size of scans before it followed P. */
+  private val MaxSplitBytes: Long = 64L << 20
+  /** The readers' read unit (`recordsPerRead`, `batchRecords`). */
+  private val MinSplitBytes: Long = 4L << 20
+
+  /** Cut the normalized, ascending `intervals` into record ranges of
+    * `splitBytes = min(64 MiB, max(4 MiB, ceil(scanBytes / parallelism)))`:
+    * each interval becomes `ceil(intervalBytes / splitBytes)` balanced
+    * ranges, each at most `splitBytes` plus one record. No range straddles
+    * two intervals, and ranges come in ordinal order.
+    */
+  def plan(path: String, intervals: Seq[FInterval], stride: Int, dim: Int,
+      dataOffset: Long, parallelism: Int): Array[InputPartition] = {
+    def ceilDiv(a: Long, b: Long): Long = (a + b - 1) / b
+    val live = intervals.filter(_.count > 0)
+    val splitBytes = math.min(MaxSplitBytes, math.max(MinSplitBytes,
+      ceilDiv(live.map(_.count * stride).sum, math.max(1, parallelism))))
+    live.flatMap { iv =>
+      val n = ceilDiv(iv.count * stride, splitBytes)
+      val starts = (0L until n).map(i => iv.minIncl + i * (iv.count / n) + math.min(i, iv.count % n))
+      starts.zip(starts.tail :+ iv.maxExcl).map { case (lo, hi) =>
+        XvecInputPartition(path, dim, lo, hi, dataOffset)
+      }
+    }.toArray
+  }
+
+  /** The active session's leaf-node default parallelism — the divisor
+    * Spark's own file scans use (`FilePartition.maxSplitBytes`). */
+  def sessionParallelism(): Int =
+    org.apache.spark.sql.graftbridge.Bridge.leafNodeDefaultParallelism(
+      org.apache.spark.sql.SparkSession.active)
+}
+
 /** Metadata partition for a pushed aggregation: carries the pre-computed
   * answers (count / min / max over the merged intervals).
   */
@@ -185,6 +220,28 @@ class XvecAggReader(p: XvecAggPartition) extends PartitionReader[InternalRow] {
   override def close(): Unit = ()
 }
 
+/** The planned xvec scan. Ordinal filters and the window collapse into a
+  * normalized interval list (`mergedIntervals`), which [[XvecSplits.plan]]
+  * cuts into record-range partitions the way Spark sizes its own file
+  * splits (`FilePartition.maxSplitBytes`):
+  * `splitBytes = min(64 MiB, max(4 MiB, ceil(scanBytes / P)))`, with P the
+  * session's `spark.sql.leafNodeDefaultParallelism`, else
+  * `spark.default.parallelism`. So a 25 MB base scans as P tasks on P cores
+  * rather than one, and scans of at least 64 MiB × P plan as many ranges as
+  * the old fixed 64 MiB split did. The 4 MiB floor is the readers' own read unit
+  * (`recordsPerRead`, `batchRecords`): a smaller split would add tasks that
+  * each read less than one unit, so every scan under 4 MiB stays one
+  * partition. Each interval splits into balanced ranges that never straddle
+  * two intervals, in ascending ordinal order, so `collect()` of a plain scan
+  * returns rows in ordinal order. A pushed aggregate plans one
+  * [[XvecAggPartition]] and reads no payload.
+  *
+  * Top-k results do not depend on the split count (ties break by
+  * (dist, id) and partial heaps merge exactly), but anything drawn per
+  * partition does: a seeded `sample(fraction, seed)` over a scan above
+  * 4 MiB, and the k-means centroids, PQ codebooks and RVQ stages trained on
+  * such a sample, vary with the session's parallelism.
+  */
 class XvecScan(path: String, fmt: XvecFormat, window: FWindow,
     filterIntervals: Seq[FInterval], required: StructType,
     columnar: Boolean = true, maxPerTrigger: Long = 0L,
@@ -230,14 +287,8 @@ class XvecScan(path: String, fmt: XvecFormat, window: FWindow,
         val maxOrd = if (n == 0) None else Some(merged.map(_.maxExcl).max - 1)
         Array(XvecAggPartition(kinds, n, minOrd, maxOrd))
       case None =>
-        // split for parallelism: target ~64MB of payload per partition
-        val targetRecords = math.max(1L, (64L << 20) / stride)
-        merged.flatMap { iv =>
-          (iv.minIncl until iv.maxExcl by targetRecords).map { s =>
-            XvecInputPartition(path, dim, s, math.min(iv.maxExcl, s + targetRecords),
-              dataOffset)
-          }
-        }.toArray
+        XvecSplits.plan(path, merged, stride, dim, dataOffset,
+          XvecSplits.sessionParallelism())
     }
   }
 

@@ -62,17 +62,11 @@ class XvecMicroBatchStream(path: String, fmt: XvecFormat, window: FWindow,
     val hi = end.asInstanceOf[XvecOffset].record
     if (hi <= lo) return Array.empty
     val (dim, dataOffset, _) = fmt.fileMeta(Paths.get(path))
-    val stride = fmt.stride(dim)
     val base =
       if (window.isAll) Seq(graft.layout.FInterval(lo, hi))
       else window.clamp(lo, hi).intervals
-    val targetRecords = math.max(1L, (64L << 20) / stride)
-    base.filter(_.count > 0).flatMap { iv =>
-      (iv.minIncl until iv.maxExcl by targetRecords).map { s =>
-        XvecInputPartition(path, dim, s, math.min(iv.maxExcl, s + targetRecords),
-          dataOffset)
-      }
-    }.toArray
+    XvecSplits.plan(path, base, fmt.stride(dim), dim, dataOffset,
+      XvecSplits.sessionParallelism())
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

@@ -58,6 +58,14 @@ object Bridge {
     }
   }
 
+  /** The session's leaf-node default parallelism:
+    * `spark.sql.leafNodeDefaultParallelism`, else `spark.default.parallelism`
+    * — the divisor of Spark's own file-scan split size
+    * (`FilePartition.maxSplitBytes`). `private[sql]` in the classic session.
+    */
+  def leafNodeDefaultParallelism(spark: org.apache.spark.sql.SparkSession): Int =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].leafNodeDefaultParallelism
+
   /** Register a SQL function into an EXISTING session's registry
     * (`sessionState` is `private[sql]`) — the ad-hoc path; new sessions
     * should use `spark.sql.extensions=graft.GraftExtensions` instead.

@@ -63,10 +63,12 @@ class XvecColumnarSpec extends SparkSpec {
   }
 
   test("pushed ordinal filter still prunes partitions in columnar mode") {
-    val path = write("fvec", 5000, 8)
-    val df = spark.read.format("xvec").load(path).filter(col("ordinal") < 64)
+    val path = write("fvec", 80000, 32) // 10.6 MB: several splits unfiltered
+    val all = spark.read.format("xvec").load(path)
+    assert(XvecSpec.plannedRanges(all).size > 1)
+    val df = all.filter(col("ordinal") < 64)
     assert(df.count() == 64)
-    val scan = df.queryExecution.executedPlan.toString
-    assert(scan.contains("xvec"), scan)
+    assert(df.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
+    assert(XvecSpec.plannedRanges(df) == Seq((0L, 64L)))
   }
 }

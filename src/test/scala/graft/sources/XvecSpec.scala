@@ -2,11 +2,15 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.connector.read.InputPartition
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.layout.{FInterval, FWindow}
-import graft.sources.xvec.{XvecFormat, XvecIO}
+import graft.sources.xvec.{XvecAggPartition, XvecFormat, XvecIO, XvecInputPartition, XvecMicroBatchStream, XvecOffset, XvecSplits}
 
 class XvecSpec extends SparkSpec {
   import spark.implicits._
@@ -41,16 +45,92 @@ class XvecSpec extends SparkSpec {
     roundTrip("mvec", i => Seq.tabulate(8)(j => (i + j * 0.25f))) // exact in f16
   }
 
-  test("ordinal range filters prune partitions (pushdown)") {
-    val path = s"$tmpDir/push.fvec"
+  /** 80,000 x 32 fvec (10.6 MB): above the 4 MiB split floor, so a full scan
+    * plans several record ranges on any session parallelism above one. */
+  private lazy val splitFixture: String = {
+    val path = s"$tmpDir/splits.fvec"
     XvecFormat.writeLocal(path, XvecFormat.Fvec,
-      (0 until 10000).map(i => Seq.tabulate(16)(j => (i * 16 + j).toFloat)).iterator)
-    val df = XvecIO.read(spark, path).filter(col("ordinal") >= 9000 && col("ordinal") < 9100)
-    assert(df.count() == 100)
-    val plan = df.queryExecution.executedPlan.toString
-    // the scan itself reports the pushed interval
-    val scanDesc = df.queryExecution.executedPlan.collectLeaves().map(_.toString).mkString
+      (0 until 80000).iterator.map(i => Seq.tabulate(32)(j => (i * 32 + j).toFloat)))
+    path
+  }
+
+  test("ordinal range filters prune partitions (pushdown)") {
+    val full = XvecSpec.plannedRanges(XvecIO.read(spark, splitFixture))
+    assert(full.size > 1 && full.head._1 == 0L && full.last._2 == 80000L, full)
+    val df = XvecIO.read(spark, splitFixture)
+      .filter(col("ordinal") >= 9000 && col("ordinal") < 9100)
+    // only the pushed interval is planned, not the splits that contain it
+    assert(XvecSpec.plannedRanges(df) == Seq((9000L, 9100L)))
     assert(df.collect().map(_.getLong(0)).toSeq == (9000L until 9100L))
+  }
+
+  private val fvec128 = XvecFormat.Fvec.stride(128) // 516 bytes
+
+  /** The record ranges [[XvecSplits.plan]] cuts for `ivs`. */
+  private def ranges(ivs: Seq[FInterval], stride: Int, p: Int): Seq[(Long, Long)] =
+    XvecSplits.plan("f", ivs, stride, 128, 4L, p).toSeq.map {
+      case x: XvecInputPartition => (x.recordStart, x.recordEnd)
+    }
+
+  test("split planner: a scan under 4 MiB is one partition at any parallelism") {
+    val small = Seq(FInterval(0, 8000)) // 4.1 MB < 4 MiB
+    Seq(1, 4, 32, 1000).foreach(p => assert(ranges(small, fvec128, p) == Seq((0L, 8000L)), p))
+  }
+
+  test("split planner: 50,000 x 128 fvec splits into balanced ranges by parallelism") {
+    val base = Seq(FInterval(0, 50000))
+    assert(ranges(base, fvec128, 1) == Seq((0L, 50000L)))
+    assert(ranges(base, fvec128, 4) ==
+      Seq((0L, 12500L), (12500L, 25000L), (25000L, 37500L), (37500L, 50000L)))
+    val at32 = ranges(base, fvec128, 32) // the 4 MiB floor binds: 7 ranges
+    assert(at32.size == 7)
+    assert(at32.map { case (lo, hi) => hi - lo }.toSet == Set(7142L, 7143L), at32)
+  }
+
+  test("split planner: scans of at least 64 MiB x P cap ranges at 64 MiB") {
+    val p = 4
+    val cap = 64L << 20
+    val big = Seq(FInterval(0, cap * p / fvec128 + 12345))
+    val rs = ranges(big, fvec128, p)
+    assert(rs.size == 5) // ceil(scanBytes / 64 MiB)
+    val windows = Seq(FInterval(7, 300000), FInterval(400000, 1200000))
+    val ws = ranges(windows, fvec128, p)
+    assert(ws.size == 3 + 7, ws) // ceil per interval: 154.8 MB -> 3, 412.8 MB -> 7
+    (rs ++ ws).foreach { case (lo, hi) =>
+      assert((hi - lo) * fvec128 <= cap + fvec128, s"($lo, $hi) exceeds 64 MiB + stride")
+    }
+  }
+
+  test("split planner: multi-interval windows — no straddling, each record once, ascending") {
+    val ivs = Seq(FInterval(0, 10), FInterval(100, 50000), FInterval(60000, 60001),
+      FInterval(70000, 200000), FInterval(250000, 250000))
+    Seq(1, 3, 4, 7, 32, 1000).foreach { p =>
+      val rs = ranges(ivs, fvec128, p)
+      rs.foreach { case (lo, hi) =>
+        assert(lo < hi && ivs.count(iv => iv.minIncl <= lo && hi <= iv.maxExcl) == 1,
+          s"P=$p: ($lo, $hi) straddles or leaves the intervals")
+      }
+      assert(rs.flatMap { case (lo, hi) => lo until hi } ==
+        ivs.flatMap(iv => iv.minIncl until iv.maxExcl), s"P=$p")
+    }
+  }
+
+  test("split planner: micro-batch stream and batch scan plan the same ranges") {
+    val batch = XvecSpec.plannedRanges(XvecIO.read(spark, splitFixture, window = "[1000..70000)"))
+    assert(batch.size > 1, batch)
+    val stream = new XvecMicroBatchStream(splitFixture, XvecFormat.Fvec, FWindow.parse(null),
+      Seq("ordinal", "vector"))
+    val planned = stream.planInputPartitions(XvecOffset(1000L), XvecOffset(70000L)).toSeq.map {
+      case x: XvecInputPartition => (x.recordStart, x.recordEnd)
+    }
+    assert(planned == batch)
+  }
+
+  test("split planner: a pushed COUNT(*) still plans one aggregate partition") {
+    val df = XvecIO.read(spark, splitFixture).agg(count(lit(1)).as("n"))
+    val parts = XvecSpec.plannedPartitions(df)
+    assert(parts.size == 1 && parts.head.isInstanceOf[XvecAggPartition], parts)
+    assert(df.collect()(0).getLong(0) == 80000L)
   }
 
   test("window option restricts the scan to intervals") {
@@ -174,4 +254,15 @@ class XvecSpec extends SparkSpec {
     val r = df.collect()(0)
     assert(r.getLong(0) == 0L && r.isNullAt(1))
   }
+}
+
+object XvecSpec extends AdaptiveSparkPlanHelper {
+  /** The input partitions every xvec batch scan of `df`'s executed plan planned. */
+  def plannedPartitions(df: DataFrame): Seq[InputPartition] =
+    collect(df.queryExecution.executedPlan) { case b: BatchScanExec => b }
+      .flatMap(_.inputPartitions)
+
+  /** The record ranges of `df`'s planned xvec scan partitions, in plan order. */
+  def plannedRanges(df: DataFrame): Seq[(Long, Long)] =
+    plannedPartitions(df).collect { case p: XvecInputPartition => (p.recordStart, p.recordEnd) }
 }
