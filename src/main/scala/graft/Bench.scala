@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -39,19 +38,7 @@ object Bench {
       Gate(start, end, waited, timedOut)
     }
     val gate0 = idleGate("startup")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // see Verify.scala: keep bounded-heap aggregates in hash mode past
-      // 128 grouping keys (sort-based fallback sorts the raw pair stream)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      // the default 100-entry codegen cache thrashes under a 143-query
-      // sweep (every sweep recompiles every generated class — measured as
-      // uniform per-query inflation vs small sweeps; see PLANS.md bench
-      // protocol); size it to hold the whole suite's codegen units
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: JVM/JIT/codegen + parquet reader init are process
     // costs, not plan costs — without this the alphabetically-first query

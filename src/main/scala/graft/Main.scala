@@ -1840,18 +1840,8 @@ object Main {
       |  generate ivec-shuffle --input PATH [--seed S] [--output PATH]""".stripMargin
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      // see Verify.scala: keep bounded-heap aggregates in hash mode past
-      // 128 grouping keys (sort-based fallback sorts the raw pair stream)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      // default 100-entry codegen cache thrashes across a 143-query run
-      // (see Bench.scala / PLANS.md bench protocol)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_MASTER", "local[*]"),
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
       val result = run(spark, args.toSeq)

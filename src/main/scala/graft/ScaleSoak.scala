@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Ann, AsofJoin, Bm25, Dedup, Knn, Materialize, Mixture, Packing,
@@ -22,16 +21,7 @@ object ScaleSoak {
 
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // see Verify.scala: keep bounded-heap aggregates in hash mode past
-      // 128 grouping keys (sort-based fallback sorts the raw pair stream)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      // default 100-entry codegen cache thrashes across a 143-query run
-      // (see Bench.scala / PLANS.md bench protocol)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

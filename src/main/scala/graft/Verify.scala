@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,21 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // bounded-heap aggregates (TopKPairs) keep k-sized buffers, so the
-      // hash map stays small at ANY key count — Spark's default 128-key
-      // fallback to sort-based aggregation would instead SORT the raw pair
-      // stream (the knnPartitioned grid join measured a disk-filling spill
-      // at 200k x 10k before this was raised)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      // default 100-entry codegen cache thrashes across a 143-query run
-      // (see Bench.scala / PLANS.md bench protocol)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Optional subset for local debugging: SPARK_GRAFT_ONLY=q72,q74

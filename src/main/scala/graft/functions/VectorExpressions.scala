@@ -134,8 +134,6 @@ object VectorFunctions {
       VectorDistance(asFloatArray(a), asFloatArray(b), DistanceKernels.metricId(metric)))
 
   def cosineDistance(a: Column, b: Column): Column = distance(a, b, "COSINE")
-  def euclideanDistance(a: Column, b: Column): Column = distance(a, b, "EUCLIDEAN")
-  def l1Distance(a: Column, b: Column): Column = distance(a, b, "L1")
   /** Reference sign convention: returns -dot(a,b), lower-is-better. */
   def negDotProduct(a: Column, b: Column): Column = distance(a, b, "DOT_PRODUCT")
 

@@ -30,7 +30,6 @@ final case class FieldDescriptor(name: String, fieldType: FieldType,
     enumValues: Seq[String] = Nil)
 
 final case class MetadataLayout(fields: Seq[FieldDescriptor]) {
-  def fieldCount: Int = fields.size
   def field(i: Int): FieldDescriptor = fields(i)
   def fieldByName(name: String): Option[FieldDescriptor] = fields.find(_.name == name)
 

@@ -5,7 +5,6 @@ import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.TopKPairs.topKPairs
 import graft.functions.VectorFunctions
 
 /** Approximate nearest-neighbor search over an embedding column — the scale
@@ -157,22 +156,15 @@ object Ann {
       }
       .toDF("query_id", "q_vec", "_pred", "cell")
 
-    var pairs = probes.join(index, "cell")
-    if (excludeSelf) pairs = pairs.filter(col("id") =!= col("query_id"))
     // PRE-FILTER: the per-query predicate runs against the index metadata
     // BEFORE any distance is computed — the kernel and heap only ever see
     // eligible candidates (PlanShapeSpec asserts the Filter sits under the
     // aggregate)
     val metaStruct = struct(metadataCols.map(c => col(c).as(c)): _*)
-    pairs = pairs.filter(HybridGroundTruth.matchesColumn(col("_pred"), metaStruct))
-    pairs
-      .groupBy("query_id")
-      .agg(topKPairs(
-        VectorFunctions.distance(col("q_vec"), col("vec"), metric),
-        col("id"), k).as("topk"))
-      .select(col("query_id"), posexplode(col("topk")).as(Seq("pos", "pair")))
-      .select(col("query_id"), col("pair.id").as("neighbor_id"),
-        (col("pos") + 1).as("rank"), col("pair.dist").as("dist"))
+    val pairs = probes.join(index, "cell")
+      .filter(HybridGroundTruth.matchesColumn(col("_pred"), metaStruct))
+    Knn.topK(pairs, VectorFunctions.distance(col("q_vec"), col("vec"), metric),
+      col("id"), k, excludeSelf)
   }
 
   /** Recall-vs-selectivity card for the FILTERED approximate path — the
@@ -268,16 +260,8 @@ object Ann {
       .toDF("query_id", "q_vec", "cell")
 
     // probe join is cell-equi — partition pruning territory at scale
-    var pairs = probes.join(index, "cell")
-    if (excludeSelf) pairs = pairs.filter(col("id") =!= col("query_id"))
-    pairs
-      .groupBy("query_id")
-      .agg(topKPairs(
-        VectorFunctions.distance(col("q_vec"), col("vec"), metric),
-        col("id"), k).as("topk"))
-      .select(col("query_id"), posexplode(col("topk")).as(Seq("pos", "pair")))
-      .select(col("query_id"), col("pair.id").as("neighbor_id"),
-        (col("pos") + 1).as("rank"), col("pair.dist").as("dist"))
+    Knn.topK(probes.join(index, "cell"),
+      VectorFunctions.distance(col("q_vec"), col("vec"), metric), col("id"), k, excludeSelf)
   }
 
   /** Recall@k vs nProbe — the index-quality eval card ANN benchmarking
@@ -956,18 +940,11 @@ object Ann {
         idCol, vecCol, predicateCol)
       .join(widths.select("query_id", "n_probe"), Seq("query_id"))
       .filter(col("cell_rank") <= col("n_probe"))
-    var pairs = probes.join(index, "cell")
-    if (excludeSelf) pairs = pairs.filter(col("id") =!= col("query_id"))
     val metaStruct = struct(metadataCols.map(c => col(c).as(c)): _*)
-    pairs = pairs.filter(HybridGroundTruth.matchesColumn(col("_pred"), metaStruct))
-    pairs
-      .groupBy("query_id")
-      .agg(topKPairs(
-        VectorFunctions.distance(col("q_vec"), col("vec"), metric),
-        col("id"), k).as("topk"))
-      .select(col("query_id"), posexplode(col("topk")).as(Seq("pos", "pair")))
-      .select(col("query_id"), col("pair.id").as("neighbor_id"),
-        (col("pos") + 1).as("rank"), col("pair.dist").as("dist"))
+    val pairs = probes.join(index, "cell")
+      .filter(HybridGroundTruth.matchesColumn(col("_pred"), metaStruct))
+    Knn.topK(pairs, VectorFunctions.distance(col("q_vec"), col("vec"), metric),
+      col("id"), k, excludeSelf)
   }
 
   /** GUARANTEED-k filtered search: [[ivfSearchFiltered]]'s pre-filter

@@ -34,14 +34,11 @@ object Fusion {
         // rank once, not a double-counted score
         .groupBy("query_id", "neighbor_id").agg(min("rank").as("rank")))
       .reduce(_ unionAll _)
-    union
+    val scored = union
       .groupBy("query_id", "neighbor_id")
       .agg(round(sum(lit(1.0) / (lit(c) + col("rank"))), 6).as("rrf_score"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKPairs.topKPairs(
-        -col("rrf_score"), col("neighbor_id"), k).as("topk"))
-      .select(col("query_id"), posexplode(col("topk")).as(Seq("pos", "pair")))
-      .select(col("query_id"), col("pair.id").as("neighbor_id"),
-        (col("pos") + 1).as("rank"), (-col("pair.dist")).as("rrf_score"))
+    Knn.topK(scored, -col("rrf_score"), col("neighbor_id"), k)
+      .select(col("query_id"), col("neighbor_id"), col("rank"),
+        (-col("dist")).as("rrf_score"))
   }
 }

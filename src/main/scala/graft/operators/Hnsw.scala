@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 
 import graft.functions.DistanceKernels
-import graft.functions.TopKPairs.topKPairs
 
 /** Graph-based ANN: per-cell navigable small-world graphs with beam
   * search — the production serving-index family (Malkov & Yashunin 2016
@@ -346,14 +345,7 @@ object Hnsw {
           }
         }
     }.toDF("query_id", "nid", "d")
-    val filtered = if (excludeSelf) cand.filter(col("nid") =!= col("query_id"))
-      else cand
-    filtered
-      .groupBy("query_id")
-      .agg(topKPairs(col("d"), col("nid"), k).as("topk"))
-      .select(col("query_id"), posexplode(col("topk")).as(Seq("pos", "pair")))
-      .select(col("query_id"), col("pair.id").as("neighbor_id"),
-        (col("pos") + 1).as("rank"), col("pair.dist").as("dist"))
+    Knn.topK(cand, col("d"), col("nid"), k, excludeSelf)
   }
 
   /** FILTERED graph search — the hybrid pre-filter discipline
@@ -444,12 +436,7 @@ object Hnsw {
             }
           }
       }.toDF("query_id", "nid", "d")
-    cand
-      .groupBy("query_id")
-      .agg(topKPairs(col("d"), col("nid"), k).as("topk"))
-      .select(col("query_id"), posexplode(col("topk")).as(Seq("pos", "pair")))
-      .select(col("query_id"), col("pair.id").as("neighbor_id"),
-        (col("pos") + 1).as("rank"), col("pair.dist").as("dist"))
+    Knn.topK(cand, col("d"), col("nid"), k)
   }
 
   /** Effort/recall curve — the tuning card a serving deployment reads

@@ -15,8 +15,35 @@ import graft.functions.VectorFunctions
   * top-k map-side via partial aggregation, so the only shuffle is
   * num_partitions × |Q| serialized k-heaps — never the |Q|×|B| pair stream.
   * An exact result (this is ground-truth tooling), unlike LSH-style ANN.
+  *
+  * [[topK]] is the one top-k tail of every nearest-neighbour search here
+  * (exact, IVF, binary, graph, quantized and fused): each search builds its
+  * candidate pairs, and the score becomes a column BEFORE the bounded heap,
+  * so the heap's input rows carry ids and one double, never the vectors the
+  * score was computed from.
   */
 object Knn {
+
+  /** Per-query top-k of scored candidate pairs: drops self pairs when asked,
+    * projects `(query_id, neighbor_id, dist)` so `dist` is evaluated before
+    * the aggregate, then runs the map-side bounded heap
+    * ([[graft.functions.TopKPairs]]).
+    *
+    * @param pairs candidate pairs carrying a `query_id` column
+    * @param dist  the score, smaller is nearer (cast to double)
+    * @param id    the candidate's id (cast to long)
+    * @return (query_id, neighbor_id, rank, dist), rank 1..k by (dist, id) asc
+    */
+  def topK(pairs: DataFrame, dist: Column, id: Column, k: Int,
+      excludeSelf: Boolean = false): DataFrame = {
+    val kept = if (excludeSelf) pairs.filter(id =!= col("query_id")) else pairs
+    kept.select(col("query_id"), id.as("neighbor_id"), dist.as("dist"))
+      .groupBy("query_id")
+      .agg(topKPairs(col("dist"), col("neighbor_id"), k).as("topk"))
+      .select(col("query_id"), posexplode(col("topk")).as(Seq("pos", "pair")))
+      .select(col("query_id"), col("pair.id").as("neighbor_id"),
+        (col("pos") + 1).as("rank"), col("pair.dist").as("dist"))
+  }
 
   /** Top-k nearest neighbors of each query vector.
     *
@@ -47,21 +74,10 @@ object Knn {
       (Seq(col(idCol).cast("long").as("neighbor_id"), col(vecCol).as("b_vec")) ++
         baseExtra.map(c => col(c).as(s"b_$c"))): _*)
 
-    var pairs = b.crossJoin(broadcast(q))
-    if (excludeSelf) pairs = pairs.filter(col("neighbor_id") =!= col("query_id"))
-    pairPredicate.foreach(p => pairs = pairs.filter(p))
-
-    pairs
-      .groupBy("query_id")
-      .agg(topKPairs(
-        VectorFunctions.distance(col("q_vec"), col("b_vec"), metric),
-        col("neighbor_id"), k).as("topk"))
-      .select(col("query_id"), posexplode(col("topk")).as(Seq("pos", "pair")))
-      .select(
-        col("query_id"),
-        col("pair.id").as("neighbor_id"),
-        (col("pos") + 1).as("rank"),
-        col("pair.dist").as("dist"))
+    val pairs = b.crossJoin(broadcast(q))
+    topK(pairPredicate.fold(pairs)(p => pairs.filter(p)),
+      VectorFunctions.distance(col("q_vec"), col("b_vec"), metric),
+      col("neighbor_id"), k, excludeSelf)
   }
 
   /** [[knn]] for query sets too large for a single broadcast (the 100TB
@@ -147,18 +163,10 @@ object Knn {
     val gridParts = math.max(
       queries.sparkSession.sessionState.conf.numShufflePartitions,
       nQBlocks * nBBlocks * 4)
-    qRep.repartition(gridParts, col("_qb"), col("_bb"))
-      .join(bRep.repartition(gridParts, col("_qb"), col("_bb")), Seq("_qb", "_bb"))
-      .groupBy("query_id")
-      .agg(topKPairs(
-        VectorFunctions.distance(col("q_vec"), col("b_vec"), metric),
-        col("neighbor_id"), k).as("topk"))
-      .select(col("query_id"), posexplode(col("topk")).as(Seq("pos", "pair")))
-      .select(
-        col("query_id"),
-        col("pair.id").as("neighbor_id"),
-        (col("pos") + 1).as("rank"),
-        col("pair.dist").as("dist"))
+    topK(qRep.repartition(gridParts, col("_qb"), col("_bb"))
+        .join(bRep.repartition(gridParts, col("_qb"), col("_bb")), Seq("_qb", "_bb")),
+      VectorFunctions.distance(col("q_vec"), col("b_vec"), metric),
+      col("neighbor_id"), k)
   }
 
   /** Adaptive dispatch over the three exact forms: measure the QUERY side

@@ -5,8 +5,6 @@ import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.TopKPairs.topKPairs
-
 /** Product quantization (PQ / IVF-PQ companion): the memory-compression leg
   * of vector search at the 100 TB posture. A D-dim float vector (D·4 bytes)
   * becomes `m` small codes (one byte each at ksub<=256) — 32× compression at
@@ -24,7 +22,7 @@ import graft.functions.TopKPairs.topKPairs
   *  - encode is a map-side typed kernel — zero shuffle;
   *  - ADC search scans the CODES table (m ints per row, not D floats) with a
   *    per-partition bounded heap, then one exchange of partitions×|Q| k-heaps
-  *    (the proven topKPairs partial-agg shape). No shuffle ever carries a
+  *    (the [[Knn.topK]] partial-agg shape). No shuffle ever carries a
   *    full vector.
   *
   * Codebook frame layout: (subspace INT, code INT, centroid ARRAY<FLOAT>)
@@ -239,7 +237,9 @@ object Pq {
         }
       }
       .toDF("query_id", "nid", "dist")
-    finishTopK(partials, k)
+    Knn.topK(partials, col("dist"), col("nid"), k)
+      .select(col("query_id"), col("neighbor_id"), col("rank").cast("long").as("rank"),
+        col("dist").as("adc_dist"))
   }
 
   /** [[adcSearch]] for query sets past the driver-LUT budget — the
@@ -260,7 +260,6 @@ object Pq {
     }.reduce(_ unionByName _)
   }
 
-  /** Merge per-partition candidate streams into global ranked top-k. */
   /** Codes/codebook geometry guard: a codes row with arity != m would throw
     * a bare ArrayIndexOutOfBoundsException deep in an executor, and codes
     * encoded with a LARGER ksub than this codebook silently read wrong LUT
@@ -310,14 +309,6 @@ object Pq {
       .select(col("query_id"), col("_nid").as("neighbor_id"),
         col("rank").cast("long").as("rank"), col("dist"))
   }
-
-  private def finishTopK(partials: DataFrame, k: Int): DataFrame =
-    partials
-      .groupBy("query_id")
-      .agg(topKPairs(col("dist"), col("nid"), k).as("topk"))
-      .select(col("query_id"), posexplode(col("topk")).as(Seq("pos", "pair")))
-      .select(col("query_id"), col("pair.id").as("neighbor_id"),
-        (col("pos") + 1).cast("long").as("rank"), col("pair.dist").as("adc_dist"))
 
   private def collectCentroids(centroids: DataFrame, idCol: String,
       vecCol: String): Array[(Long, Array[Float])] = {
@@ -509,7 +500,9 @@ object Pq {
         }
       }
       .toDF("query_id", "nid", "dist")
-    finishTopK(partials, k)
+    Knn.topK(partials, col("dist"), col("nid"), k)
+      .select(col("query_id"), col("neighbor_id"), col("rank").cast("long").as("rank"),
+        col("dist").as("adc_dist"))
   }
 
   /** [[ivfPqSearch]] with the same chunked-query escape hatch as
@@ -674,7 +667,9 @@ object Pq {
         }
       }
       .toDF("query_id", "nid", "dist")
-    finishTopK(partials, k)
+    Knn.topK(partials, col("dist"), col("nid"), k)
+      .select(col("query_id"), col("neighbor_id"), col("rank").cast("long").as("rank"),
+        col("dist").as("adc_dist"))
   }
 
   /** Shortlist recall of ADC search against exact KNN over the same base —

@@ -5,8 +5,6 @@ import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
 
-import graft.functions.TopKPairs.topKPairs
-
 /** Residual vector quantization (RVQ): a chain of S full-dimension
   * codebooks where stage s quantizes the RESIDUAL left by stages 0..s-1 —
   * x̂ = C₀[c₀] + C₁[c₁] + … — the additive-quantization counterpart to
@@ -247,12 +245,9 @@ object Rvq {
         }
       }
       .toDF("query_id", "nid", "dist")
-    partials
-      .groupBy("query_id")
-      .agg(topKPairs(col("dist"), col("nid"), k).as("topk"))
-      .select(col("query_id"), posexplode(col("topk")).as(Seq("pos", "pair")))
-      .select(col("query_id"), col("pair.id").as("neighbor_id"),
-        (col("pos") + 1).cast("long").as("rank"), col("pair.dist").as("adc_dist"))
+    Knn.topK(partials, col("dist"), col("nid"), k)
+      .select(col("query_id"), col("neighbor_id"), col("rank").cast("long").as("rank"),
+        col("dist").as("adc_dist"))
   }
 
   /** The stage chain shared by encode/errorCard: returns (codes, cumulative

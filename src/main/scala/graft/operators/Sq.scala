@@ -197,20 +197,16 @@ object Sq {
       (Seq(col(idCol).cast("long").as("neighbor_id"),
         binarizeExpr(col(vecCol).cast("array<float>"), dim).as("b_bits")) ++
         metadataCols.map(col)): _*)
-    var pairs = b.crossJoin(broadcast(q))
-    if (excludeSelf) pairs = pairs.filter(col("neighbor_id") =!= col("query_id"))
     val metaStruct = struct(metadataCols.map(c => col(c).as(c)): _*)
-    pairs = pairs.filter(HybridGroundTruth.matchesColumn(col("_pred"), metaStruct))
+    val pairs = b.crossJoin(broadcast(q))
+      .filter(HybridGroundTruth.matchesColumn(col("_pred"), metaStruct))
     val ham = aggregate(
       zip_with(col("q_bits"), col("b_bits"),
         (x, y) => bit_count(x.bitwiseXOR(y)).cast("long")),
       lit(0L), (acc, x) => acc + x).cast("double")
-    pairs
-      .groupBy("query_id")
-      .agg(graft.functions.TopKPairs.topKPairs(ham, col("neighbor_id"), k).as("topk"))
-      .select(col("query_id"), posexplode(col("topk")).as(Seq("pos", "pair")))
-      .select(col("query_id"), col("pair.id").as("neighbor_id"),
-        (col("pos") + 1).as("rank"), col("pair.dist").cast("long").as("hamming"))
+    Knn.topK(pairs, ham, col("neighbor_id"), k, excludeSelf)
+      .select(col("query_id"), col("neighbor_id"), col("rank"),
+        col("dist").cast("long").as("hamming"))
   }
 
   /** Hamming top-k over binarized vectors: the [[Knn.knn]] plan shape
@@ -228,17 +224,12 @@ object Sq {
       .select(col(idCol).as("query_id"), col("bits").as("q_bits"))
     val b = binarize(base, idCol, vecCol)
       .select(col(idCol).as("neighbor_id"), col("bits").as("b_bits"))
-    var pairs = b.crossJoin(broadcast(q))
-    if (excludeSelf) pairs = pairs.filter(col("neighbor_id") =!= col("query_id"))
     val ham = aggregate(
       zip_with(col("q_bits"), col("b_bits"),
         (x, y) => bit_count(x.bitwiseXOR(y)).cast("long")),
       lit(0L), (acc, x) => acc + x).cast("double")
-    pairs
-      .groupBy("query_id")
-      .agg(graft.functions.TopKPairs.topKPairs(ham, col("neighbor_id"), k).as("topk"))
-      .select(col("query_id"), posexplode(col("topk")).as(Seq("pos", "pair")))
-      .select(col("query_id"), col("pair.id").as("neighbor_id"),
-        (col("pos") + 1).as("rank"), col("pair.dist").cast("long").as("hamming"))
+    Knn.topK(b.crossJoin(broadcast(q)), ham, col("neighbor_id"), k, excludeSelf)
+      .select(col("query_id"), col("neighbor_id"), col("rank"),
+        col("dist").cast("long").as("hamming"))
   }
 }

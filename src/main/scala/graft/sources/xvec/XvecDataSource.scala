@@ -240,7 +240,9 @@ class XvecAggReader(p: XvecAggPartition) extends PartitionReader[InternalRow] {
   * (dist, id) and partial heaps merge exactly), but anything drawn per
   * partition does: a seeded `sample(fraction, seed)` over a scan above
   * 4 MiB, and the k-means centroids, PQ codebooks and RVQ stages trained on
-  * such a sample, vary with the session's parallelism.
+  * such a sample, vary with the session's parallelism. `XvecSplitKnnSpec`'s
+  * seeded `Ann.trainCentroids` row pins repeatability at a fixed split count
+  * and records whether one split and the default split count agree.
   */
 class XvecScan(path: String, fmt: XvecFormat, window: FWindow,
     filterIntervals: Seq[FInterval], required: StructType,

@@ -66,6 +66,38 @@ class PlanShapeSpec extends SparkSpec {
     assert(!s.contains("Sort ["), s)
   }
 
+  test("Knn.topK: every partial topk_pairs heap aggregates ids and scores, never a vector") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    import org.apache.spark.sql.execution.adaptive.QueryStageExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.types.ArrayType
+    // AQE hides materialized stages inside leaf QueryStageExec wrappers
+    def partialHeaps(p: SparkPlan): Seq[BaseAggregateExec] = p.collect {
+      case a: BaseAggregateExec if a.aggregateExpressions.exists(e => e.mode == Partial &&
+          e.aggregateFunction.isInstanceOf[graft.functions.TopKPairs]) => Seq(a)
+      case q: QueryStageExec => partialHeaps(q.plan)
+    }.flatten
+    val cents = base.filter(col("vec_id") < 8)
+    val searches = Seq(
+      "Knn.knn" -> Knn.knn(base.limit(4), base, k = 3),
+      "Knn.knnPartitioned" -> Knn.knnPartitioned(base.limit(4), base, k = 3,
+        nQBlocks = 2, nBBlocks = 2),
+      "Ann.ivfSearch" -> graft.operators.Ann.ivfSearch(base.limit(4),
+        graft.operators.Ann.ivfIndex(base, cents), cents, k = 3, nProbe = 2),
+      "Sq.binaryTopK" -> Sq.binaryTopK(base.limit(4), base, k = 3))
+    searches.foreach { case (name, df) =>
+      val heaps = partialHeaps(executedPlan(df))
+      assert(heaps.nonEmpty, s"$name: no partial topk_pairs aggregate")
+      // the score is a column before the heap: its input rows are
+      // (query_id, neighbor_id, dist), not the vectors being compared
+      heaps.foreach { h =>
+        val arrays = h.child.output.filter(_.dataType.isInstanceOf[ArrayType])
+        assert(arrays.isEmpty,
+          s"$name: heap input carries ${arrays.map(_.name).mkString(",")}:\n$h")
+      }
+    }
+  }
+
   test("Ann.ivfSearchFiltered: the predicate Filter runs BELOW the heap aggregate") {
     import graft.predicates._
     val labeled = base.withColumn("label", pmod(col("vec_id"), lit(10)))

@@ -10,15 +10,8 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder("local[4]", 4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // see Verify.scala: keep bounded-heap aggregates in hash mode past
-      // 128 grouping keys (sort-based fallback sorts the raw pair stream)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
       // bucketed-table specs write via saveAsTable — keep the warehouse
       // out of the repo working tree
       .config("spark.sql.warehouse.dir",

@@ -14,6 +14,8 @@ import graft.sources.xvec.{XvecFormat, XvecIO}
 /** The operators an xvec scan feeds give the same answer however many
   * splits the scan plans: one split (`spark.sql.leafNodeDefaultParallelism`
   * = 1) against the session default (several splits of a 10.4 MB base).
+  * Seeded training over a sample is the exception: it repeats at a fixed
+  * split count, and the spec records whether the two split counts agree.
   */
 class XvecSplitKnnSpec extends SparkSpec with BeforeAndAfterAll {
   import graft.predicates.Comparand._
@@ -57,6 +59,29 @@ class XvecSplitKnnSpec extends SparkSpec with BeforeAndAfterAll {
       metadataCols = Seq("label", "score"))),
     ProfileStats.perDimStats(XvecIO.read(spark, basePath), "vector").orderBy("dim")
       .collect().toSeq)
+
+  test("seeded trainCentroids repeats at a fixed split count; records P = 1 vs the default") {
+    val key = "spark.sql.leafNodeDefaultParallelism"
+    // KMeans reads its input twice in one task (a zip), and Spark's DSv2
+    // scan keeps one reader per task, so the second read closes the first:
+    // train over the scan's rows checkpointed in its own partitions
+    def train(): Seq[Row] = {
+      val rows = base.localCheckpoint()
+      try Ann.trainCentroids(spark, rows, nList = 8, sampleFraction = 0.05)
+        .orderBy("vec_id").collect().toSeq
+      finally rows.unpersist()
+    }
+    val (one1, one2) = try { spark.conf.set(key, "1"); (train(), train()) }
+      finally spark.conf.unset(key)
+    val (many1, many2) = (train(), train())
+    assert(one1.size == 8 && many1.size == 8)
+    assert(one1 == one2, "two seeded runs on one split trained different centroids")
+    assert(many1 == many2, "two seeded runs on the default splits trained different centroids")
+    // sample(fraction, seed) draws per partition, so the split count may
+    // change the sample and the centroids (XvecScan scaladoc)
+    info(s"P = 1 and the default split count train " +
+      (if (one1 == many1) "identical" else "different") + " centroids")
+  }
 
   test("KNN, hybrid KNN and the profile agree on one split and on several") {
     val key = "spark.sql.leafNodeDefaultParallelism"
