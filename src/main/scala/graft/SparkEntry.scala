@@ -45,7 +45,8 @@ object SparkEntry {
     val pred = graft.predicates.PNodeCompiler.compile(
       graft.predicates.PredicateNode.namedTyped(
         "b_label", graft.predicates.OpType.IN,
-        (0 until 5).map(i => graft.predicates.Comparand.IntVal(i.toLong)): _*))
+        (0 until 5).map(i => graft.predicates.Comparand.IntVal(i.toLong)): _*),
+      scanned.select(col("label").as("b_label")).schema)
 
     val queriesDf = scanned.filter(col("vec_id") < 20)
     val hybrid = graft.operators.Knn.knn(queriesDf, scanned, k = 10,

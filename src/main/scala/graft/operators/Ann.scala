@@ -24,6 +24,39 @@ import graft.functions.VectorFunctions
   */
 object Ann {
 
+  /** The centroid set as (id, vector) sorted by id, for a broadcast. */
+  private[operators] def collectCentroids(centroids: DataFrame, idCol: String,
+      vecCol: String, caller: String): Array[(Long, Array[Float])] = {
+    val spark = centroids.sparkSession
+    import spark.implicits._
+    val cents = centroids
+      .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
+      .as[(Long, Array[Float])].collect().sortBy(_._1)
+    require(cents.nonEmpty, s"$caller: empty centroid set (mis-filtered quantizer?)")
+    cents
+  }
+
+  /** The `n` cells whose centroids are nearest `qv`, nearest first; ties
+    * on distance break to the lower cell. A bounded heap over the
+    * broadcast centroid array: the per-query probe list of every IVF and
+    * graph search.
+    */
+  private[operators] def nearestCells(qv: Array[Float], cs: Array[(Long, Array[Float])],
+      n: Int, metricId: Int): Seq[Long] = {
+    val heap = new scala.collection.mutable.PriorityQueue[(Double, Long)]()(
+      Ordering.by(p => (p._1, p._2)))
+    var i = 0
+    while (i < cs.length) {
+      val d = graft.functions.DistanceKernels.computeArrays(qv, cs(i)._2, metricId)
+      if (heap.size < n) heap.enqueue((d, cs(i)._1))
+      else if (Ordering.Tuple2[Double, Long].lt((d, cs(i)._1), heap.head)) {
+        heap.dequeue(); heap.enqueue((d, cs(i)._1))
+      }
+      i += 1
+    }
+    heap.toSeq.sorted.map(_._2)
+  }
+
   /** Assign each row to its nearest centroid cell: (id, vec, cell). Ties
     * break to the lowest centroid id (deterministic).
     */
@@ -35,10 +68,7 @@ object Ann {
     // payload: measured 322 s vs seconds for this kernel at 1M × 256 cells.)
     val spark = base.sparkSession
     import spark.implicits._
-    val cents: Array[(Long, Array[Float])] = centroids
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    require(cents.nonEmpty, "ivfIndex: empty centroid set (mis-filtered quantizer?)")
+    val cents = collectCentroids(centroids, idCol, vecCol, "ivfIndex")
     val bc = spark.sparkContext.broadcast(cents)
     val metricId = graft.functions.DistanceKernels.metricId(metric)
     base.select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
@@ -75,10 +105,7 @@ object Ann {
       vecCol: String = "embedding", metaCols: Seq[String] = Nil): DataFrame = {
     val spark = base.sparkSession
     import spark.implicits._
-    val cents: Array[(Long, Array[Float])] = centroids
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    require(cents.nonEmpty, "ivfIndexWithMeta: empty centroid set (mis-filtered quantizer?)")
+    val cents = collectCentroids(centroids, idCol, vecCol, "ivfIndexWithMeta")
     val bc = spark.sparkContext.broadcast(cents)
     val metricId = graft.functions.DistanceKernels.metricId(metric)
     val cellUdf = udf { (vec: Seq[Float]) =>
@@ -116,53 +143,57 @@ object Ann {
     * `index` must come from [[ivfIndexWithMeta]] (or carry
     * `(id, vec, cell, metadataCols…)`). Output: (query_id, neighbor_id,
     * rank, dist). Predicate semantics match the exact path
-    * ([[HybridGroundTruth.knnWithPerQueryPredicates]]) verbatim — same
-    * evaluator, same loud missing-field failure.
+    * ([[HybridGroundTruth.knnWithPerQueryPredicates]]) verbatim: the trees
+    * come from the same seam ([[HybridGroundTruth.perQuery]]), so a
+    * missing field fails as loudly, before any job runs.
     */
   def ivfSearchFiltered(queries: DataFrame, index: DataFrame,
       centroids: DataFrame, k: Int, nProbe: Int, metric: String = "COSINE",
       idCol: String = "vec_id", vecCol: String = "embedding",
       predicateCol: String = "predicate", metadataCols: Seq[String] = Nil,
       excludeSelf: Boolean = false): DataFrame = {
-    val spark = queries.sparkSession
+    val (qs, preds) = HybridGroundTruth.perQuery(queries, predicateCol, metadataCols)
+    searchFiltered(qs, preds, index, centroids, k, nProbe, metric, idCol, vecCol,
+      metadataCols, excludeSelf)
+  }
+
+  /** [[ivfSearchFiltered]] over a query side that went through
+    * [[HybridGroundTruth.perQuery]].
+    */
+  private def searchFiltered(qs: DataFrame, preds: HybridGroundTruth.QueryPredicates,
+      index: DataFrame, centroids: DataFrame, k: Int, nProbe: Int, metric: String,
+      idCol: String, vecCol: String, metadataCols: Seq[String],
+      excludeSelf: Boolean): DataFrame = {
+    val spark = qs.sparkSession
     import spark.implicits._
-    val cents: Array[(Long, Array[Float])] = centroids
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    require(cents.nonEmpty, "ivfSearchFiltered: empty centroid set")
+    val cents = collectCentroids(centroids, idCol, vecCol, "ivfSearchFiltered")
     require(nProbe > 0 && k > 0,
       s"ivfSearchFiltered: nProbe ($nProbe) and k ($k) must be positive")
     val bc = spark.sparkContext.broadcast(cents)
     val metricId = graft.functions.DistanceKernels.metricId(metric)
-    // probe list with the query's predicate blob riding along
-    val probes = queries
+    // probe list with the query's predicate index riding along
+    val probes = qs
       .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"),
-        col(predicateCol).cast("binary"))
-      .as[(Long, Array[Float], Array[Byte])]
-      .flatMap { case (qid, qv, blob) =>
-        val cs = bc.value
-        val heap = new scala.collection.mutable.PriorityQueue[(Double, Long)]()(
-          Ordering.by(p => (p._1, p._2)))
-        var i = 0
-        while (i < cs.length) {
-          val d = graft.functions.DistanceKernels.computeArrays(qv, cs(i)._2, metricId)
-          if (heap.size < nProbe) heap.enqueue((d, cs(i)._1))
-          else if (Ordering.Tuple2[Double, Long].lt((d, cs(i)._1), heap.head)) {
-            heap.dequeue(); heap.enqueue((d, cs(i)._1))
-          }
-          i += 1
-        }
-        heap.toSeq.map { case (_, cell) => (qid, qv, blob, cell) }
+        col(HybridGroundTruth.PredicateIndex))
+      .as[(Long, Array[Float], Int)]
+      .flatMap { case (qid, qv, pred) =>
+        nearestCells(qv, bc.value, nProbe, metricId).map(cell => (qid, qv, pred, cell))
       }
-      .toDF("query_id", "q_vec", "_pred", "cell")
+      .toDF("query_id", "q_vec", "pred", "cell")
+    filteredTopK(probes, preds, index, k, metric, metadataCols, excludeSelf)
+  }
 
-    // PRE-FILTER: the per-query predicate runs against the index metadata
-    // BEFORE any distance is computed — the kernel and heap only ever see
-    // eligible candidates (PlanShapeSpec asserts the Filter sits under the
-    // aggregate)
+  /** The candidate join, pre-filter and heap of the filtered IVF searches:
+    * the per-query predicate runs against the index metadata BEFORE any
+    * distance is computed, so the kernel and heap only ever see eligible
+    * candidates (PlanShapeSpec asserts the Filter sits under the
+    * aggregate). `probes` carries (query_id, q_vec, pred, cell).
+    */
+  private def filteredTopK(probes: DataFrame, preds: HybridGroundTruth.QueryPredicates,
+      index: DataFrame, k: Int, metric: String, metadataCols: Seq[String],
+      excludeSelf: Boolean): DataFrame = {
     val metaStruct = struct(metadataCols.map(c => col(c).as(c)): _*)
-    val pairs = probes.join(index, "cell")
-      .filter(HybridGroundTruth.matchesColumn(col("_pred"), metaStruct))
+    val pairs = probes.join(index, "cell").filter(preds.filter(col("pred"), metaStruct))
     Knn.topK(pairs, VectorFunctions.distance(col("q_vec"), col("vec"), metric),
       col("id"), k, excludeSelf)
   }
@@ -231,31 +262,14 @@ object Ann {
     // over the broadcast centroid array — zero shuffle (the declarative
     // crossJoin+groupBy form exchanges nList exploded rows per query, query
     // vector included; same anti-pattern the index side had)
-    val cents: Array[(Long, Array[Float])] = centroids
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    require(cents.nonEmpty, "ivfSearch: empty centroid set (mis-filtered quantizer?)")
+    val cents = collectCentroids(centroids, idCol, vecCol, "ivfSearch")
     require(nProbe > 0 && k > 0, s"ivfSearch: nProbe ($nProbe) and k ($k) must be positive")
     val bc = spark.sparkContext.broadcast(cents)
     val metricId = graft.functions.DistanceKernels.metricId(metric)
     val probes = q.select(col("query_id"), col("q_vec").cast("array<float>"))
       .as[(Long, Array[Float])]
       .flatMap { case (qid, qv) =>
-        val cs = bc.value
-        // bounded selection of the nProbe best (dist, cell) pairs; ties on
-        // distance break to the lower cell (ascending scan + strict compare)
-        val heap = new scala.collection.mutable.PriorityQueue[(Double, Long)]()(
-          Ordering.by(p => (p._1, p._2)))
-        var i = 0
-        while (i < cs.length) {
-          val d = graft.functions.DistanceKernels.computeArrays(qv, cs(i)._2, metricId)
-          if (heap.size < nProbe) heap.enqueue((d, cs(i)._1))
-          else if (Ordering.Tuple2[Double, Long].lt((d, cs(i)._1), heap.head)) {
-            heap.dequeue(); heap.enqueue((d, cs(i)._1))
-          }
-          i += 1
-        }
-        heap.toSeq.map { case (_, cell) => (qid, qv, cell) }
+        nearestCells(qv, bc.value, nProbe, metricId).map(cell => (qid, qv, cell))
       }
       .toDF("query_id", "q_vec", "cell")
 
@@ -545,28 +559,13 @@ object Ann {
       vecCol: String = "embedding"): Array[Long] = {
     val spark = queries.sparkSession
     import spark.implicits._
-    val cents: Array[(Long, Array[Float])] = centroids
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    require(cents.nonEmpty, "probedCells: empty centroid set")
+    val cents = collectCentroids(centroids, idCol, vecCol, "probedCells")
     val bc = spark.sparkContext.broadcast(cents)
     val metricId = graft.functions.DistanceKernels.metricId(metric)
     queries.select(col(vecCol).cast("array<float>"))
       .as[Array[Float]]
       .flatMap { qv =>
-        val cs = bc.value
-        val heap = new scala.collection.mutable.PriorityQueue[(Double, Long)]()(
-          Ordering.by(p => (p._1, p._2)))
-        var i = 0
-        while (i < cs.length) {
-          val d = graft.functions.DistanceKernels.computeArrays(qv, cs(i)._2, metricId)
-          if (heap.size < nProbe) heap.enqueue((d, cs(i)._1))
-          else if (Ordering.Tuple2[Double, Long].lt((d, cs(i)._1), heap.head)) {
-            heap.dequeue(); heap.enqueue((d, cs(i)._1))
-          }
-          i += 1
-        }
-        heap.toSeq.map(_._2)
+        nearestCells(qv, bc.value, nProbe, metricId)
       }
       .distinct().collect().sorted
   }
@@ -613,8 +612,13 @@ object Ann {
         if (n <= target) base
         else base.filter(pmod(xxhash64(col(idCol), lit(seed)), lit(n / target)) === 0)
       }
-    val feat = sampled.select(array_to_vector(col(vecCol)).as("features"))
-    val model = new KMeans().setK(nList).setSeed(seed).setMaxIter(20).fit(feat)
+    // KMeans reads its input twice in one task (a zip), and a DSv2 scan
+    // such as the xvec source keeps one reader per task, so the second read
+    // would close the first: fit over the sample materialized once
+    val feat = Materialize.view(sampled.select(array_to_vector(col(vecCol)).as("features")))
+    val model =
+      try new KMeans().setK(nList).setSeed(seed).setMaxIter(20).fit(feat)
+      finally Materialize.free(feat)
     val rows = model.clusterCenters.zipWithIndex.map { case (v, i) =>
       (i.toLong, v.toArray.map(_.toFloat).toSeq)
     }
@@ -762,33 +766,21 @@ object Ann {
     * per query keeps exactly its `cell_rank <= width` prefix.
     */
   private def rankedProbes(queries: DataFrame, cents: Array[(Long, Array[Float])],
-      maxProbe: Int, metricId: Int, idCol: String, vecCol: String,
-      predicateCol: String): DataFrame = {
+      maxProbe: Int, metric: String, idCol: String, vecCol: String): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(cents)
+    val metricId = graft.functions.DistanceKernels.metricId(metric)
     queries
       .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"),
-        col(predicateCol).cast("binary"))
-      .as[(Long, Array[Float], Array[Byte])]
-      .flatMap { case (qid, qv, blob) =>
-        val cs = bc.value
-        val heap = new scala.collection.mutable.PriorityQueue[(Double, Long)]()(
-          Ordering.by(p => (p._1, p._2)))
-        var i = 0
-        while (i < cs.length) {
-          val d = graft.functions.DistanceKernels.computeArrays(qv, cs(i)._2, metricId)
-          if (heap.size < maxProbe) heap.enqueue((d, cs(i)._1))
-          else if (Ordering.Tuple2[Double, Long].lt((d, cs(i)._1), heap.head)) {
-            heap.dequeue(); heap.enqueue((d, cs(i)._1))
-          }
-          i += 1
-        }
-        heap.toSeq.sorted.zipWithIndex.map { case ((_, cell), r) =>
-          (qid, qv, blob, cell, r + 1)
+        col(HybridGroundTruth.PredicateIndex))
+      .as[(Long, Array[Float], Int)]
+      .flatMap { case (qid, qv, pred) =>
+        nearestCells(qv, bc.value, maxProbe, metricId).zipWithIndex.map { case (cell, r) =>
+          (qid, qv, pred, cell, r + 1)
         }
       }
-      .toDF("query_id", "q_vec", "_pred", "cell", "cell_rank")
+      .toDF("query_id", "q_vec", "pred", "cell", "cell_rank")
   }
 
   /** PREDICATE-AWARE probe planning: for each query, the number of cells
@@ -796,9 +788,10 @@ object Ann {
     * `ceil(safety · k)` — walked over the query's own nearest-cell order
     * with per-cell eligible counts from [[cellSelectivityStats]] (the
     * query's predicate evaluated against each cell's distinct `metaCol`
-    * values — same evaluator as every hybrid path). Queries whose
-    * cumulative eligible mass never reaches the target plan `maxProbe`
-    * (the starved tail guaranteed-k heals exactly).
+    * values, its tree taken from [[HybridGroundTruth.perQuery]] like every
+    * hybrid path's). Queries whose cumulative eligible mass never reaches
+    * the target plan `maxProbe` (the starved tail guaranteed-k heals
+    * exactly).
     *
     * Output: (query_id, n_probe, est_eligible). This is the upfront
     * alternative to [[ivfSearchFilteredGuaranteed]]'s react-after-starving
@@ -812,18 +805,22 @@ object Ann {
       minProbe: Int, maxProbe: Int, metric: String = "COSINE",
       idCol: String = "vec_id", vecCol: String = "embedding",
       predicateCol: String = "predicate"): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
+    val (qs, preds) = HybridGroundTruth.perQuery(queries, predicateCol, Seq(metaCol))
+    probeWidths(qs, preds, collectCentroids(centroids, idCol, vecCol, "adaptiveProbeWidths"),
+      stats, metaCol, k, safety, minProbe, maxProbe, metric, idCol, vecCol)
+  }
+
+  /** [[adaptiveProbeWidths]] over a query side that went through
+    * [[HybridGroundTruth.perQuery]].
+    */
+  private def probeWidths(qs: DataFrame, preds: HybridGroundTruth.QueryPredicates,
+      cents: Array[(Long, Array[Float])], stats: DataFrame, metaCol: String, k: Int,
+      safety: Double, minProbe: Int, maxProbe: Int, metric: String, idCol: String,
+      vecCol: String): DataFrame = {
     require(minProbe > 0 && maxProbe >= minProbe && k > 0,
       s"bad widths: minProbe=$minProbe maxProbe=$maxProbe k=$k")
     require(safety > 0, s"safety must be positive, got $safety")
-    val cents: Array[(Long, Array[Float])] = centroids
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    require(cents.nonEmpty, "adaptiveProbeWidths: empty centroid set")
-    val metricId = graft.functions.DistanceKernels.metricId(metric)
-    val probes = rankedProbes(queries, cents, maxProbe, metricId,
-      idCol, vecCol, predicateCol)
+    val probes = rankedProbes(qs, cents, maxProbe, metric, idCol, vecCol)
     val target = math.ceil(safety * k).toLong
     // eligible mass per (query, probed cell): every distinct metaCol value
     // in the cell contributes its count iff the query's predicate matches
@@ -834,8 +831,7 @@ object Ann {
       .join(broadcast(stats), Seq("cell"), "left")
       .withColumn("elig_n",
         when(col("n").isNotNull &&
-          HybridGroundTruth.matchesColumn(col("_pred"),
-            struct(col(metaCol).as(metaCol))), col("n"))
+          preds.filter(col("pred"), struct(col(metaCol).as(metaCol))), col("n"))
           .otherwise(lit(0L)))
       .groupBy("query_id", "cell", "cell_rank")
       .agg(sum("elig_n").as("elig"))
@@ -878,26 +874,28 @@ object Ann {
     // Materialize.view): previously every grid cell re-ran the full
     // upstream index assignment. stats/queries stay lazy (broadcast-scale).
     val idx = Materialize.view(index)
-    val st = stats
-    val qs = queries
+    val (qs, preds) = HybridGroundTruth.perQuery(queries, predicateCol, metadataCols)
+    preds.requireFields(Seq(metaCol))
+    val cents = collectCentroids(centroids, idCol, vecCol, "safetyCalibrationCard")
     val truth = Materialize.view(HybridGroundTruth.knnWithPerQueryPredicates(
-        qs, idx.select((Seq(col("id").as(idCol),
+        queries, idx.select((Seq(col("id").as(idCol),
           col("vec").as(vecCol)) ++ metadataCols.map(col)): _*),
         k, metric, idCol, vecCol, predicateCol, metadataCols, excludeSelf)
       .select(col("query_id"), col("neighbor_id")))
     val truthN = truth.groupBy("query_id").agg(count(lit(1)).as("truth_n"))
-    val tiers = qs.select(col(idCol).cast("long").as("query_id"),
+    val tiers = queries.select(col(idCol).cast("long").as("query_id"),
       col(tierCol).as("tier"))
     val grid = safeties.map { s =>
-      val widths = adaptiveProbeWidths(qs, centroids, st, metaCol,
-        k, s, minProbe, maxProbe, metric, idCol, vecCol, predicateCol)
-      val pred = ivfSearchFilteredAdaptive(qs, idx, centroids, st,
-        metaCol, k, s, minProbe, maxProbe, metric, idCol, vecCol,
-        predicateCol, metadataCols, excludeSelf)
+      val widths = probeWidths(qs, preds, cents, stats, metaCol, k, s, minProbe, maxProbe,
+        metric, idCol, vecCol)
+      val pred = searchFilteredAdaptive(qs, preds, idx, centroids, stats, metaCol, k, s,
+        minProbe, maxProbe, metric, idCol, vecCol, metadataCols, excludeSelf)
       val hits = pred.select("query_id", "neighbor_id")
         .join(truth, Seq("query_id", "neighbor_id"), "left_semi")
         .groupBy("query_id").agg(count(lit(1)).as("h"))
-      tiers.join(widths.select("query_id", "n_probe"), Seq("query_id"))
+      // tiers (one row per query) is shared by every grid cell: broadcast
+      // it, so each cell reuses its exchange
+      broadcast(tiers).join(widths.select("query_id", "n_probe"), Seq("query_id"))
         .join(truthN, Seq("query_id"))
         .join(hits, Seq("query_id"), "left")
         .groupBy("tier")
@@ -927,24 +925,26 @@ object Ann {
       idCol: String = "vec_id", vecCol: String = "embedding",
       predicateCol: String = "predicate", metadataCols: Seq[String] = Nil,
       excludeSelf: Boolean = false): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val cents: Array[(Long, Array[Float])] = centroids
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    require(cents.nonEmpty, "ivfSearchFilteredAdaptive: empty centroid set")
-    val metricId = graft.functions.DistanceKernels.metricId(metric)
-    val widths = adaptiveProbeWidths(queries, centroids, stats, metaCol, k,
-      safety, minProbe, maxProbe, metric, idCol, vecCol, predicateCol)
-    val probes = rankedProbes(queries, cents, maxProbe, metricId,
-        idCol, vecCol, predicateCol)
+    val (qs, preds) = HybridGroundTruth.perQuery(queries, predicateCol, metadataCols)
+    preds.requireFields(Seq(metaCol))
+    searchFilteredAdaptive(qs, preds, index, centroids, stats, metaCol, k, safety,
+      minProbe, maxProbe, metric, idCol, vecCol, metadataCols, excludeSelf)
+  }
+
+  /** [[ivfSearchFilteredAdaptive]] over a query side that went through
+    * [[HybridGroundTruth.perQuery]].
+    */
+  private def searchFilteredAdaptive(qs: DataFrame, preds: HybridGroundTruth.QueryPredicates,
+      index: DataFrame, centroids: DataFrame, stats: DataFrame, metaCol: String, k: Int,
+      safety: Double, minProbe: Int, maxProbe: Int, metric: String, idCol: String,
+      vecCol: String, metadataCols: Seq[String], excludeSelf: Boolean): DataFrame = {
+    val cents = collectCentroids(centroids, idCol, vecCol, "ivfSearchFilteredAdaptive")
+    val widths = probeWidths(qs, preds, cents, stats, metaCol, k, safety, minProbe, maxProbe,
+      metric, idCol, vecCol)
+    val probes = rankedProbes(qs, cents, maxProbe, metric, idCol, vecCol)
       .join(widths.select("query_id", "n_probe"), Seq("query_id"))
       .filter(col("cell_rank") <= col("n_probe"))
-    val metaStruct = struct(metadataCols.map(c => col(c).as(c)): _*)
-    val pairs = probes.join(index, "cell")
-      .filter(HybridGroundTruth.matchesColumn(col("_pred"), metaStruct))
-    Knn.topK(pairs, VectorFunctions.distance(col("q_vec"), col("vec"), metric),
-      col("id"), k, excludeSelf)
+    filteredTopK(probes, preds, index, k, metric, metadataCols, excludeSelf)
   }
 
   /** GUARANTEED-k filtered search: [[ivfSearchFiltered]]'s pre-filter
@@ -969,9 +969,10 @@ object Ann {
       predicateCol: String = "predicate", metadataCols: Seq[String] = Nil,
       excludeSelf: Boolean = false): DataFrame = {
     val nList = centroids.count().toInt
+    val (qs, preds) = HybridGroundTruth.perQuery(queries, predicateCol, metadataCols)
     // consumed by the starvation count AND the union
-    val approx = Materialize.view(ivfSearchFiltered(queries, index, centroids, k, nProbe,
-      metric, idCol, vecCol, predicateCol, metadataCols, excludeSelf))
+    val approx = Materialize.view(searchFiltered(qs, preds, index, centroids, k, nProbe,
+      metric, idCol, vecCol, metadataCols, excludeSelf))
     // a query is starved if its list is short — including EMPTY (absent
     // from approx entirely), hence the left join from the query relation
     val starvedIds = Materialize.view(queries.select(col(idCol).cast("long").as("query_id"))
@@ -979,10 +980,10 @@ object Ann {
         Seq("query_id"), "left")
       .filter(coalesce(col("n_got"), lit(0L)) < k)
       .select("query_id"))
-    val starved = queries.join(
+    val starved = qs.join(
       starvedIds.withColumnRenamed("query_id", idCol), Seq(idCol), "left_semi")
-    val exact = ivfSearchFiltered(starved, index, centroids, k, nList,
-      metric, idCol, vecCol, predicateCol, metadataCols, excludeSelf)
+    val exact = searchFiltered(starved, preds, index, centroids, k, nList,
+      metric, idCol, vecCol, metadataCols, excludeSelf)
     approx.join(starvedIds, Seq("query_id"), "left_anti")
       .withColumn("escalated", lit(false))
       .unionByName(exact.withColumn("escalated", lit(true)))
@@ -1011,36 +1012,39 @@ object Ann {
     */
   def routePlan(queries: DataFrame, stats: DataFrame, metaCol: String,
       exactMax: Long, wideFraction: Double, idCol: String = "vec_id",
-      predicateCol: String = "predicate"): DataFrame =
-    routesAndRollup(queries, stats, metaCol, exactMax, wideFraction, idCol, predicateCol)._1
+      predicateCol: String = "predicate"): DataFrame = {
+    val (qs, preds) = HybridGroundTruth.perQuery(queries, predicateCol, Seq(metaCol))
+    routesAndRollup(qs, preds, stats, metaCol, exactMax, wideFraction, idCol)._1
+  }
 
   /** [[routePlan]] computed once, for a caller that reads only the
     * routes: the per-value rollup they were planned from is freed.
     */
-  private def materializedRoutes(queries: DataFrame, stats: DataFrame, metaCol: String,
-      exactMax: Long, wideFraction: Double, idCol: String,
-      predicateCol: String): DataFrame = {
-    val (routes, rollup) = routesAndRollup(queries, stats, metaCol, exactMax, wideFraction,
-      idCol, predicateCol)
+  private def materializedRoutes(qs: DataFrame, preds: HybridGroundTruth.QueryPredicates,
+      stats: DataFrame, metaCol: String, exactMax: Long, wideFraction: Double,
+      idCol: String): DataFrame = {
+    val (routes, rollup) = routesAndRollup(qs, preds, stats, metaCol, exactMax,
+      wideFraction, idCol)
     try Materialize.view(routes) finally Materialize.free(rollup)
   }
 
-  /** (routes, the materialized per-value rollup they read). */
-  private def routesAndRollup(queries: DataFrame, stats: DataFrame, metaCol: String,
-      exactMax: Long, wideFraction: Double, idCol: String,
-      predicateCol: String): (DataFrame, DataFrame) = {
+  /** (routes, the materialized per-value rollup they read), over a query
+    * side that went through [[HybridGroundTruth.perQuery]].
+    */
+  private def routesAndRollup(qs: DataFrame, preds: HybridGroundTruth.QueryPredicates,
+      stats: DataFrame, metaCol: String, exactMax: Long, wideFraction: Double,
+      idCol: String): (DataFrame, DataFrame) = {
     require(exactMax >= 0, s"exactMax must be >= 0, got $exactMax")
     require(wideFraction > 0 && wideFraction <= 1,
       s"wideFraction must be in (0, 1], got $wideFraction")
     // tiny: one row per distinct metadata value
     val globalStats = Materialize.view(stats.groupBy(col(metaCol)).agg(sum("n").as("n")))
     val totalN = globalStats.agg(sum("n").as("total"))
-    (queries
-      .select(col(idCol).cast("long").as("query_id"),
-        col(predicateCol).cast("binary").as("_pred"))
+    (qs
+      .select(col(idCol).cast("long").as("query_id"), col(HybridGroundTruth.PredicateIndex))
       .crossJoin(broadcast(globalStats))
       .withColumn("elig_n",
-        when(HybridGroundTruth.matchesColumn(col("_pred"),
+        when(preds.filter(col(HybridGroundTruth.PredicateIndex),
           struct(col(metaCol).as(metaCol))), col("n")).otherwise(lit(0L)))
       .groupBy("query_id").agg(sum("elig_n").as("est_eligible"))
       .crossJoin(broadcast(totalN))
@@ -1057,7 +1061,7 @@ object Ann {
     * filtered scan (nProbe = nList — the cost is their tiny eligible set,
     * not the corpus); `planned` queries run the stats-planned adaptive
     * search; `wide` queries run fixed-`nProbeWide` pre-filter search.
-    * Same predicate evaluator, candidate join and bounded heap on every
+    * Same predicate trees, candidate join and bounded heap on every
     * path — only the probe-set policy differs.
     *
     * Scale shape: three searches each sized by its slice (empty slices
@@ -1072,7 +1076,6 @@ object Ann {
       idCol: String = "vec_id", vecCol: String = "embedding",
       predicateCol: String = "predicate", metadataCols: Seq[String] = Nil,
       excludeSelf: Boolean = false): DataFrame = {
-    val nList = centroids.count().toInt
     // the index feeds all three route searches — materialize it once
     // (no-op when the caller already did; Catalyst does not dedupe common
     // subplans across join/union legs, so an unmaterialized index is
@@ -1081,23 +1084,34 @@ object Ann {
     // relations; re-deriving them per leg is cheaper than a checkpoint
     // job each (measured on the q246-q249 cards).
     val idx = Materialize.view(index)
-    val st = stats
-    val qs = queries
-    val routes = materializedRoutes(qs, st, metaCol, exactMax, wideFraction,
-      idCol, predicateCol)
+    val (qs, preds) = HybridGroundTruth.perQuery(queries, predicateCol, metadataCols)
+    preds.requireFields(Seq(metaCol))
+    val routes = materializedRoutes(qs, preds, stats, metaCol, exactMax, wideFraction, idCol)
+    routedSearch(qs, preds, routes, idx, centroids, stats, metaCol, k, nProbeWide, safety,
+      minProbe, maxProbe, metric, idCol, vecCol, metadataCols, excludeSelf)
+  }
+
+  /** [[hybridSearchRouted]]'s three searches over a query side that went
+    * through [[HybridGroundTruth.perQuery]], sliced by its `routes`.
+    */
+  private def routedSearch(qs: DataFrame, preds: HybridGroundTruth.QueryPredicates,
+      routes: DataFrame, idx: DataFrame, centroids: DataFrame, stats: DataFrame,
+      metaCol: String, k: Int, nProbeWide: Int, safety: Double, minProbe: Int,
+      maxProbe: Int, metric: String, idCol: String, vecCol: String,
+      metadataCols: Seq[String], excludeSelf: Boolean): DataFrame = {
+    val nList = centroids.count().toInt
     def slice(route: String): DataFrame = qs.join(
       routes.filter(col("route") === route)
         .select(col("query_id").as(idCol)), Seq(idCol), "left_semi")
-    val exact = ivfSearchFiltered(slice("exact"), idx, centroids, k, nList,
-      metric, idCol, vecCol, predicateCol, metadataCols, excludeSelf)
+    val exact = searchFiltered(slice("exact"), preds, idx, centroids, k, nList,
+      metric, idCol, vecCol, metadataCols, excludeSelf)
       .withColumn("route", lit("exact"))
-    val planned = ivfSearchFilteredAdaptive(slice("planned"), idx,
-      centroids, st, metaCol, k, safety, minProbe, maxProbe, metric,
-      idCol, vecCol, predicateCol, metadataCols, excludeSelf)
+    val planned = searchFilteredAdaptive(slice("planned"), preds, idx,
+      centroids, stats, metaCol, k, safety, minProbe, maxProbe, metric,
+      idCol, vecCol, metadataCols, excludeSelf)
       .withColumn("route", lit("planned"))
-    val wide = ivfSearchFiltered(slice("wide"), idx, centroids, k,
-      nProbeWide, metric, idCol, vecCol, predicateCol, metadataCols,
-      excludeSelf)
+    val wide = searchFiltered(slice("wide"), preds, idx, centroids, k,
+      nProbeWide, metric, idCol, vecCol, metadataCols, excludeSelf)
       .withColumn("route", lit("wide"))
     exact.unionByName(planned).unionByName(wide)
   }
@@ -1117,20 +1131,16 @@ object Ann {
       predicateCol: String = "predicate", metadataCols: Seq[String] = Nil,
       excludeSelf: Boolean = false): DataFrame = {
     // materialize the INDEX once for the legs below (routed search ×3
-    // routes, truth pass) — see hybridSearchRouted, which sees the
-    // materialized leaf and does not re-checkpoint. stats/queries stay
-    // lazy (broadcast-scale; a checkpoint job each costs more than
-    // re-derivation).
+    // routes, truth pass). stats/queries stay lazy (broadcast-scale; a
+    // checkpoint job each costs more than re-derivation).
     val idx = Materialize.view(index)
-    val st = stats
-    val qs = queries
-    val routes = materializedRoutes(qs, st, metaCol, exactMax, wideFraction,
-      idCol, predicateCol)
-    val pred = hybridSearchRouted(qs, idx, centroids, st, metaCol,
-      k, exactMax, wideFraction, nProbeWide, safety, minProbe, maxProbe,
-      metric, idCol, vecCol, predicateCol, metadataCols, excludeSelf)
+    val (qs, preds) = HybridGroundTruth.perQuery(queries, predicateCol, metadataCols)
+    preds.requireFields(Seq(metaCol))
+    val routes = materializedRoutes(qs, preds, stats, metaCol, exactMax, wideFraction, idCol)
+    val pred = routedSearch(qs, preds, routes, idx, centroids, stats, metaCol, k, nProbeWide,
+      safety, minProbe, maxProbe, metric, idCol, vecCol, metadataCols, excludeSelf)
     val truth = Materialize.view(HybridGroundTruth.knnWithPerQueryPredicates(
-        qs, idx.select((Seq(col("id").as(idCol),
+        queries, idx.select((Seq(col("id").as(idCol),
           col("vec").as(vecCol)) ++ metadataCols.map(col)): _*),
         k, metric, idCol, vecCol, predicateCol, metadataCols, excludeSelf)
       .select(col("query_id"), col("neighbor_id")))

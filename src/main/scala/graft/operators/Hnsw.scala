@@ -294,28 +294,13 @@ object Hnsw {
     val spark = queries.sparkSession
     import spark.implicits._
     val mid = DistanceKernels.metricId(metric)
-    val cents: Array[(Long, Array[Float])] = centroids
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    require(cents.nonEmpty, "hnswSearch: empty centroid set")
+    val cents = Ann.collectCentroids(centroids, idCol, vecCol, "hnswSearch")
     val bc = spark.sparkContext.broadcast(cents)
     val probes = queries
       .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
       .as[(Long, Array[Float])]
       .flatMap { case (qid, qv) =>
-        val cs = bc.value
-        val heap = new scala.collection.mutable.PriorityQueue[(Double, Long)]()(
-          Ordering.by(p => (p._1, p._2)))
-        var i = 0
-        while (i < cs.length) {
-          val d = DistanceKernels.computeArrays(qv, cs(i)._2, mid)
-          if (heap.size < nProbe) heap.enqueue((d, cs(i)._1))
-          else if (Ordering.Tuple2[Double, Long].lt((d, cs(i)._1), heap.head)) {
-            heap.dequeue(); heap.enqueue((d, cs(i)._1))
-          }
-          i += 1
-        }
-        heap.toSeq.map { case (_, cell) => (cell, qid, qv) }
+        Ann.nearestCells(qv, bc.value, nProbe, mid).map(cell => (cell, qid, qv))
       }
     val rows = index.select(col("cell"), col("id"),
         col("vec").cast("array<float>"), col("nbrs").cast("array<long>"))
@@ -357,8 +342,9 @@ object Hnsw {
     * heap, so the returned top-k is over the ELIGIBLE set, never "search
     * then discard". `index` must come from [[hnswIndexWithMeta]].
     * Saturated (ef >= |cell|) the result provably equals the filtered
-    * exhaustive scan over the probed cells — q305's oracle. Missing
-    * metadata fields fail loudly (the exact-path semantics).
+    * exhaustive scan over the probed cells — q305's oracle. The trees
+    * come from [[HybridGroundTruth.perQuery]], checked against the index
+    * columns, so a missing field fails before any job runs.
     * Output: (query_id, neighbor_id, rank, dist).
     */
   def hnswSearchFiltered(queries: DataFrame, index: DataFrame,
@@ -368,39 +354,26 @@ object Hnsw {
       excludeSelf: Boolean = false): DataFrame = {
     require(k >= 1 && nProbe >= 1 && ef >= k,
       s"hnswSearchFiltered: need k >= 1, nProbe >= 1, ef >= k (k=$k nProbe=$nProbe ef=$ef)")
+    // a predicate may name any index column, as the beam reads index rows
+    val (qs, preds) = HybridGroundTruth.perQuery(queries, predicateCol, index.columns.toSeq)
     val spark = queries.sparkSession
     import spark.implicits._
     val mid = DistanceKernels.metricId(metric)
-    val cents: Array[(Long, Array[Float])] = centroids
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    require(cents.nonEmpty, "hnswSearchFiltered: empty centroid set")
+    val cents = Ann.collectCentroids(centroids, idCol, vecCol, "hnswSearchFiltered")
     val bc = spark.sparkContext.broadcast(cents)
-    val probes = queries
+    val probes = qs
       .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"),
-        col(predicateCol).cast("binary"))
-      .as[(Long, Array[Float], Array[Byte])]
-      .flatMap { case (qid, qv, blob) =>
-        val cs = bc.value
-        val heap = new scala.collection.mutable.PriorityQueue[(Double, Long)]()(
-          Ordering.by(p => (p._1, p._2)))
-        var i = 0
-        while (i < cs.length) {
-          val d = DistanceKernels.computeArrays(qv, cs(i)._2, mid)
-          if (heap.size < nProbe) heap.enqueue((d, cs(i)._1))
-          else if (Ordering.Tuple2[Double, Long].lt((d, cs(i)._1), heap.head)) {
-            heap.dequeue(); heap.enqueue((d, cs(i)._1))
-          }
-          i += 1
-        }
-        heap.toSeq.map { case (_, cell) => (cell, qid, qv, blob) }
+        col(HybridGroundTruth.PredicateIndex))
+      .as[(Long, Array[Float], Int)]
+      .flatMap { case (qid, qv, pred) =>
+        Ann.nearestCells(qv, bc.value, nProbe, mid).map(cell => (cell, qid, qv, pred))
       }
-      .toDF("cell", "query_id", "q_vec", "_pred")
+      .toDF("cell", "query_id", "q_vec", "pred")
     val cand = probes
       .groupByKey(_.getLong(0))(org.apache.spark.sql.Encoders.scalaLong)
       .cogroup(index
         .groupByKey(_.getAs[Long]("cell"))(org.apache.spark.sql.Encoders.scalaLong)) {
-        (cell, qs, grows) =>
+        (cell, cellQueries, grows) =>
           val rows = grows.toArray.sortBy(_.getAs[Long]("id"))
           if (rows.isEmpty) Iterator.empty
           else {
@@ -411,25 +384,16 @@ object Hnsw {
             rows.iterator.zipWithIndex.foreach { case (r, i) =>
               g.adj(i) ++= r.getAs[Seq[Long]]("nbrs").iterator.flatMap(idToIdx.get(_))
             }
-            qs.flatMap { q =>
+            cellQueries.flatMap { q =>
               val qid = q.getLong(1)
               val qv = q.getAs[Seq[Float]](2).toArray
-              val blob = q.getAs[Array[Byte]](3)
-              val tree = Option(blob).map(graft.predicates.PNodeCodec.decodeFramed)
-              // memoized per-query eligibility over the cell's rows; a
-              // predicate naming a missing metadata column throws here
-              // (Row.fieldIndex), matching the exact path's loud failure
+              val pred = q.getInt(3)
+              // memoized per-query eligibility over the cell's rows
               val memo = new Array[Byte](rows.length)
               def eligible(i: Int): Boolean = {
                 if (excludeSelf && ids(i) == qid) return false
-                tree match {
-                  case None => true
-                  case Some(t) =>
-                    if (memo(i) == 0) memo(i) =
-                      if (graft.predicates.PNodeEvaluator.matchesRow(t, rows(i))) 1
-                      else 2
-                    memo(i) == 1
-                }
+                if (memo(i) == 0) memo(i) = if (preds.matches(pred, rows(i))) 1 else 2
+                memo(i) == 1
               }
               g.beam(qv, 0, ef, eligible).iterator
                 .map { case (d, i) => (qid, ids(i), d) }

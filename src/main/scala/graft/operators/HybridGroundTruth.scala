@@ -1,7 +1,9 @@
 package graft.operators
 
+import scala.collection.immutable.ArraySeq
+
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 
 import graft.predicates.{ConjugateNode, PNode, PNodeCodec, PNodeEvaluator, PredicateNode}
 
@@ -12,94 +14,77 @@ import graft.predicates.{ConjugateNode, PNode, PNodeCodec, PNodeEvaluator, Predi
   * metadata matches that predicate).
   *
   * Spark shape: the query side carries framed PNode blobs; the base side
-  * carries its metadata columns as a struct; a row-level evaluator applies
-  * query-specific trees inside Knn.knn's pair stream (same broadcast +
-  * bounded-heap plan — this operator only supplies the pairPredicate).
+  * carries its metadata columns as a struct. [[perQuery]] is the one seam
+  * every hybrid search (exact, IVF, adaptive, routed, binary, graph and
+  * IVF-PQ) reads its trees from: each distinct blob is decoded once on the
+  * driver and the query side carries an int index into the decoded trees,
+  * so the per-pair filter is one fixed UDF and no executor decodes a blob.
   */
 object HybridGroundTruth {
 
-  /** Per-executor decoded-tree cache (keyed by blob bytes): lock-free
-    * ConcurrentHashMap reads with FIFO size-bounding (misses enqueue their
-    * key; over-budget inserts evict the oldest — not strict LRU, but
-    * bounded, and the hot path never takes a lock). Each entry memoizes the
-    * last StructType REFERENCE it validated against: within one query every
-    * Row carries the same schema instance, so validation collapses to one
-    * `eq` check per row; an unseen instance just re-validates (exact — no
-    * hash-collision false positives — and merely costs the optimization).
+  /** The column [[perQuery]] adds to the query side: 0 for a null blob
+    * (unfiltered), i >= 1 for the i-th distinct tree.
     */
-  private final class TreeEntry(val tree: PNode, val fields: Set[String]) {
-    // identity REFERENCES of schema instances this tree was validated
-    // against (bounded): concurrent tasks each carry their own deserialized
-    // StructType, so a single slot would thrash — a small eq-scanned list
-    // accepts one instance per task. Races may drop a prepend (benign:
-    // re-validation is correct, just unmemoized for that row).
-    @volatile var validatedSchemas: List[AnyRef] = Nil
-    def isValidated(schema: AnyRef): Boolean = validatedSchemas.exists(_ eq schema)
-    def markValidated(schema: AnyRef): Unit =
-      validatedSchemas = (schema :: validatedSchemas).take(64)
-  }
+  val PredicateIndex = "_pred_idx"
 
-  private object TreeCache {
-    private val MaxEntries = 10000
-    private val cache = new java.util.concurrent.ConcurrentHashMap[Seq[Byte], TreeEntry]()
-    private val insertion = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Byte]]()
-    def get(blob: Array[Byte]): TreeEntry = {
-      val key: Seq[Byte] = scala.collection.immutable.ArraySeq.unsafeWrapArray(blob)
-      val hit = cache.get(key)
-      if (hit != null) return hit
-      val entry = cache.computeIfAbsent(key, _ => {
-        // decode BEFORE enqueueing: a throwing decode must not leave a
-        // phantom key desyncing the FIFO from the cache
-        val tree = PNodeCodec.decodeFramed(blob)
-        insertion.add(key)
-        new TreeEntry(tree, fieldsOf(tree))
-      })
-      while (cache.size() > MaxEntries) {
-        val oldest = insertion.poll()
-        if (oldest == null) return entry
-        cache.remove(oldest)
-      }
-      entry
+  /** The query side's distinct predicate trees, decoded on the driver. */
+  final class QueryPredicates private[HybridGroundTruth] (trees: Array[PNode])
+      extends Serializable {
+
+    /** Whether the metadata row passes the predicate of index `i`: 0 is
+      * unfiltered, i >= 1 is the i-th distinct tree.
+      */
+    def matches(i: Int, meta: Row): Boolean =
+      i == 0 || PNodeEvaluator.matchesRow(trees(i - 1), meta)
+
+    /** [[matches]] as a per-pair filter over the query's index column and
+      * the candidate's metadata struct. The UDF is the same on every call,
+      * so its generated code is too; only the captured trees differ.
+      */
+    def filter(index: Column, meta: Column): Column =
+      udf((i: Int, m: Row) => matches(i, m)).apply(index, meta)
+
+    /** Fails, before any job reads a candidate, when a tree names a field
+      * that is not in `columns`: the reference's missing-field-behaves-as-
+      * null semantics would silently produce an empty "ground truth" when
+      * the caller forgets a metadata column.
+      */
+    def requireFields(columns: Seq[String]): Unit = {
+      val missing = trees.flatMap(fieldsOf).distinct.filterNot(columns.contains)
+      if (missing.nonEmpty) throw new IllegalArgumentException(
+        s"predicate references fields ${missing.mkString(",")} not present in " +
+          s"metadataCols ${columns.mkString("[", ",", "]")}")
     }
-    private def fieldsOf(n: PNode): Set[String] = n match {
-      case ConjugateNode(_, cs) => cs.flatMap(fieldsOf).toSet
-      case p: PredicateNode     => Set(p.effectiveName)
+
+    private def fieldsOf(n: PNode): Seq[String] = n match {
+      case ConjugateNode(_, cs) => cs.flatMap(fieldsOf)
+      case p: PredicateNode     => Seq(p.effectiveName)
     }
   }
 
-  /** Decode-and-evaluate against the metadata struct. A tree referencing a
-    * field that is not in the struct fails LOUDLY — the reference's
-    * missing-field-behaves-as-null semantics would silently produce an
-    * empty "ground truth" when the caller forgets a metadata column.
+  /** Decode each distinct predicate blob of `queries` once, on the driver
+    * (the query side is broadcast-sized by contract), and check every
+    * field the trees name against `metadataCols`.
+    *
+    * @return `queries` plus the int column [[PredicateIndex]], and the
+    *   decoded trees that index points into
     */
-  private val matchesUdf = udf { (blob: Array[Byte], meta: Row) =>
-    if (blob == null) true
-    else {
-      val entry = TreeCache.get(blob)
-      val schema = meta.schema
-      if (!entry.isValidated(schema)) {
-        val names = schema.fieldNames
-        val missing = entry.fields.filterNot(names.contains)
-        if (missing.nonEmpty) {
-          throw new IllegalArgumentException(
-            s"predicate references fields ${missing.mkString(",")} not present in " +
-              s"metadataCols ${names.mkString("[", ",", "]")}")
-        }
-        entry.markValidated(schema)
-      }
-      PNodeEvaluator.matchesRow(entry.tree, meta)
+  def perQuery(queries: DataFrame, predicateCol: String,
+      metadataCols: Seq[String]): (DataFrame, QueryPredicates) = {
+    val blob = col(predicateCol).cast("binary")
+    val blobs = queries.select(blob).collect()
+      .flatMap(r => Option(r.getAs[Array[Byte]](0)))
+      .map(b => ArraySeq.unsafeWrapArray(b)).distinct
+    val preds = new QueryPredicates(blobs.map(b => PNodeCodec.decodeFramed(b.toArray)))
+    preds.requireFields(metadataCols)
+    val index = blobs.zipWithIndex.map { case (b, i) => b -> (i + 1) }.toMap
+    val lookup = udf { (b: Array[Byte]) =>
+      if (b == null) 0
+      else index.getOrElse(ArraySeq.unsafeWrapArray(b), throw new IllegalStateException(
+        "a predicate blob changed after it was decoded: the query side must be deterministic"))
     }
+    (queries.withColumn(PredicateIndex, lookup(blob)), preds)
   }
-
-  /** The decoded-and-cached per-pair predicate matcher as a Column — the
-    * same evaluator the exact hybrid path runs, exposed so the FILTERED
-    * approximate path ([[Ann.ivfSearchFiltered]]) applies identical
-    * semantics (null blob = unfiltered; missing metadata field = loud
-    * failure) to candidates before its distance kernel.
-    */
-  def matchesColumn(blob: org.apache.spark.sql.Column,
-      metaStruct: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    matchesUdf(blob, metaStruct)
 
   /** Top-k per query restricted by the query's own predicate over the base
     * metadata columns. Delegates the physical plan to Knn.knn.
@@ -118,11 +103,12 @@ object HybridGroundTruth {
       predicateCol: String = "predicate",
       metadataCols: Seq[String] = Nil,
       excludeSelf: Boolean = false): DataFrame = {
+    val (qs, preds) = perQuery(queries, predicateCol, metadataCols)
     val metaStruct = struct(metadataCols.map(c => col(s"b_$c").as(c)): _*)
-    Knn.knn(queries, base, k, metric, idCol, vecCol,
-      queryExtra = Seq(predicateCol),
+    Knn.knn(qs, base, k, metric, idCol, vecCol,
+      queryExtra = Seq(PredicateIndex),
       baseExtra = metadataCols,
-      pairPredicate = Some(matchesUdf(col(s"q_$predicateCol"), metaStruct)),
+      pairPredicate = Some(preds.filter(col(s"q_$PredicateIndex"), metaStruct)),
       excludeSelf = excludeSelf)
   }
 

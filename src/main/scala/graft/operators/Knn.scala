@@ -245,26 +245,20 @@ object Knn {
     }
   }
 
-  /** J4 `verify_profiles`: recall@k for several profiles at once —
-    * (profile, avg_recall) rows, one per named (predicted, truth) pair.
-    */
-  def verifyProfiles(profiles: Seq[(String, DataFrame, DataFrame)], k: Int): DataFrame =
-    profiles.map { case (name, predicted, truth) =>
-      avgRecall(predicted, truth, k).select(lit(name).as("profile"), col("avg_recall"))
-    }.reduce(_ unionByName _)
-
   /** recall@k between two (query_id, neighbor_id) neighbor sets — J4's
-    * verify_knn: |predicted ∩ truth| / k averaged over queries.
+    * verify_knn: |predicted ∩ truth| / k averaged over the truth's
+    * queries, zero-hit ones included. One grouped aggregation: both sets
+    * meet per query, and each predicted row whose neighbor the truth
+    * holds is one hit.
     */
   def avgRecall(predicted: DataFrame, truth: DataFrame, k: Int): DataFrame = {
-    val p = predicted.select(col("query_id"), col("neighbor_id"))
-    val t = truth.select(col("query_id"), col("neighbor_id"))
-    val hits = p.join(t, Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy("query_id").agg(count(lit(1)).as("hits"))
-    // every query contributes, including zero-hit ones
-    t.select("query_id").distinct()
-      .join(hits, Seq("query_id"), "left")
-      .select(coalesce(col("hits"), lit(0L)).as("hits"))
-      .agg(round(avg(col("hits").cast("double") / k), 4).as("avg_recall"))
+    val pairs = predicted.select(col("query_id"), col("neighbor_id"), lit(false).as("truth"))
+      .unionByName(truth.select(col("query_id"), col("neighbor_id"), lit(true).as("truth")))
+    pairs.groupBy("query_id")
+      .agg(collect_list(when(!col("truth"), col("neighbor_id"))).as("p"),
+        collect_set(when(col("truth"), col("neighbor_id"))).as("t"))
+      .filter(size(col("t")) > 0)
+      .agg(round(avg(size(filter(col("p"), n => array_contains(col("t"), n)))
+        .cast("double") / k), 4).as("avg_recall"))
   }
 }

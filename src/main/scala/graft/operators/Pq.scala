@@ -310,17 +310,6 @@ object Pq {
         col("rank").cast("long").as("rank"), col("dist"))
   }
 
-  private def collectCentroids(centroids: DataFrame, idCol: String,
-      vecCol: String): Array[(Long, Array[Float])] = {
-    val spark = centroids.sparkSession
-    import spark.implicits._
-    val cents = centroids
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    require(cents.nonEmpty, "empty centroid set")
-    cents
-  }
-
   private def l2sqFull(a: Array[Float], b: Array[Float]): Double = {
     var d = 0.0
     var i = 0
@@ -344,7 +333,7 @@ object Pq {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = base.sparkSession
     import spark.implicits._
-    val cents = collectCentroids(centroids, idCol, vecCol)
+    val cents = Ann.collectCentroids(centroids, idCol, vecCol, "ivfPqIndex")
     val cb = collectCodebooks(codebooks)
     val bcC = spark.sparkContext.broadcast(cents)
     val bcB = spark.sparkContext.broadcast(cb)
@@ -421,7 +410,7 @@ object Pq {
     require(nProbe > 0 && k > 0, s"ivfPqSearch: nProbe ($nProbe) and k ($k) must be positive")
     val spark = queries.sparkSession
     import spark.implicits._
-    val cents = collectCentroids(centroids, idCol, vecCol)
+    val cents = Ann.collectCentroids(centroids, idCol, vecCol, "ivfPqSearch")
     val cb = collectCodebooks(codebooks)
     val m = cb.length
     val ksub = cb(0).length
@@ -522,18 +511,6 @@ object Pq {
     }.reduce(_ unionByName _)
   }
 
-  /** FILTERED IVF-PQ search — the hybrid discipline (per-query wire
-    * predicates, specs/ordinal_predicate_writers_v1.md:23-26) on the
-    * compressed path: each query carries a framed PNode blob (null =
-    * unfiltered) and index rows are eliminated by that predicate BEFORE
-    * the ADC distance is computed (pre-filter semantics: the heap ranks
-    * only eligible candidates). The index must carry `metadataCols`
-    * beside (id, cell, codes) — metadata travels WITH the cell-partitioned
-    * codes table, so a filtered probe still reads nProbe/nList of the data
-    * and never rejoins the base relation. Same probe selection, residual
-    * LUTs and per-partition heaps as [[ivfPqSearch]]; trees decode ONCE on
-    * the driver and ride the same broadcast as the LUTs.
-    */
   /** GUARANTEED-k on the filtered COMPRESSED path — the
     * [[Ann.ivfSearchFilteredGuaranteed]] escalation policy over
     * [[ivfPqSearchFiltered]]: queries whose pass-1 list is short re-run at
@@ -549,48 +526,71 @@ object Pq {
       predicateCol: String = "predicate", metadataCols: Seq[String] = Nil,
       excludeSelf: Boolean = false): DataFrame = {
     val nList = centroids.count().toInt
-    val approx = Materialize.view(ivfPqSearchFiltered(queries, index, centroids, codebooks,
-      k, nProbe, idCol, vecCol, predicateCol, metadataCols, excludeSelf))
+    val (qs, preds) = HybridGroundTruth.perQuery(queries, predicateCol, metadataCols)
+    val approx = Materialize.view(searchFiltered(qs, preds, index, centroids, codebooks,
+      k, nProbe, idCol, vecCol, metadataCols, excludeSelf))
     val starvedIds = Materialize.view(queries.select(col(idCol).cast("long").as("query_id"))
       .join(approx.groupBy("query_id").agg(count(lit(1)).as("n_got")),
         Seq("query_id"), "left")
       .filter(coalesce(col("n_got"), lit(0L)) < k)
       .select("query_id"))
-    val starved = queries.join(
+    val starved = qs.join(
       starvedIds.withColumnRenamed("query_id", idCol), Seq(idCol), "left_semi")
-    val exact = ivfPqSearchFiltered(starved, index, centroids, codebooks,
-      k, nList, idCol, vecCol, predicateCol, metadataCols, excludeSelf)
+    val exact = searchFiltered(starved, preds, index, centroids, codebooks,
+      k, nList, idCol, vecCol, metadataCols, excludeSelf)
     approx.join(starvedIds, Seq("query_id"), "left_anti")
       .withColumn("escalated", lit(false))
       .unionByName(exact.withColumn("escalated", lit(true)))
   }
 
+  /** FILTERED IVF-PQ search — the hybrid discipline (per-query wire
+    * predicates, specs/ordinal_predicate_writers_v1.md:23-26) on the
+    * compressed path: each query carries a framed PNode blob (null =
+    * unfiltered) and index rows are eliminated by that predicate BEFORE
+    * the ADC distance is computed (pre-filter semantics: the heap ranks
+    * only eligible candidates). The index must carry `metadataCols`
+    * beside (id, cell, codes) — metadata travels WITH the cell-partitioned
+    * codes table, so a filtered probe still reads nProbe/nList of the data
+    * and never rejoins the base relation. Same probe selection, residual
+    * LUTs and per-partition heaps as [[ivfPqSearch]]; the trees come from
+    * [[HybridGroundTruth.perQuery]] and ride the same broadcast as the LUTs.
+    */
   def ivfPqSearchFiltered(queries: DataFrame, index: DataFrame,
       centroids: DataFrame, codebooks: DataFrame, k: Int, nProbe: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       predicateCol: String = "predicate", metadataCols: Seq[String] = Nil,
       excludeSelf: Boolean = false): DataFrame = {
+    val (qs, preds) = HybridGroundTruth.perQuery(queries, predicateCol, metadataCols)
+    searchFiltered(qs, preds, index, centroids, codebooks, k, nProbe, idCol, vecCol,
+      metadataCols, excludeSelf)
+  }
+
+  /** [[ivfPqSearchFiltered]] over a query side that went through
+    * [[HybridGroundTruth.perQuery]].
+    */
+  private def searchFiltered(indexed: DataFrame, preds: HybridGroundTruth.QueryPredicates,
+      index: DataFrame, centroids: DataFrame, codebooks: DataFrame, k: Int, nProbe: Int,
+      idCol: String, vecCol: String, metadataCols: Seq[String],
+      excludeSelf: Boolean): DataFrame = {
     require(nProbe > 0 && k > 0,
       s"ivfPqSearchFiltered: nProbe ($nProbe) and k ($k) must be positive")
-    val spark = queries.sparkSession
+    val spark = indexed.sparkSession
     import spark.implicits._
-    val cents = collectCentroids(centroids, idCol, vecCol)
+    val cents = Ann.collectCentroids(centroids, idCol, vecCol, "ivfPqSearchFiltered")
     val cb = collectCodebooks(codebooks)
     val m = cb.length
     val ksub = cb(0).length
     val dsub = cb(0)(0).length
     val centById = cents.toMap
 
-    val qs = queries
+    val qs = indexed
       .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"),
-        col(predicateCol).cast("binary"))
-      .as[(Long, Array[Float], Array[Byte])].collect()
-    val probers: Map[Long, Array[(Long, Array[Double], graft.predicates.PNode)]] =
-      qs.flatMap { case (qid, qv, blob) =>
-        // decode the query's tree ONCE, driver-side (PNode case classes are
-        // plain serializable data — they broadcast beside the LUTs)
-        val tree: graft.predicates.PNode =
-          if (blob == null) null else graft.predicates.PNodeCodec.decodeFramed(blob)
+        col(HybridGroundTruth.PredicateIndex))
+      .as[(Long, Array[Float], Int)].collect()
+    // each LUT carries its query's predicate index; the decoded trees
+    // broadcast beside the LUTs
+    val probers: Map[Long, Array[(Long, Array[Double], Int)]] =
+      qs.flatMap { case (qid, qv, pred) =>
         val byDist = cents.map { case (cellId, cv) => (l2sqFull(qv, cv), cellId) }
           .sortBy(p => (p._1, p._2)).take(nProbe)
         byDist.map { case (_, cellId) =>
@@ -613,11 +613,11 @@ object Pq {
             }
             s += 1
           }
-          (cellId, (qid, lut, tree))
+          (cellId, (qid, lut, pred))
         }
       }.groupBy(_._1).map { case (cell, xs) => cell -> xs.map(_._2) }
     val probedCells = probers.keys.toSeq
-    val bp = spark.sparkContext.broadcast(probers)
+    val bp = spark.sparkContext.broadcast((probers, preds))
 
     val metaStruct = struct(metadataCols.map(c => col(c).as(c)): _*)
     val partials = index
@@ -625,7 +625,7 @@ object Pq {
       .select(col("id").cast("long"), col("cell").cast("long"),
         col("codes").cast("array<int>"), metaStruct.as("_meta"))
       .rdd.mapPartitions { it =>
-        val pr = bp.value
+        val (pr, trees) = bp.value
         val heaps = scala.collection.mutable.HashMap
           .empty[Long, scala.collection.mutable.PriorityQueue[(Double, Long)]]
         it.foreach { r =>
@@ -637,12 +637,10 @@ object Pq {
           pr.get(cell).foreach { qls =>
             var qi = 0
             while (qi < qls.length) {
-              val (qid, lut, tree) = qls(qi)
+              val (qid, lut, pred) = qls(qi)
               // PRE-FILTER: the predicate eliminates the row BEFORE the ADC
               // distance — the heap only ever ranks eligible candidates
-              if (!(excludeSelf && id == qid) &&
-                  (tree == null ||
-                    graft.predicates.PNodeEvaluator.matchesRow(tree, meta))) {
+              if (!(excludeSelf && id == qid) && trees.matches(pred, meta)) {
                 var d = 0.0
                 var s = 0
                 while (s < m) {

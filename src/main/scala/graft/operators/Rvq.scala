@@ -93,11 +93,15 @@ object Rvq {
     require(stages >= 1 && k >= 1, s"trainStageCodebooks: bad stages=$stages k=$k")
     val spark = base.sparkSession
     import spark.implicits._
-    val vecs0 = base.select(col(vecCol).cast("array<float>")).as[Array[Float]]
-    val vecs = if (sampleFraction.isNaN) vecs0
-      else vecs0.sample(withReplacement = false, sampleFraction, seed)
+    val vecs0 = base.select(col(vecCol).cast("array<float>"))
+    // every stage reads the sample, and KMeans reads its input twice in one
+    // task (a zip), which a DSv2 scan such as the xvec source cannot serve
+    // (one reader per task): materialize the sample once
+    val sample = Materialize.view(if (sampleFraction.isNaN) vecs0
+      else vecs0.sample(withReplacement = false, sampleFraction, seed))
+    val vecs = sample.as[Array[Float]]
     val books = scala.collection.mutable.ArrayBuffer[Array[Array[Float]]]()
-    for (s <- 0 until stages) {
+    try for (s <- 0 until stages) {
       val snapshot = books.toArray
       val bb = spark.sparkContext.broadcast(snapshot)
       val resid = vecs.map { v =>
@@ -107,7 +111,7 @@ object Rvq {
         .setFeaturesCol("feat").setPredictionCol("cell")
       val model = km.fit(resid.withColumn("feat", array_to_vector(col("rv"))))
       books += model.clusterCenters.map(_.toArray.map(_.toFloat))
-    }
+    } finally Materialize.free(sample)
     val out = for {
       (book, s) <- books.zipWithIndex
       (cw, c) <- book.zipWithIndex

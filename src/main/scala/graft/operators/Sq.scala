@@ -178,8 +178,8 @@ object Sq {
   }
 
   /** FILTERED Hamming top-k: the per-query wire-predicate discipline
-    * (q56/q228's pre-filter semantics, the same evaluator as the exact
-    * hybrid path) on the BINARY read path — candidates are eliminated by
+    * (q56/q228's pre-filter semantics, the trees of the exact hybrid
+    * path's seam, [[HybridGroundTruth.perQuery]]) on the BINARY read path — candidates are eliminated by
     * each query's framed PNode blob BEFORE the XOR-popcount kernel and
     * heap, so the shortlist ranks only eligible rows. Same zero-shuffle
     * plan as [[binaryTopK]] (stream base × broadcast queries → bounded
@@ -190,16 +190,17 @@ object Sq {
       predicateCol: String = "predicate", metadataCols: Seq[String] = Nil,
       excludeSelf: Boolean = false): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    val q = queries.select(col(idCol).cast("long").as("query_id"),
+    val (qs, preds) = HybridGroundTruth.perQuery(queries, predicateCol, metadataCols)
+    val q = qs.select(col(idCol).cast("long").as("query_id"),
       binarizeExpr(col(vecCol).cast("array<float>"), dim).as("q_bits"),
-      col(predicateCol).cast("binary").as("_pred"))
+      col(HybridGroundTruth.PredicateIndex).as("pred"))
     val b = base.select(
       (Seq(col(idCol).cast("long").as("neighbor_id"),
         binarizeExpr(col(vecCol).cast("array<float>"), dim).as("b_bits")) ++
         metadataCols.map(col)): _*)
     val metaStruct = struct(metadataCols.map(c => col(c).as(c)): _*)
     val pairs = b.crossJoin(broadcast(q))
-      .filter(HybridGroundTruth.matchesColumn(col("_pred"), metaStruct))
+      .filter(preds.filter(col("pred"), metaStruct))
     val ham = aggregate(
       zip_with(col("q_bits"), col("b_bits"),
         (x, y) => bit_count(x.bitwiseXOR(y)).cast("long")),

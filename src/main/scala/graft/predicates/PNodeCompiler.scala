@@ -1,7 +1,8 @@
 package graft.predicates
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, DataType, NumericType, StringType, StructType}
 
 /** Compiles a PNode tree to a Catalyst Column with the reference evaluator's
   * exact two-valued semantics (PredicateEvaluator.java:45-221):
@@ -13,43 +14,52 @@ import org.apache.spark.sql.functions._
   *  - the first comparand's type picks the comparison lane: IntVal compares
   *    as i64 (field truncated via longValue, :148-166), FloatVal as f64
   *    (:167-186); mixed-type IN members of other lanes never match.
+  *  - a lane applies only to fields of its type — numeric for IntVal and
+  *    FloatVal, string for TextVal, boolean for BoolVal — decided from the
+  *    field's `DataType`; any other pairing is false (the evaluator's type
+  *    mismatch), never a cast that throws or coerces.
   *  - MATCHES is a full match (Pattern.matches, :207) — compiled to an
   *    anchored rlike `^(?:re)$` since rlike is find()-style.
   *  - empty comparand list → false (:133).
   */
 object PNodeCompiler {
 
-  /** @param resolve maps positional field indices to column names for
+  /** @param schema  the schema of the frame the Column filters, which
+    *   decides each leaf's lane
+    * @param resolve maps positional field indices to column names for
     *   indexed-mode predicates (the reference resolves them through
     *   MetadataLayout; `F<idx>` is its fallback naming).
     */
-  def compile(node: PNode, resolve: Int => String = i => s"F$i"): Column = node match {
+  def compile(node: PNode, schema: StructType,
+      resolve: Int => String = i => s"F$i"): Column = node match {
     case ConjugateNode(isAnd, children) =>
-      val cs = children.map(compile(_, resolve))
+      val cs = children.map(compile(_, schema, resolve))
       if (cs.isEmpty) lit(isAnd) // AND() == true, OR() == false
       else if (isAnd) cs.reduce(_ && _)
       else cs.reduce(_ || _)
     case p: PredicateNode =>
       val name = p.fieldName.getOrElse(resolve(p.field))
-      leaf(col(name), p)
+      leaf(col(name), schema(name).dataType, p)
   }
 
-  private def leaf(c: Column, p: PredicateNode): Column = {
+  /** `df` filtered by [[compile]] over its own schema. */
+  def filter(df: DataFrame, node: PNode, resolve: Int => String = i => s"F$i"): DataFrame =
+    df.filter(compile(node, df.schema, resolve))
+
+  private def leaf(c: Column, dataType: DataType, p: PredicateNode): Column = {
     import Comparand._
     val hasNullComparand = p.comparands.contains(NullVal)
     val nullCase = lit(p.op == OpType.EQ && hasNullComparand)
     if (p.comparands.isEmpty) return lit(false)
 
-    val body: Column = p.comparands.head match {
-      case IntVal(_) =>
-        val f = c.cast("long")
+    val body: Column = (dataType, p.comparands.head) match {
+      case (_: NumericType, IntVal(_)) =>
         val vs = p.comparands.collect { case IntVal(v) => v }
-        numericOps(f, p.op, vs.map(lit(_): Column), c)
-      case FloatVal(_) =>
-        val f = c.cast("double")
+        numericOps(c.cast("long"), p.op, vs.map(lit(_): Column))
+      case (_: NumericType, FloatVal(_)) =>
         val vs = p.comparands.collect { case FloatVal(v) => v }
-        numericOps(f, p.op, vs.map(lit(_): Column), c)
-      case TextVal(_) =>
+        numericOps(c.cast("double"), p.op, vs.map(lit(_): Column))
+      case (_: StringType, TextVal(_)) =>
         val vs = p.comparands.collect { case TextVal(v) => v }
         p.op match {
           case OpType.GT => c > vs.head
@@ -61,24 +71,21 @@ object PNodeCompiler {
           case OpType.IN => c.isin(vs: _*)
           case OpType.MATCHES => c.rlike("^(?:" + vs.head + ")$")
         }
-      case BoolVal(v) =>
-        val f = c.cast("boolean")
+      case (BooleanType, BoolVal(v)) =>
         p.op match {
-          case OpType.EQ => f === v
-          case OpType.NE => f =!= v
+          case OpType.EQ => c === v
+          case OpType.NE => c =!= v
           case _         => lit(false) // bool supports only EQ/NE (:215-221)
         }
-      case NullVal =>
-        // non-null field vs NULL comparand: no op matches (:82-84 only
-        // handles the null-field side); EQ NULL on a present value is false
-        lit(false)
-      case BytesVal(_) =>
-        lit(false) // evaluator has no bytes comparisons (:131-221)
+      // a field/lane type mismatch, a NULL comparand on a present value
+      // (:82-84 only handles the null-field side) or a bytes comparand (the
+      // evaluator has no bytes comparisons, :131-221)
+      case _ => lit(false)
     }
     when(c.isNull, nullCase).otherwise(coalesce(body, lit(false)))
   }
 
-  private def numericOps(f: Column, op: OpType, vs: Seq[Column], raw: Column): Column = op match {
+  private def numericOps(f: Column, op: OpType, vs: Seq[Column]): Column = op match {
     case OpType.GT => f > vs.head
     case OpType.LT => f < vs.head
     case OpType.EQ => f === vs.head

@@ -159,9 +159,8 @@ object CoverageFunctionQueries {
     GQuery(
       "q84_pnode_string_compare",
       """SELECT doc_id FROM documents WHERE text > 'm'""") { (s, dir) =>
-      val pred = PNodeCompiler.compile(
-        PredicateNode.namedTyped("text", OpType.GT, Comparand.TextVal("m")))
-      Tables.documents(s, dir).filter(pred).select("doc_id")
+      PNodeCompiler.filter(Tables.documents(s, dir),
+        PredicateNode.namedTyped("text", OpType.GT, Comparand.TextVal("m"))).select("doc_id")
     },
 
     // P3: element map over a vector facet (scale + clamp), summed per row.

@@ -9,8 +9,8 @@ import graft.predicates._
 /** Per-query predicate ground truth (the reference's real hybrid-query
   * discipline — each query ordinal carries its own predicate tree,
   * ordinal_predicate_writers_v1.md:23-30). Three predicate shapes cycle by
-  * query id; each is a wire-encoded framed PNode decoded and evaluated
-  * against base metadata inside the pair stream. The oracle replays the
+  * query id; each is a wire-encoded framed PNode, decoded once on the
+  * driver and evaluated against base metadata inside the pair stream. The oracle replays the
   * cycle with a CASE filter.
   */
 object HybridQueries {

@@ -35,8 +35,7 @@ object MetadataQueries {
       val blobs = MetadataTables.encodeContent(
         Tables.customer(s, dir), layout, ordinalCol = "c_custkey")
       val decoded = MetadataTables.decodeContent(blobs, layout)
-      decoded
-        .filter(PNodeCompiler.compile(tree, layout.resolve))
+      PNodeCompiler.filter(decoded, tree, layout.resolve)
         .select(col("c_custkey"), col("c_mktsegment"),
           round(col("c_acctbal"), 2).as("c_acctbal"))
     },

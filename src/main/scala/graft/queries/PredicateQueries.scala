@@ -48,8 +48,7 @@ object PredicateQueries {
       s"""SELECT c_custkey, c_mktsegment, round(c_acctbal, 2) AS c_acctbal
          |FROM customer WHERE ${PNodeSql.duckdb(custTree)}""".stripMargin) { (s, dir) =>
       val decoded = viaWire(custTree, PNodeCodec.Mode.NamedTyped)
-      Tables.customer(s, dir)
-        .filter(PNodeCompiler.compile(decoded))
+      PNodeCompiler.filter(Tables.customer(s, dir), decoded)
         .select(col("c_custkey"), col("c_mktsegment"), round(col("c_acctbal"), 2).as("c_acctbal"))
     },
 
@@ -58,8 +57,7 @@ object PredicateQueries {
       s"""SELECT p_partkey, p_brand, p_size
          |FROM part WHERE ${PNodeSql.duckdb(partTree)}""".stripMargin) { (s, dir) =>
       val decoded = viaWire(partTree, PNodeCodec.Mode.NamedTyped)
-      Tables.part(s, dir)
-        .filter(PNodeCompiler.compile(decoded))
+      PNodeCompiler.filter(Tables.part(s, dir), decoded)
         .select("p_partkey", "p_brand", "p_size")
     },
 
@@ -68,8 +66,7 @@ object PredicateQueries {
       s"""SELECT event_id, user_id
          |FROM events WHERE ${PNodeSql.duckdb(eventsTree, eventsLayout)}""".stripMargin) { (s, dir) =>
       val decoded = viaWire(eventsTree, PNodeCodec.Mode.Indexed)
-      Tables.events(s, dir)
-        .filter(PNodeCompiler.compile(decoded, eventsLayout))
+      PNodeCompiler.filter(Tables.events(s, dir), decoded, eventsLayout)
         .select("event_id", "user_id")
     },
 
@@ -88,8 +85,7 @@ object PredicateQueries {
           |  {"field":"o_orderstatus","op":"EQ","values":["O"]},
           |  {"field":"o_totalprice","op":"GE","values":[150000.0]}
           |]}""".stripMargin)
-      Tables.orders(s, dir)
-        .filter(PNodeCompiler.compile(tree))
+      PNodeCompiler.filter(Tables.orders(s, dir), tree)
         .select("o_orderkey", "o_custkey")
     },
   )

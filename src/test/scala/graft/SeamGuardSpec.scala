@@ -6,15 +6,16 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source guards for two one-seam rules, read from every file under
+/** Source guards for one-seam rules, read from every file under
   * `src/main/scala` (the `MaterializeSpec` checkpoint guard's shape): the
-  * bounded top-k heap is called from `Knn.topK`, the one search tail, and
-  * sessions are built by `GraftSession` alone.
+  * bounded top-k heap is called from `Knn.topK`, the one search tail;
+  * sessions are built by `GraftSession` alone; and the operators decode
+  * predicate blobs only in `HybridGroundTruth.perQuery`.
   */
 class SeamGuardSpec extends AnyFunSuite {
   private val DefName = """\bdef\s+(\w+)""".r
 
-  /** (file name, enclosing def, file:line) of every line containing `token`. */
+  /** (file path, enclosing def, file:line) of every line containing `token`. */
   private def hits(token: String): List[(String, String, String)] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"$root not found from ${Paths.get("").toAbsolutePath}")
@@ -22,7 +23,7 @@ class SeamGuardSpec extends AnyFunSuite {
       var enclosing = ""
       Files.readAllLines(p).asScala.zipWithIndex.flatMap { case (line, i) =>
         DefName.findFirstMatchIn(line).foreach(m => enclosing = m.group(1))
-        if (line.contains(token)) Some((p.getFileName.toString, enclosing, s"$p:${i + 1}"))
+        if (line.contains(token)) Some((p.toString, enclosing, s"$p:${i + 1}"))
         else None
       }
     }.toList
@@ -31,7 +32,8 @@ class SeamGuardSpec extends AnyFunSuite {
   test("topKPairs( is called only by Knn.topK, Clustering.clusterSample and its definition") {
     val allowed = Set(("Knn.scala", "topK"), ("Clustering.scala", "clusterSample"),
       ("TopKAggregate.scala", "topKPairs"))
-    val stray = hits("topKPairs(").filterNot { case (file, enclosing, _) =>
+    val stray = hits("topKPairs(").filterNot { case (path, enclosing, _) =>
+      val file = Paths.get(path).getFileName.toString
       allowed((file, enclosing)) || file == "GraftExtensions.scala"
     }
     assert(stray.isEmpty,
@@ -39,8 +41,17 @@ class SeamGuardSpec extends AnyFunSuite {
   }
 
   test("SparkSession.builder is called only by GraftSession") {
-    val stray = hits("SparkSession.builder").filterNot(_._1 == "GraftSession.scala")
+    val stray = hits("SparkSession.builder").filterNot(_._1.endsWith("/GraftSession.scala"))
     assert(stray.isEmpty,
       s"${stray.size} session builder(s) outside GraftSession: ${stray.map(_._3).mkString(", ")}")
+  }
+
+  test("PNodeCodec.decodeFramed is called under operators/ only by HybridGroundTruth.perQuery") {
+    val stray = hits("PNodeCodec.decodeFramed").filter(_._1.contains("/operators/"))
+      .filterNot { case (path, enclosing, _) =>
+        path.endsWith("/HybridGroundTruth.scala") && enclosing == "perQuery"
+      }
+    assert(stray.isEmpty,
+      s"${stray.size} predicate decode(s) outside the seam: ${stray.map(_._3).mkString(", ")}")
   }
 }

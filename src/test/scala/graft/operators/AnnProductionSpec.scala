@@ -31,6 +31,21 @@ class AnnProductionSpec extends SparkSpec {
     assert(Knn.avgRecall(full, truth, k = 10).collect()(0).getDouble(0) == 1.0)
   }
 
+  test("avgRecall averages over the truth's queries, zero-hit ones included") {
+    import spark.implicits._
+    val truth = Seq((1L, 1L), (1L, 2L), (1L, 3L), (2L, 4L), (2L, 5L), (2L, 6L),
+      (3L, 7L), (3L, 8L), (3L, 9L)).toDF("query_id", "neighbor_id")
+    // query 1 hits 2 of 3, query 2 none, query 3 returns nothing, and
+    // query 4 is not in the truth
+    val predicted = Seq((1L, 1L), (1L, 2L), (1L, 10L), (2L, 11L), (2L, 12L),
+      (4L, 1L)).toDF("query_id", "neighbor_id")
+    def recall(p: org.apache.spark.sql.DataFrame): Double =
+      Knn.avgRecall(p, truth, k = 3).collect()(0).getDouble(0)
+    assert(recall(predicted) == 0.2222)
+    assert(recall(truth) == 1.0)
+    assert(Knn.avgRecall(truth.limit(0), truth.limit(0), k = 3).collect()(0).isNullAt(0))
+  }
+
   test("hyperplane buckets: deterministic, and identical vectors share buckets") {
     val b1 = emb.select(col("vec_id"),
       Ann.hyperplaneBucket(col("embedding"), dim = 64, nBits = 8).as("bucket"))

@@ -12,7 +12,8 @@ import graft.predicates._
   *  - ivfIndexWithMeta assigns cells bit-identically to ivfIndex
   *  - null-predicate filtered searches == their unfiltered counterparts
   *  - every returned neighbor satisfies its query's predicate
-  *  - a predicate naming a missing metadata column fails LOUDLY
+  *  - a predicate naming a missing metadata column fails LOUDLY, when the
+  *    frame is built, at every hybrid entry point
   */
 class FilteredAnnSpec extends SparkSpec {
   import spark.implicits._
@@ -410,17 +411,52 @@ class FilteredAnnSpec extends SparkSpec {
     assert(card.values.map(_._1).sum == 50L)
   }
 
-  test("predicate naming a missing metadata column fails loudly") {
-    val badBlob = PNodeCodec.encodeFramed(
-      PredicateNode.namedTyped("nope", OpType.GE, IntVal(1)),
+  // every hybrid entry point takes its trees from HybridGroundTruth.perQuery:
+  // a tree naming a field the caller's metadata lacks throws while the frame
+  // is built, before the caller runs any action
+  private lazy val missingField = {
+    val badBlob = PNodeCodec.encodeFramed(ConjugateNode.and(
+        PredicateNode.namedTyped("label", OpType.GE, IntVal(1)),
+        PredicateNode.namedTyped("nope", OpType.GE, IntVal(1))),
       PNodeCodec.Mode.NamedTyped)
-    val q = base.filter(col("vec_id") >= 195).withColumn("predicate",
-      udf(() => badBlob).apply())
-    val index = Ann.ivfIndexWithMeta(base, centroids, metaCols = Seq("label"))
-    val ex = intercept[Exception] {
-      Ann.ivfSearchFiltered(q, index, centroids, k = 3, nProbe = 2,
-        metadataCols = Seq("label")).collect()
+    base.filter(col("vec_id") >= 195).withColumn("predicate", lit(badBlob))
+  }
+  private lazy val metaIndex = Ann.ivfIndexWithMeta(base, centroids, metaCols = Seq("label"))
+  private lazy val metaStats = Ann.cellSelectivityStats(metaIndex, "label")
+  private lazy val pqCodebooks = Pq.subsetCodebooks(base.filter(col("vec_id") < 16), m = 4)
+  private val entryPoints: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+    "HybridGroundTruth.knnWithPerQueryPredicates" -> (() =>
+      HybridGroundTruth.knnWithPerQueryPredicates(missingField, base, k = 3,
+        metadataCols = Seq("label"))),
+    "Ann.ivfSearchFiltered" -> (() =>
+      Ann.ivfSearchFiltered(missingField, metaIndex, centroids, k = 3, nProbe = 2,
+        metadataCols = Seq("label"))),
+    "Ann.adaptiveProbeWidths" -> (() =>
+      Ann.adaptiveProbeWidths(missingField, centroids, metaStats, "label", k = 3,
+        safety = 2.0, minProbe = 1, maxProbe = 4)),
+    "Ann.ivfSearchFilteredAdaptive" -> (() =>
+      Ann.ivfSearchFilteredAdaptive(missingField, metaIndex, centroids, metaStats,
+        "label", k = 3, safety = 2.0, minProbe = 1, maxProbe = 4,
+        metadataCols = Seq("label"))),
+    "Ann.routePlan" -> (() =>
+      Ann.routePlan(missingField, metaStats, "label", exactMax = 10L, wideFraction = 0.5)),
+    "Sq.binaryTopKFiltered" -> (() =>
+      Sq.binaryTopKFiltered(missingField, base, k = 3, dim = dim,
+        metadataCols = Seq("label"))),
+    "Hnsw.hnswSearchFiltered" -> (() =>
+      Hnsw.hnswSearchFiltered(missingField,
+        Hnsw.hnswIndexWithMeta(base, centroids, metaCols = Seq("label")),
+        centroids, k = 3, nProbe = 2, ef = 4)),
+    "Pq.ivfPqSearchFiltered" -> (() =>
+      Pq.ivfPqSearchFiltered(missingField,
+        Pq.ivfPqIndex(base, centroids, pqCodebooks)
+          .join(base.select(col("vec_id").as("id"), col("label")), Seq("id")),
+        centroids, pqCodebooks, k = 3, nProbe = 2, metadataCols = Seq("label"))))
+
+  entryPoints.foreach { case (name, build) =>
+    test(s"$name: a predicate naming a missing field fails when the frame is built") {
+      val ex = intercept[IllegalArgumentException](build())
+      assert(ex.getMessage.contains("fields nope not present"), ex.getMessage)
     }
-    assert(ex.getMessage != null)
   }
 }

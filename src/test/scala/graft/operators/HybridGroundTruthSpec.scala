@@ -85,16 +85,4 @@ class HybridGroundTruthSpec extends SparkSpec {
     assert(rows.keySet == Set(0L, 1L, 2L, 3L))
     assert(rows.values.forall(_.isEmpty))
   }
-
-  test("predicate referencing an undeclared metadata column fails loudly") {
-    val badTree = PNodeCodec.encodeFramed(
-      PredicateNode.namedTyped("category", OpType.EQ, TextVal("x")),
-      PNodeCodec.Mode.NamedTyped)
-    val queries = emb.filter(col("vec_id") < 2).withColumn("predicate", lit(badTree))
-    val ex = intercept[Exception] {
-      HybridGroundTruth.knnWithPerQueryPredicates(
-        queries, emb, k = 3, metadataCols = Seq("label"), excludeSelf = true).count()
-    }
-    assert(ex.getMessage != null)
-  }
 }

@@ -62,15 +62,8 @@ class XvecSplitKnnSpec extends SparkSpec with BeforeAndAfterAll {
 
   test("seeded trainCentroids repeats at a fixed split count; records P = 1 vs the default") {
     val key = "spark.sql.leafNodeDefaultParallelism"
-    // KMeans reads its input twice in one task (a zip), and Spark's DSv2
-    // scan keeps one reader per task, so the second read closes the first:
-    // train over the scan's rows checkpointed in its own partitions
-    def train(): Seq[Row] = {
-      val rows = base.localCheckpoint()
-      try Ann.trainCentroids(spark, rows, nList = 8, sampleFraction = 0.05)
-        .orderBy("vec_id").collect().toSeq
-      finally rows.unpersist()
-    }
+    def train(): Seq[Row] = Ann.trainCentroids(spark, base, nList = 8, sampleFraction = 0.05)
+      .orderBy("vec_id").collect().toSeq
     val (one1, one2) = try { spark.conf.set(key, "1"); (train(), train()) }
       finally spark.conf.unset(key)
     val (many1, many2) = (train(), train())
@@ -81,6 +74,15 @@ class XvecSplitKnnSpec extends SparkSpec with BeforeAndAfterAll {
     // change the sample and the centroids (XvecScan scaladoc)
     info(s"P = 1 and the default split count train " +
       (if (one1 == many1) "identical" else "different") + " centroids")
+  }
+
+  test("the PQ and RVQ trainers fit KMeans over the scan itself") {
+    // KMeans reads its input twice in one task; a DSv2 scan keeps one
+    // reader per task, so each trainer must fit over rows it materialized
+    val pq = Pq.trainCodebooks(base, m = 4, ksub = 8, sampleFraction = 0.05)
+    assert(pq.count() == 4 * 8)
+    val rvq = Rvq.trainStageCodebooks(base, stages = 2, k = 8, sampleFraction = 0.05)
+    assert(rvq.count() == 2 * 8)
   }
 
   test("KNN, hybrid KNN and the profile agree on one split and on several") {

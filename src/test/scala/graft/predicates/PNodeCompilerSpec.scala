@@ -7,7 +7,8 @@ import graft.SparkSpec
 
 /** Differential test: the compiled Catalyst Column must agree row-for-row
   * with the reference-parity row evaluator (PNodeEvaluator) over a table
-  * containing nulls, numeric edge values and assorted strings.
+  * containing nulls, numeric edge values and assorted strings, for
+  * comparands of every type against every field.
   */
 class PNodeCompilerSpec extends SparkSpec {
   import Comparand._
@@ -33,7 +34,7 @@ class PNodeCompilerSpec extends SparkSpec {
     spark.sparkContext.parallelize(rows, 4), schema).cache()
 
   private def check(tree: PNode): Unit = {
-    val got = df.filter(PNodeCompiler.compile(tree))
+    val got = PNodeCompiler.filter(df, tree)
       .select("id").collect().map(_.getLong(0)).toSet
     val want = rows.filter { r =>
       PNodeEvaluator.matches(tree, Map(
@@ -42,17 +43,18 @@ class PNodeCompilerSpec extends SparkSpec {
     assert(got == want, s"tree: $tree")
   }
 
-  private def randComparandFor(field: String): Seq[Comparand] = field match {
-    case "num"  => Seq.fill(1 + rnd.nextInt(3))(IntVal(rnd.nextInt(20).toLong))
-    case "dbl"  => Seq.fill(1 + rnd.nextInt(3))(FloatVal((rnd.nextInt(400) - 200) / 10.0))
-    case "str"  => Seq.fill(1 + rnd.nextInt(3))(TextVal(Seq("alpha", "beta", "gamma", "a.*")(rnd.nextInt(4))))
-    case "flag" => Seq(BoolVal(rnd.nextBoolean()))
+  /** Comparands of one lane, drawn whatever the field's type. */
+  private def randComparands(): Seq[Comparand] = rnd.nextInt(4) match {
+    case 0 => Seq.fill(1 + rnd.nextInt(3))(IntVal(rnd.nextInt(20).toLong))
+    case 1 => Seq.fill(1 + rnd.nextInt(3))(FloatVal((rnd.nextInt(400) - 200) / 10.0))
+    case 2 => Seq.fill(1 + rnd.nextInt(3))(TextVal(Seq("alpha", "beta", "gamma", "a.*")(rnd.nextInt(4))))
+    case 3 => Seq(BoolVal(rnd.nextBoolean()))
   }
 
   private def randLeaf(): PredicateNode = {
     val field = Seq("num", "dbl", "str", "flag")(rnd.nextInt(4))
     val op = OpType.values(rnd.nextInt(OpType.values.size))
-    PredicateNode.namedTyped(field, op, randComparandFor(field): _*)
+    PredicateNode.namedTyped(field, op, randComparands(): _*)
   }
 
   private def randTree(depth: Int): PNode =
@@ -79,6 +81,15 @@ class PNodeCompilerSpec extends SparkSpec {
   test("IntVal lane truncates double fields like Number.longValue()") {
     check(PredicateNode.namedTyped("dbl", OpType.EQ, IntVal(1L)))
     check(PredicateNode.namedTyped("dbl", OpType.GE, IntVal(-1L)))
+  }
+
+  test("a comparand whose type does not match the field's never matches") {
+    check(PredicateNode.namedTyped("str", OpType.EQ, IntVal(5)))
+    check(PredicateNode.namedTyped("num", OpType.EQ, TextVal("alpha")))
+    check(PredicateNode.namedTyped("str", OpType.GE, FloatVal(1.0)))
+    check(PredicateNode.namedTyped("num", OpType.EQ, BoolVal(true)))
+    check(PredicateNode.namedTyped("flag", OpType.MATCHES, TextVal("t.*")))
+    check(PredicateNode.namedTyped("dbl", OpType.IN, TextVal("1.0"), TextVal("alpha")))
   }
 
   test("bool fields only support EQ/NE") {

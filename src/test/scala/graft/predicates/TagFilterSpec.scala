@@ -50,16 +50,4 @@ class TagFilterSpec extends SparkSpec {
       "t /* MATCHES */ 'x.*'")
     assert(PNodeSql.cql(PredicateNode.indexed(2, OpType.LE, 9L)) == "F2 <= 9")
   }
-
-  test("verifyProfiles emits one recall row per profile") {
-    val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val q = emb.filter(col("vec_id") < 5)
-    val cos = graft.operators.Knn.knn(q, emb, k = 5, metric = "COSINE", excludeSelf = true)
-    val l2 = graft.operators.Knn.knn(q, emb, k = 5, metric = "EUCLIDEAN", excludeSelf = true)
-    val out = graft.operators.Knn.verifyProfiles(
-      Seq(("self", cos, cos), ("l2-vs-cos", l2, cos)), k = 5).collect()
-    assert(out.length == 2)
-    assert(out.find(_.getString(0) == "self").get.getDouble(1) == 1.0)
-    assert(out.find(_.getString(0) == "l2-vs-cos").get.getDouble(1) <= 1.0)
-  }
 }
