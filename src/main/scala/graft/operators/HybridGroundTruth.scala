@@ -2,10 +2,15 @@ package graft.operators
 
 import scala.collection.immutable.ArraySeq
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{BooleanType, DataType, StructType}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 
-import graft.predicates.{ConjugateNode, PNode, PNodeCodec, PNodeEvaluator, PredicateNode}
+import graft.predicates.{BoundPNode, ConjugateNode, PNode, PNodeCodec, PNodeEvaluator, PredicateNode}
 
 /** Hybrid-query ground truth with PER-QUERY predicate trees (SURVEY.md J2,
   * §3.2; reference specs/ordinal_predicate_writers_v1.md:23-30: "Predicate
@@ -17,8 +22,12 @@ import graft.predicates.{ConjugateNode, PNode, PNodeCodec, PNodeEvaluator, Predi
   * carries its metadata columns as a struct. [[perQuery]] is the one seam
   * every hybrid search (exact, IVF, adaptive, routed, binary, graph and
   * IVF-PQ) reads its trees from: each distinct blob is decoded once on the
-  * driver and the query side carries an int index into the decoded trees,
-  * so the per-pair filter is one fixed UDF and no executor decodes a blob.
+  * driver and the query side carries an int index into the decoded trees.
+  * The per-pair filter is one native expression, `query_predicate`, that
+  * binds the trees once per task to the metadata struct's field ordinals
+  * and reads the struct's InternalRow: no executor decodes a blob or
+  * builds a `Row`. The exact form runs it inside [[Knn.knn]]'s scoring
+  * aggregate, before each pair is scored.
   */
 object HybridGroundTruth {
 
@@ -37,12 +46,19 @@ object HybridGroundTruth {
     def matches(i: Int, meta: Row): Boolean =
       i == 0 || PNodeEvaluator.matchesRow(trees(i - 1), meta)
 
+    /** The trees bound to the metadata struct `schema`, index i - 1 for
+      * predicate index i.
+      */
+    def bind(schema: StructType): Array[BoundPNode] = trees.map(PNodeEvaluator.bind(_, schema))
+
     /** [[matches]] as a per-pair filter over the query's index column and
-      * the candidate's metadata struct. The UDF is the same on every call,
-      * so its generated code is too; only the captured trees differ.
+      * the candidate's metadata struct: a native expression over the
+      * struct's InternalRow, the trees bound once per task to its field
+      * ordinals. It generates no code of its own, so a plan's generated
+      * code is the same on every call; only the trees differ.
       */
     def filter(index: Column, meta: Column): Column =
-      udf((i: Int, m: Row) => matches(i, m)).apply(index, meta)
+      Bridge.column(QueryPredicate(Bridge.expression(index), Bridge.expression(meta), this))
 
     /** Fails, before any job reads a candidate, when a tree names a field
       * that is not in `columns`: the reference's missing-field-behaves-as-
@@ -60,6 +76,36 @@ object HybridGroundTruth {
       case ConjugateNode(_, cs) => cs.flatMap(fieldsOf)
       case p: PredicateNode     => Seq(p.effectiveName)
     }
+  }
+
+  /** [[QueryPredicates.filter]]'s expression: true for index 0, else
+    * whether the struct `right` passes the tree of index `left`.
+    */
+  private case class QueryPredicate(left: Expression, right: Expression, preds: QueryPredicates)
+      extends BinaryExpression with CodegenFallback {
+    override def dataType: DataType = BooleanType
+    override def prettyName: String = "query_predicate"
+    override protected def stringArgs: Iterator[Any] = Iterator(left, right)
+
+    @transient private lazy val bound = preds.bind(right.dataType.asInstanceOf[StructType])
+
+    // evaluated per candidate pair: the children are read here rather than
+    // through BinaryExpression.eval's call sites, which every binary
+    // expression shares
+    override def eval(input: InternalRow): Any = {
+      val index = left.eval(input)
+      if (index == null) null
+      else if (index.asInstanceOf[Int] == 0) true
+      else {
+        val meta = right.eval(input)
+        if (meta == null) null
+        else bound(index.asInstanceOf[Int] - 1).matches(meta.asInstanceOf[InternalRow])
+      }
+    }
+
+    override protected def withNewChildrenInternal(
+        newLeft: Expression, newRight: Expression): QueryPredicate =
+      copy(left = newLeft, right = newRight)
   }
 
   /** Decode each distinct predicate blob of `queries` once, on the driver
@@ -87,7 +133,8 @@ object HybridGroundTruth {
   }
 
   /** Top-k per query restricted by the query's own predicate over the base
-    * metadata columns. Delegates the physical plan to Knn.knn.
+    * metadata columns. Delegates the physical plan to Knn.knn, whose
+    * scoring aggregate evaluates the filter per (query, base row) pair.
     *
     * @param queries (idCol, vecCol, predicateCol BINARY — framed PNode; null = unfiltered)
     * @param base    (idCol, vecCol, metadataCols...)

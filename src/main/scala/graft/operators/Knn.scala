@@ -1,26 +1,37 @@
 package graft.operators
 
+import scala.collection.mutable
+
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSeq, AttributeSet, BindReferences, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
 import graft.functions.TopKPairs.topKPairs
-import graft.functions.VectorFunctions
+import graft.functions.{DistanceKernels, KnnTopK, VectorFunctions}
 
 /** Exact KNN ground-truth computation and recall verification (SURVEY.md
   * J3/J4/W1/A14; reference: `compute knn` / `verify_knn`, README.md:49-51,
   * docs/user_manual/03-cli-reference.md:203-222).
   *
-  * Physical shape, chosen for the 100TB posture: the (small) query set is
-  * broadcast against the (huge) base relation; per-task bounded heaps do the
-  * top-k map-side via partial aggregation, so the only shuffle is
-  * num_partitions × |Q| serialized k-heaps — never the |Q|×|B| pair stream.
-  * An exact result (this is ground-truth tooling), unlike LSH-style ANN.
+  * Physical shape of [[knn]], chosen for the 100TB posture: the (small)
+  * query set is collected once on the driver, split into blocks of
+  * [[graft.functions.KnnTopK.BlockSize]] query ids and broadcast; the
+  * (huge) base streams through the `KnnTopK` aggregate grouped by block.
+  * Each base row's vector is read once and scored against its whole block
+  * in one kernel pass, straight into one bounded heap per query id, so no
+  * per-pair row is ever built. Partial aggregation runs map-side: the only
+  * shuffle is num_partitions × blocks serialized k-heaps — never the
+  * |Q|×|B| pair stream — and the blocks spread the final merge. An exact
+  * result (this is ground-truth tooling), unlike LSH-style ANN.
   *
-  * [[topK]] is the one top-k tail of every nearest-neighbour search here
-  * (exact, IVF, binary, graph, quantized and fused): each search builds its
-  * candidate pairs, and the score becomes a column BEFORE the bounded heap,
-  * so the heap's input rows carry ids and one double, never the vectors the
-  * score was computed from.
+  * [[topK]] is the one top-k tail of every other nearest-neighbour search
+  * here (partitioned exact, IVF, binary, graph, quantized and fused): each
+  * builds its candidate pairs, and the score becomes a column BEFORE the
+  * bounded heap, so the heap's input rows carry ids and one double, never
+  * the vectors the score was computed from.
   */
 object Knn {
 
@@ -45,7 +56,9 @@ object Knn {
         (col("pos") + 1).as("rank"), col("pair.dist").as("dist"))
   }
 
-  /** Top-k nearest neighbors of each query vector.
+  /** Top-k nearest neighbors of each query vector. Collects the query side
+    * when the frame is built (see the physical shape above); both vector
+    * columns take `VectorFunctions.distance`'s float cast.
     *
     * @param queries  DataFrame with (idCol, vecCol) — expected small (broadcast)
     * @param base     DataFrame with (idCol, vecCol) — arbitrarily large
@@ -68,16 +81,48 @@ object Knn {
       excludeSelf: Boolean = false): DataFrame = {
 
     val q = queries.select(
-      (Seq(col(idCol).cast("long").as("query_id"), col(vecCol).as("q_vec")) ++
+      (Seq(col(idCol).cast("long").as("query_id"), col(vecCol).cast("array<float>").as("q_vec")) ++
         queryExtra.map(c => col(c).as(s"q_$c"))): _*)
     val b = base.select(
-      (Seq(col(idCol).cast("long").as("neighbor_id"), col(vecCol).as("b_vec")) ++
+      (Seq(col(idCol).cast("long").as("neighbor_id"), col(vecCol).cast("array<float>").as("b_vec")) ++
         baseExtra.map(c => col(c).as(s"b_$c"))): _*)
 
-    val pairs = b.crossJoin(broadcast(q))
-    topK(pairPredicate.fold(pairs)(p => pairs.filter(p)),
-      VectorFunctions.distance(col("q_vec"), col("b_vec"), metric),
-      col("neighbor_id"), k, excludeSelf)
+    val toRow = CatalystTypeConverters.createToCatalystConverter(q.schema)
+    val blocks = KnnTopK.blocks(
+      q.collect().toSeq.map(r => toRow(r).asInstanceOf[InternalRow]), excludeSelf)
+    val spark = queries.sparkSession
+    b.withColumn("_qb", explode(array(blocks.indices.map(lit): _*).cast("array<int>")))
+      .groupBy("_qb")
+      .agg(KnnTopK.knnTopK(col("_qb"), struct(b.columns.map(col): _*),
+        spark.sparkContext.broadcast(blocks), k, DistanceKernels.metricId(metric),
+        pairPredicate.map(bindPair(spark, _, q.schema, b.schema)), excludeSelf).as("hits"))
+      .select(inline(col("hits")))
+  }
+
+  /** `pred` resolved over the query side's columns followed by the base
+    * side's, and split for [[KnnTopK]]: each largest deterministic
+    * subexpression that reads base columns only becomes one per-row value,
+    * bound to the base row, and the predicate is bound to the query
+    * columns followed by those values.
+    */
+  private def bindPair(spark: SparkSession, pred: Column, left: StructType,
+      right: StructType): (Expression, Seq[Expression]) = {
+    val both = spark.createDataFrame(java.util.List.of[Row](), StructType(left ++ right))
+    val (cond, attrs) = both.filter(pred).queryExecution.analyzed match {
+      case Filter(c, child) => (c, child.output)
+      case other => throw new IllegalStateException(s"pair predicate did not plan as a filter: $other")
+    }
+    val (queryAttrs, baseAttrs) = attrs.splitAt(left.size)
+    val baseOnly = AttributeSet(baseAttrs)
+    val perRow = mutable.ArrayBuffer.empty[(Expression, Attribute)]
+    val split = cond.transformDown {
+      case e if e.deterministic && e.references.nonEmpty && e.references.subsetOf(baseOnly) =>
+        val slot = AttributeReference(s"_b${perRow.size}", e.dataType, e.nullable)()
+        perRow += e -> slot
+        slot
+    }
+    (BindReferences.bindReference(split, queryAttrs ++ perRow.map(_._2)),
+      perRow.map(p => BindReferences.bindReference(p._1, baseAttrs)).toSeq)
   }
 
   /** [[knn]] for query sets too large for a single broadcast (the 100TB

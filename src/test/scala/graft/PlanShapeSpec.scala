@@ -53,15 +53,34 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("Knn.knn: exactly one exchange (the k-heap partial aggregate), no sort") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    import org.apache.spark.sql.execution.adaptive.QueryStageExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.types.ArrayType
+    def exchanges(p: SparkPlan): Seq[ShuffleExchangeExec] = p.collect {
+      case e: ShuffleExchangeExec => Seq(e)
+      case q: QueryStageExec => exchanges(q.plan)
+    }.flatten
     val plan = executedPlan(Knn.knn(base.limit(4), base, k = 3))
     val s = plan.toString
-    // queries ride a broadcast, never a shuffle of the base
-    assert(s.contains("BroadcastNestedLoopJoin") || s.contains("BroadcastExchange"), s)
-    assert(shuffleCount(plan) <= 1, s"more than one exchange:\n$s")
-    // top-k comes from the bounded-heap aggregate, not a sort-based limit:
-    // a regression to ordered-limit renders as TakeOrderedAndProject or a
+    // the queries reach the scoring aggregate from the driver: no pair
+    // row is ever built, so no nested-loop join and no broadcast exchange
+    assert(!s.contains("NestedLoopJoin") && !s.contains("BroadcastExchange"), s)
+    val ex = exchanges(plan)
+    assert(ex.size == 1 && shuffleCount(plan) == 1, s"not exactly one exchange:\n$s")
+    // what crosses it is each block's partial heaps, never a vector or a
+    // hit array
+    val partial = ex.head.child match {
+      case a: BaseAggregateExec => a.aggregateExpressions.exists(e => e.mode == Partial &&
+        e.aggregateFunction.isInstanceOf[graft.functions.KnnTopK])
+      case _ => false
+    }
+    assert(partial, s"the exchange does not carry partial knn_topk heaps:\n$s")
+    val arrays = ex.head.output.filter(_.dataType.isInstanceOf[ArrayType])
+    assert(arrays.isEmpty, s"the exchange carries ${arrays.map(_.name).mkString(",")}:\n$s")
+    // top-k comes from the bounded heaps, not a sort-based limit: a
+    // regression to ordered-limit renders as TakeOrderedAndProject or a
     // SortExec ("Sort [" in the plan text)
-    assert(s.contains("topk_pairs"), s)
     assert(!s.contains("TakeOrderedAndProject"), s)
     assert(!s.contains("Sort ["), s)
   }
@@ -79,7 +98,6 @@ class PlanShapeSpec extends SparkSpec {
     }.flatten
     val cents = base.filter(col("vec_id") < 8)
     val searches = Seq(
-      "Knn.knn" -> Knn.knn(base.limit(4), base, k = 3),
       "Knn.knnPartitioned" -> Knn.knnPartitioned(base.limit(4), base, k = 3,
         nQBlocks = 2, nBBlocks = 2),
       "Ann.ivfSearch" -> graft.operators.Ann.ivfSearch(base.limit(4),
@@ -111,22 +129,22 @@ class PlanShapeSpec extends SparkSpec {
       labeled, cents, metaCols = Seq("label"))
     val plan = executedPlan(graft.operators.Ann.ivfSearchFiltered(
       q, index, cents, k = 3, nProbe = 2, metadataCols = Seq("label")))
-    // pre-filter semantics: the predicate UDF must evaluate in the PARTIAL
+    // pre-filter semantics: the predicate must evaluate in the PARTIAL
     // heap aggregate's input subtree — candidates are eliminated before the
     // bounded heap ever ranks them ("search then discard" would filter
     // above the final aggregate, silently returning < k under selective
-    // predicates). Catalyst pushes the UDF all the way into the cell-join
-    // condition, so the check reads the rendered tree: children print
-    // AFTER parents, so the UDF line must come after the partial-agg line
-    // and no UDF may appear above it.
+    // predicates). Catalyst pushes the predicate all the way into the
+    // cell-join condition, so the check reads the rendered tree: children
+    // print AFTER parents, so the predicate line must come after the
+    // partial-agg line and no predicate may appear above it.
     val lines = plan.toString.linesIterator.toIndexedSeq
     val ip = lines.indexWhere(_.contains("partial_topk_pairs"))
-    val iu = lines.indexWhere(_.contains("UDF("))
+    val iu = lines.indexWhere(_.contains("query_predicate("))
     assert(ip >= 0, s"no partial heap aggregate in plan:\n$plan")
     assert(iu > ip,
-      s"predicate UDF not below the partial aggregate (udf@$iu, agg@$ip):\n$plan")
-    assert(!lines.take(ip).exists(_.contains("UDF(")),
-      s"predicate UDF above the partial aggregate:\n$plan")
+      s"predicate not below the partial aggregate (predicate@$iu, agg@$ip):\n$plan")
+    assert(!lines.take(ip).exists(_.contains("query_predicate(")),
+      s"predicate above the partial aggregate:\n$plan")
   }
 
   test("Ann.adaptiveProbeWidths: stats join is broadcast; one bounded window") {

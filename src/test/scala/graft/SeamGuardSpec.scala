@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source guards for one-seam rules, read from every file under
   * `src/main/scala` (the `MaterializeSpec` checkpoint guard's shape): the
   * bounded top-k heap is called from `Knn.topK`, the one search tail;
-  * sessions are built by `GraftSession` alone; and the operators decode
-  * predicate blobs only in `HybridGroundTruth.perQuery`.
+  * sessions are built by `GraftSession` alone; the operators decode
+  * predicate blobs only in `HybridGroundTruth.perQuery`; and exact and
+  * hybrid KNN score in the `KnnTopK` aggregate, never over a pair stream.
   */
 class SeamGuardSpec extends AnyFunSuite {
   private val DefName = """\bdef\s+(\w+)""".r
@@ -53,5 +54,13 @@ class SeamGuardSpec extends AnyFunSuite {
       }
     assert(stray.isEmpty,
       s"${stray.size} predicate decode(s) outside the seam: ${stray.map(_._3).mkString(", ")}")
+  }
+
+  test("Knn.scala and HybridGroundTruth.scala build no query x base cross join") {
+    val stray = hits("crossJoin(").filter { case (path, _, _) =>
+      path.endsWith("/Knn.scala") || path.endsWith("/HybridGroundTruth.scala")
+    }
+    assert(stray.isEmpty,
+      s"${stray.size} per-pair join(s) beside the KnnTopK kernel: ${stray.map(_._3).mkString(", ")}")
   }
 }

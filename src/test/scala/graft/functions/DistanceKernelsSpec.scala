@@ -57,4 +57,22 @@ class DistanceKernelsSpec extends AnyFunSuite {
     assert(DistanceKernels.metricId("DOT_PRODUCT") == DistanceKernels.DOT_PRODUCT)
     intercept[IllegalArgumentException](DistanceKernels.metricId("hamming"))
   }
+
+  test("scoreBlock gives computeArrays's doubles bit for bit at every live count") {
+    val dim = 37
+    val qs = Array.fill(9)(Array.fill(dim)(rnd.nextFloat() * 20 - 10))
+    qs(3) = new Array[Float](dim)
+    val norms = qs.map(DistanceKernels.norm)
+    for (b <- Seq(Array.fill(dim)(rnd.nextFloat() * 20 - 10), new Array[Float](dim));
+         metric <- 0 to 3; n <- 0 to 9) {
+      val live = rnd.shuffle((0 until 9).toList).take(n).toArray
+      val out = new Array[Double](n + 1)
+      DistanceKernels.scoreBlock(qs, norms, live, n, b, metric, out)
+      (0 until n).foreach { m =>
+        val want = DistanceKernels.computeArrays(qs(live(m)), b, metric)
+        assert(java.lang.Double.doubleToLongBits(out(m)) == java.lang.Double.doubleToLongBits(want),
+          s"metric $metric, $n live, chain $m: ${out(m)} vs $want")
+      }
+    }
+  }
 }

@@ -1,6 +1,8 @@
 package graft.predicates
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
@@ -43,23 +45,30 @@ class PNodeCompilerSpec extends SparkSpec {
     assert(got == want, s"tree: $tree")
   }
 
-  /** Comparands of one lane, drawn whatever the field's type. */
-  private def randComparands(): Seq[Comparand] = rnd.nextInt(4) match {
+  /** Comparands of one lane, drawn whatever the field's type; with
+    * `withNull`, sometimes a lone Null comparand.
+    */
+  private def randComparands(withNull: Boolean = false): Seq[Comparand] =
+    if (withNull && rnd.nextInt(8) == 0) Seq(NullVal) else rnd.nextInt(4) match {
     case 0 => Seq.fill(1 + rnd.nextInt(3))(IntVal(rnd.nextInt(20).toLong))
     case 1 => Seq.fill(1 + rnd.nextInt(3))(FloatVal((rnd.nextInt(400) - 200) / 10.0))
     case 2 => Seq.fill(1 + rnd.nextInt(3))(TextVal(Seq("alpha", "beta", "gamma", "a.*")(rnd.nextInt(4))))
     case 3 => Seq(BoolVal(rnd.nextBoolean()))
   }
 
-  private def randLeaf(): PredicateNode = {
-    val field = Seq("num", "dbl", "str", "flag")(rnd.nextInt(4))
+  private val Fields = Seq("num", "dbl", "str", "flag")
+
+  private def randLeaf(fields: Seq[String], withNull: Boolean): PredicateNode = {
+    val field = fields(rnd.nextInt(fields.size))
     val op = OpType.values(rnd.nextInt(OpType.values.size))
-    PredicateNode.namedTyped(field, op, randComparands(): _*)
+    PredicateNode.namedTyped(field, op, randComparands(withNull): _*)
   }
 
-  private def randTree(depth: Int): PNode =
-    if (depth == 0 || rnd.nextInt(3) == 0) randLeaf()
-    else ConjugateNode(rnd.nextBoolean(), Seq.fill(1 + rnd.nextInt(3))(randTree(depth - 1)))
+  private def randTree(depth: Int, fields: Seq[String] = Fields,
+      withNull: Boolean = false): PNode =
+    if (depth == 0 || rnd.nextInt(3) == 0) randLeaf(fields, withNull)
+    else ConjugateNode(rnd.nextBoolean(),
+      Seq.fill(1 + rnd.nextInt(3))(randTree(depth - 1, fields, withNull)))
 
   test("compiled Column matches reference evaluator on 400 random trees") {
     (0 until 400).foreach(_ => check(randTree(2)))
@@ -100,5 +109,57 @@ class PNodeCompilerSpec extends SparkSpec {
   test("empty conjugates: AND()==true, OR()==false") {
     check(ConjugateNode(isAnd = true, Nil))
     check(ConjugateNode(isAnd = false, Nil))
+  }
+
+  // every field type a lane reads, and one no lane reads
+  private val wide = StructType(Seq(
+    StructField("b", ByteType), StructField("s", ShortType), StructField("i", IntegerType),
+    StructField("num", LongType), StructField("f", FloatType), StructField("dbl", DoubleType),
+    StructField("dec", DecimalType(10, 2)), StructField("str", StringType),
+    StructField("flag", BooleanType), StructField("day", DateType)))
+
+  private lazy val wideRows: Seq[Row] = (0 until 300).map { _ =>
+    def orNull(v: => Any): Any = if (rnd.nextInt(5) == 0) null else v
+    val x = (rnd.nextInt(400) - 200) / 10.0
+    new GenericRowWithSchema(Array[Any](
+      orNull(rnd.nextInt(20).toByte), orNull(rnd.nextInt(20).toShort), orNull(rnd.nextInt(20)),
+      orNull(rnd.nextInt(20).toLong), orNull(x.toFloat), orNull(x),
+      orNull(new java.math.BigDecimal(rnd.nextInt(4000) - 2000).movePointLeft(2)),
+      orNull(Seq("alpha", "beta", "gamma", "Alpha", "a1")(rnd.nextInt(5))),
+      orNull(rnd.nextBoolean()), orNull(java.sql.Date.valueOf("2024-01-01"))), wide)
+  }
+
+  /** The bound tree's answer on each row's InternalRow is matchesRow's. */
+  private def agree(tree: PNode): Unit = {
+    val toRow = CatalystTypeConverters.createToCatalystConverter(wide)
+    val bound = PNodeEvaluator.bind(tree, wide)
+    wideRows.foreach { r =>
+      assert(bound.matches(toRow(r).asInstanceOf[InternalRow]) ==
+        PNodeEvaluator.matchesRow(tree, r), s"tree: $tree row: $r")
+    }
+  }
+
+  test("bound trees agree with matchesRow on 400 random trees over every field type") {
+    (0 until 400).foreach(_ => agree(randTree(2, wide.fieldNames.toSeq, withNull = true)))
+  }
+
+  test("bound leaves agree with matchesRow for every lane, op and field type, nulls included") {
+    for (f <- wide.fieldNames; op <- OpType.values;
+         cs <- Seq(Seq(IntVal(1), IntVal(3)), Seq(FloatVal(1.5), FloatVal(-2.0)),
+           Seq(TextVal("a.*"), TextVal("beta")), Seq(BoolVal(true)), Seq(NullVal), Nil))
+      agree(PredicateNode.namedTyped(f, op, cs: _*))
+  }
+
+  test("a bound IntVal leaf truncates a double field; a type mismatch is false") {
+    val row = new GenericRowWithSchema(Array[Any](null, null, null, null, null, 1.9, null,
+      "alpha", null, null), wide)
+    val internal = CatalystTypeConverters.createToCatalystConverter(wide)(row)
+      .asInstanceOf[InternalRow]
+    assert(PNodeEvaluator.bind(PredicateNode.namedTyped("dbl", OpType.EQ, IntVal(1)), wide)
+      .matches(internal))
+    assert(!PNodeEvaluator.bind(PredicateNode.namedTyped("str", OpType.NE, IntVal(1)), wide)
+      .matches(internal))
+    intercept[IllegalArgumentException](
+      PNodeEvaluator.bind(PredicateNode.namedTyped("nope", OpType.EQ, IntVal(1)), wide))
   }
 }
